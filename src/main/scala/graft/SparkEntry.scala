@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.{Doc, DocOut, Span, SpanKinds}
+import graft.core.SpanKinds
 import graft.corpus.Corpus
-import graft.engine.{EngineConfig, RuleCompiler, RuleProgram, ShadowEngine}
+import graft.engine.{EngineConfig, RuleCompiler, RuleProgram}
 import graft.pipeline.{Ann, Dedup, Multimodal, TextStats, WarcCodec, WebArchive}
 import graft.functions.WebFunctions
 import graft.rules.RuleParser
@@ -76,32 +76,35 @@ object SparkEntry {
     p.copy(compileErrors = errs.toVector ++ p.compileErrors)
   }
 
+  /** The engine operator over (doc_id string, h html) rows: one html span
+    * per doc, or `chunk`-code-point spans when `chunk` > 0 (chunk-invariance
+    * path; code points, because a lone surrogate would not survive the
+    * UTF-8 column). Returns the operator's columns plus `html` (html and
+    * data spans joined) and `errs` (errors joined by "|"). */
+  private def engineOn(input: DataFrame, program: RuleProgram, chunk: Int = 0): DataFrame = {
+    def span(text: Column, offset: Column): Column = struct(lit(SpanKinds.Html).as("kind"),
+      text.as("text"), lit("").as("media_ref"), offset.as("offset"))
+    val h = col("h")
+    val spans =
+      if (chunk <= 0) array(span(h, lit(0)))
+      else transform(sequence(lit(0), greatest(length(h) - 1, lit(0)), lit(chunk)),
+        p => span(h.substr(p + 1, lit(chunk)), p))
+    ShadowSpark.op(input.select(col("doc_id"), spans.as("spans")), program)
+      .withColumn("html", array_join(transform(
+        filter(col("spans"), sp => sp("kind").isin(SpanKinds.Html, SpanKinds.Data)), _("text")), ""))
+      .withColumn("errs", array_join(col("errors"), "|"))
+  }
+
   /** Run the engine over per-doc HTML built from `documents`; returns
-    * (doc_id, html, data_json, errs). `chunk` > 0 splits the html into
-    * fixed-size spans (chunk-invariance path). */
+    * (doc_id, html, data_json, errs). */
   private def runEngine(spark: SparkSession, dir: String, template: Seq[Part],
                         rules: Seq[String], config: EngineConfig = EngineConfig(),
                         chunk: Int = 0): DataFrame = {
-    import spark.implicits._
-    val program = compile(rules, config)
-    val bc = spark.sparkContext.broadcast(program)
     val input = documents(spark, dir)
       .select(col("doc_id").cast("string").as("doc_id"), tplCol(template).as("h"))
-      .as[(String, String)]
-    val out = input.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      it.map { case (id, h) =>
-        val spans =
-          if (chunk <= 0) Seq(Span(SpanKinds.Html, h, "", 0))
-          else h.grouped(chunk).zipWithIndex.map { case (c, i) => Span(SpanKinds.Html, c, "", i) }.toSeq
-        val r = engine.process(Doc(id, spans))
-        (r.doc_id,
-         r.spans.filter(s => s.kind == SpanKinds.Html || s.kind == SpanKinds.Data).map(_.text).mkString,
-         r.data_json,
-         r.errors.mkString("|"))
-      }
-    }.toDF("doc_id", "html", "data_json", "errs")
-    out.orderBy("doc_id")
+    engineOn(input, compile(rules, config), chunk)
+      .select("doc_id", "html", "data_json", "errs")
+      .orderBy("doc_id")
   }
 
   private def oracleFor(expectedHtml: Seq[Part], expectedJson: Seq[Part],
@@ -201,17 +204,10 @@ object SparkEntry {
         .select(col("doc_id"), col("html").as("json_out"))),
     "s9_spans_to_rows" -> ((s, dir) => {
       // engine output spans -> rows via the built-in explode Generator
-      import s.implicits._
-      val program = compile(Seq(rulesHead, rulesMain))
-      val bc = s.sparkContext.broadcast(program)
       val input = documents(s, dir)
         .select(col("doc_id").cast("string").as("doc_id"), tplCol(tplMain).as("h"))
-        .as[(String, String)]
-      val outs = input.mapPartitions { it =>
-        val engine = new ShadowEngine(bc.value)
-        it.map { case (id, h) => engine.process(Doc(id, Seq(Span(SpanKinds.Html, h, "", 0)))) }
-      }
-      outs.select(col("doc_id"), explode(col("spans")).as("sp"))
+      engineOn(input, compile(Seq(rulesHead, rulesMain)))
+        .select(col("doc_id"), explode(col("spans")).as("sp"))
         .groupBy("doc_id")
         .agg(count(when(col("sp.kind") === "html", 1)).as("n_html"),
           count(when(col("sp.kind") === "data", 1)).as("n_data"),
@@ -376,24 +372,15 @@ object SparkEntry {
           """{ "s": "h1 + p", "hide": true }"""))
         .select(col("doc_id"), col("data_json"), col("errs"))),
     "p7_transform_strings" -> ((s, dir) => {
-      import s.implicits._
       val errs = new ArrayBuffer[String]
       val rule = RuleParser.parseStr(
         """{ "s": "#t", "edit": { "content": { "op": "upsert", "val": "VAL_TOKEN" } }, "append": ["<i>TOKEN</i>"] }""",
         errs).transformStrings(_.replace("TOKEN", "SWAPPED"))
-      val program = RuleCompiler.compile(Seq(rule))
-      val bc = s.sparkContext.broadcast(program)
       val input = documents(s, dir)
         .select(col("doc_id").cast("string").as("doc_id"),
           tplCol(Seq(L("<div id=\"t\">"), fText, L("</div>"))).as("h"))
-        .as[(String, String)]
-      input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, h) =>
-          val r = e.process(Doc(id, Seq(Span(SpanKinds.Html, h, "", 0))))
-          (id, r.spans.map(_.text).mkString)
-        }
-      }.toDF("doc_id", "html").orderBy("doc_id")
+      engineOn(input, RuleCompiler.compile(Seq(rule)))
+        .select("doc_id", "html").orderBy("doc_id")
     }),
 
     // ---- SQL surface: shadow_extract for spark.sql users (SURVEY §4.3) ----
@@ -648,28 +635,21 @@ object SparkEntry {
     }),
 
     // pipe3: the full user story in ONE plan — rule-engine extraction
-    // (article text pulled out of the page into data_json), then the
-    // curation ops run over the EXTRACTED text: get_json_object projection
-    // -> exact-dedup survivors -> token-count quality gate -> per-language
-    // mix. Pins that engine output composes with the relational layer and
-    // that extraction is byte-faithful through the JSON round-trip.
+    // (article text and page language pulled out of the page into
+    // data_json), then the curation ops run over the EXTRACTED text:
+    // get_json_object projection -> exact-dedup survivors -> token-count
+    // quality gate -> per-language mix. Pins that engine output composes
+    // with the relational layer and that extraction is byte-faithful
+    // through the JSON round-trip.
     "pipe3_extract_quality_dedup" -> ((s, dir) => {
-      import s.implicits._
       val program = compile(Seq(
+        """{ "s": "div.nav", "data": { "path": "m", "values": { "l": {"source": "Attribute", "name": "data-lang"} } } }""",
         """{ "s": "p.art", "data": { "path": "d", "values": { "t": {"source": "Contents"} } } }"""))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir).select(col("doc_id"), col("lang"),
-        tplCol(Seq(L("<div class=\"nav\"><a href=\"/\">home</a></div><p class=\"art\">"),
+      val input = documents(s, dir).select(col("doc_id").cast("string").as("doc_id"),
+        tplCol(Seq(L("<div class=\"nav\" data-lang=\""), fLang, L("\"><a href=\"/\">home</a></div><p class=\"art\">"),
           fText, L("</p>"))).as("h"))
-        .as[(Long, String, String)]
-      val extracted = input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, lang, h) =>
-          val r = e.process(Doc(id.toString, Seq(Span(SpanKinds.Html, h, "", 0))))
-          (id, lang, r.data_json)
-        }
-      }.toDF("doc_id", "lang", "data_json")
-      val withText = extracted.select(col("doc_id"), col("lang"),
+      val withText = engineOn(input, program).select(col("doc_id").cast("long").as("doc_id"),
+        get_json_object(col("data_json"), "$.m.l").as("lang"),
         get_json_object(col("data_json"), "$.d.t").as("text"))
       Dedup.exactSurvivors(withText)
         .where(size(split(col("text"), " ")) >= 20)
@@ -686,32 +666,24 @@ object SparkEntry {
     // engine fidelity, JSON round-trip, posexplode, native resolution
     // expressions — every link individually oracled.
     "pipe4_extract_outlinks" -> ((s, dir) => {
-      import s.implicits._
       val program = compile(Seq(
         """{ "s": "a", "data": { "path": "links.", "values": { "h": {"source": "Attribute", "name": "href"} } } }"""))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir).select(col("doc_id")).as[Long].map { id =>
-        val a = (id % 7).toInt
-        val base = s"HTTPS://WWW.Site$a.Example.COM/dir$a/sub/page.html"
-        val html = s"""<html><body><a href="/root$a.css">x</a><p>n</p>""" +
-          s"""<a href="img$a.png">y</a><a href="https://Other.ORG/abs$a">z</a></body></html>"""
-        (id, base, html)
-      }
-      val extracted = input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, base, h) =>
-          (id, base,
-            e.process(Doc(id.toString, Seq(Span(SpanKinds.Html, h, "", 0)))).data_json)
-        }
-      }.toDF("doc_id", "base", "data_json")
-      extracted
-        .select(col("doc_id"), col("base"),
+      // the page's base URL and html are functions of doc_id
+      def a(id: Column): Column = (id % 7).cast("int")
+      def base(id: Column): Column =
+        concat(lit("HTTPS://WWW.Site"), a(id), lit(".Example.COM/dir"), a(id), lit("/sub/page.html"))
+      val input = documents(s, dir).select(col("doc_id").cast("string").as("doc_id"),
+        concat(lit("<html><body><a href=\"/root"), a(col("doc_id")), lit(".css\">x</a><p>n</p><a href=\"img"),
+          a(col("doc_id")), lit(".png\">y</a><a href=\"https://Other.ORG/abs"), a(col("doc_id")),
+          lit("\">z</a></body></html>")).as("h"))
+      engineOn(input, program)
+        .select(col("doc_id").cast("long").as("doc_id"),
           from_json(col("data_json"), "links ARRAY<STRUCT<h: STRING>>",
             Map.empty[String, String]).as("d"))
-        .select(col("doc_id"), col("base"), posexplode(col("d.links.h")))
+        .select(col("doc_id"), posexplode(col("d.links.h")))
         .select(col("doc_id"), col("pos").cast("int").as("link_idx"),
           col("col").as("href"),
-          WebFunctions.resolve_url(col("base"), col("col")).as("resolved"))
+          WebFunctions.resolve_url(base(col("doc_id")), col("col")).as("resolved"))
         .withColumn("domain", WebFunctions.registered_domain(col("resolved")))
         .orderBy("doc_id", "link_idx")
     }),

@@ -112,8 +112,8 @@ object RuleCompiler {
 
 /** Reusable per-task output-span accumulator (parallel arrays, offset ==
   * index): the engine's output side allocates NO Span/DocOut/Seq objects
-  * when consumed through `processStreamAcc` — the raw row-emission path
-  * (ShadowSpark.processColumnarRaw) writes UnsafeRows straight from it.
+  * when consumed through `processStreamAcc` — the engine operator's row
+  * emitter (graft.spark.EngineOpExec) writes UnsafeRows straight from it.
   * Contents are valid until the next process call on the same engine. */
 final class SpanAcc {
   var n = 0
@@ -195,24 +195,17 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
         markers += HtmlParser.MediaMarker(sb.length, sp.media_ref, sp.text)
       else sb.append(sp.text)
     }
-    processStream(doc.doc_id, sb.toString, markers)
+    val acc = processStreamAcc(sb.toString, markers)
+    DocOut(doc.doc_id, acc.toSpans, acc.dataJson, acc.errors.toSeq)
   }
 
   @transient private lazy val scratchAcc = new SpanAcc
 
-  /** Stream-level entry: the document's concatenated non-media text plus
-    * media markers at char positions (lets callers that already hold the
-    * raw columns skip Span/Doc materialization entirely). */
-  def processStream(docId: String, stream: String,
-                    markers: scala.collection.Seq[HtmlParser.MediaMarker]): DocOut = {
-    val acc = processStreamAcc(stream, markers)
-    DocOut(docId, acc.toSpans, acc.dataJson, acc.errors.toSeq)
-  }
-
-  /** Zero-object output path: fills the per-task SpanAcc (parallel string
-    * arrays) instead of allocating Span/DocOut/Seq per row — the raw
-    * row-emission path consumes it directly. The returned accumulator is
-    * reused by the next call on this engine. */
+  /** Stream-level, zero-object entry: the document's concatenated non-media
+    * text plus media markers at char positions in, the per-task SpanAcc
+    * (parallel string arrays) out instead of Span/DocOut/Seq per row — the
+    * engine operator's row emitter consumes it directly. The returned
+    * accumulator is reused by the next call on this engine. */
   def processStreamAcc(stream: String,
                        markers: scala.collection.Seq[HtmlParser.MediaMarker]): SpanAcc = {
     val acc = scratchAcc

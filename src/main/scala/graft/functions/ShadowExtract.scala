@@ -1,8 +1,9 @@
 package graft.functions
 
-import graft.core.{Doc, Span, SpanKinds}
+import graft.core.SpanKinds
 import graft.engine.{RuleCompiler, ShadowEngine}
 import graft.rules.RuleParser
+import graft.spark.ShadowSpark
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -18,13 +19,16 @@ import scala.collection.mutable.ArrayBuffer
   * `array<struct<kind,text,media_ref,offset>>` column, returning
   * `struct<html, data_json, errors>`. The rules argument must be foldable
   * (a literal): the program is compiled once per task, exactly like the
-  * broadcast program on the `mapPartitions` path — reference analog:
+  * broadcast program of the engine operator — reference analog:
   * ShadowApiInit::init compiles once, then streams documents
   * (shadow_api.rs:70-98).
   *
-  * Not codegen'd (CodegenFallback): the engine call dominates by orders of
-  * magnitude, so the per-row boxing of a generated wrapper is noise; the
-  * high-throughput path remains ShadowSpark.processColumnar.
+  * The spans are decoded by the engine operator's decoder
+  * (`ShadowSpark.SpanStreamDecoder`, same offset order and null policy), so
+  * the function and `ShadowSpark.op` agree on every input. Not codegen'd
+  * (CodegenFallback): the engine call dominates by orders of magnitude, so
+  * the per-row boxing of a generated wrapper is noise; whole-table jobs
+  * use the engine operator (`ShadowSpark.op`).
   */
 case class ShadowExtractExpr(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -51,24 +55,21 @@ case class ShadowExtractExpr(left: Expression, right: Expression)
     new ShadowEngine(p.copy(compileErrors = errs.toVector ++ p.compileErrors))
   }
 
+  @transient private lazy val decoder = new ShadowSpark.SpanStreamDecoder
+
   override def nullSafeEval(spansVal: Any, rulesVal: Any): Any = {
-    val arr = spansVal.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val spans = new ArrayBuffer[Span](n)
+    val stream = decoder.decode(spansVal.asInstanceOf[ArrayData])
+    val acc = engine.processStreamAcc(stream, decoder.markers)
+    val html = new java.lang.StringBuilder
     var i = 0
-    while (i < n) {
-      val st = arr.getStruct(i, 4)
-      spans += Span(st.getUTF8String(0).toString, st.getUTF8String(1).toString,
-        st.getUTF8String(2).toString, st.getInt(3))
+    while (i < acc.n) {
+      if (acc.kinds(i) == SpanKinds.Html || acc.kinds(i) == SpanKinds.Data) html.append(acc.texts(i))
       i += 1
     }
-    val out = engine.process(Doc("", spans.toSeq))
-    val html = new java.lang.StringBuilder
-    out.spans.foreach(s => if (s.kind == SpanKinds.Html || s.kind == SpanKinds.Data) html.append(s.text))
     InternalRow(
       UTF8String.fromString(html.toString),
-      UTF8String.fromString(out.data_json),
-      new GenericArrayData(out.errors.map(UTF8String.fromString).toArray[Any]))
+      UTF8String.fromString(acc.dataJson),
+      new GenericArrayData(acc.errors.map(UTF8String.fromString).toArray[Any]))
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ShadowExtractExpr =

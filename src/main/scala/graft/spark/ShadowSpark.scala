@@ -1,10 +1,11 @@
 package graft.spark
 
 import graft.core.{Doc, DocOut}
-import graft.engine.{RuleProgram, ShadowEngine}
+import graft.engine.RuleProgram
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DataFrameBridge
 import org.apache.spark.util.CollectionAccumulator
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -24,9 +25,11 @@ final case class LineageRow(
 /** Spark wiring for the extraction engine (SURVEY.md §3.5).
   *
   * Design for 100 TB / 1000 executors:
-  *  - the compiled RuleProgram is broadcast once; each task builds ONE
-  *    engine instance and streams rows through `mapPartitions` (no
-  *    per-row setup, no driver round-trips, no collect());
+  *  - every entry point below is a thin call to ONE Catalyst operator,
+  *    `EngineOp`, over the (doc_id, spans) columns: the compiled
+  *    RuleProgram is broadcast once per job, each task builds ONE engine
+  *    and ONE decoder, and rows are written straight into UnsafeRows (no
+  *    per-row setup, no driver round-trips, no collect(), no Encoder pass);
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
   *    an OPTIONAL salted repartition spreads pathological mega-docs;
@@ -39,22 +42,29 @@ final case class LineageRow(
   */
 object ShadowSpark {
 
-  /** Pure engine application; preserves the input partitioning. */
-  def process(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    docs.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      it.map(engine.process)
-    }
+  /** The engine operator over a DataFrame with the canonical
+    * (doc_id string, spans array<struct<kind,text,media_ref,offset>>)
+    * columns; returns (doc_id, spans, data_json, errors) with the DocOut
+    * schema. Works on batch and streaming DataFrames alike. */
+  def op(df: DataFrame, program: RuleProgram): DataFrame = {
+    val spark = df.sparkSession
+    EngineOp.register(spark)
+    val input = df.select(col("doc_id"), col("spans")).queryExecution.analyzed
+    DataFrameBridge.ofPlan(spark, EngineOp(program, input))
   }
+
+  /** Pure engine application; preserves the input partitioning. */
+  def process(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] =
+    op(docs.toDF(), program).as(Encoders.product[DocOut])
 
   /** Per-task decoder for the canonical
     * (doc_id string, spans array<struct<kind,text,media_ref,offset>>) rows:
     * assembles the document stream as raw UTF-8 bytes (decoded to String
     * ONCE) and collects media markers, via a raw UnsafeArrayData read path
-    * with a generic-accessor fallback.
+    * with a generic-accessor fallback. Spans are concatenated in `offset`
+    * order (Model.scala's contract): the fast path checks that offsets
+    * never decrease, and a row whose spans are out of order is decoded by
+    * the generic path after a stable sort by offset.
     *
     * Raw-layout fast path rationale: the generic accessors allocate a
     * wrapper per struct element and per string field (~4 per span, ~120
@@ -72,7 +82,7 @@ object ShadowSpark {
     * fast-decoded row is cross-checked byte-for-byte against the generic
     * decode, pinning the generic path if Spark's internal layout ever
     * drifts. */
-  private[spark] final class SpanStreamDecoder {
+  private[graft] final class SpanStreamDecoder {
     private var buf = new Array[Byte](16384) // per-task reusable byte scratch
     private var chkBuf = new Array[Byte](0) // self-check scratch (first fast row only)
     val markers = new scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker](8)
@@ -86,15 +96,23 @@ object ShadowSpark {
     // (one bad row must not kill the job, same stance as the engine's
     // Throwable row guard): a null span element or null kind contributes
     // nothing; a media span with null ref/text gets empty strings; a text
-    // span with null text contributes no stream bytes.
+    // span with null text contributes no stream bytes; a null offset
+    // counts as 0.
     private def decodeGeneric(arr: org.apache.spark.sql.catalyst.util.ArrayData, n: Int,
                               buf0: Array[Byte],
                               mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
         : (Array[Byte], Int) = {
+      def offsetAt(i: Int): Int =
+        if (arr.isNullAt(i)) 0 else { val st = arr.getStruct(i, 4); if (st.isNullAt(3)) 0 else st.getInt(3) }
+      var inOrder = true
+      var k = 1
+      while (k < n && inOrder) { inOrder = offsetAt(k - 1) <= offsetAt(k); k += 1 }
+      val order = if (inOrder) null else Array.range(0, n).sortBy(offsetAt) // stable
       var b = buf0
       var bytePos = 0
-      var i = 0
-      while (i < n) {
+      var j = 0
+      while (j < n) {
+        val i = if (order == null) j else order(j)
         if (!arr.isNullAt(i)) {
           val st = arr.getStruct(i, 4)
           val kind = if (st.isNullAt(0)) null else st.getUTF8String(0)
@@ -112,13 +130,14 @@ object ShadowSpark {
             bytePos += nb
           }
         }
-        i += 1
+        j += 1
       }
       (b, bytePos)
     }
 
-    // returns -1 length when any null bit is set (the generic path then
-    // decides what a null span/field means instead of reading garbage)
+    // returns -1 length when any null bit is set or an offset decreases
+    // (the generic path then decides what a null span/field means instead
+    // of reading garbage, and sorts the spans by offset)
     private def decodeFast(ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData, n: Int,
                            base: Array[Byte], buf0: Array[Byte],
                            mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
@@ -135,6 +154,7 @@ object ShadowSpark {
       }
       val elems = a0 + 8 + (nullWords.toLong * 8)
       val B = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
+      var prevOffset = Int.MinValue
       var i = 0
       while (i < n) {
         val os = org.apache.spark.unsafe.Platform.getLong(base, elems + i * 8L)
@@ -143,6 +163,9 @@ object ShadowSpark {
           return (b, -1) // null struct field present
         def fieldOff(f: Int): Long =
           org.apache.spark.unsafe.Platform.getLong(base, st + 8 + f * 8L)
+        val offset = org.apache.spark.unsafe.Platform.getInt(base, st + 8 + 3 * 8L)
+        if (offset < prevOffset) return (b, -1) // out of offset order
+        prevOffset = offset
         val kOs = fieldOff(0)
         val kLen = kOs.toInt
         val kIdx = (st + (kOs >>> 32) - B).toInt
@@ -169,10 +192,14 @@ object ShadowSpark {
 
     /** Decodes the spans column of `row` (ordinal 1); the document stream
       * is returned, media markers (char positions) are in `markers`. */
-    def decode(row: org.apache.spark.sql.catalyst.InternalRow): String = {
-      val arr = row.getArray(1)
-      val n = arr.numElements()
+    def decode(row: org.apache.spark.sql.catalyst.InternalRow): String =
+      decode(if (row.isNullAt(1)) null else row.getArray(1))
+
+    /** Decodes one spans array; a null array is an empty document. */
+    def decode(arr: org.apache.spark.sql.catalyst.util.ArrayData): String = {
       markers.clear()
+      if (arr == null) return ""
+      val n = arr.numElements()
       var bytePos = -1
       arr match {
         case ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -219,101 +246,12 @@ object ShadowSpark {
     }
   }
 
-  /** Fast-path engine application over a DataFrame with the canonical
-    * (doc_id string, spans array<struct<kind,text,media_ref,offset>>)
-    * schema: rows are consumed as InternalRows via SpanStreamDecoder
-    * (UTF8String decode only, no generic Encoder deserializer, no
-    * intermediate Seq materialization) — measurably better task-level
-    * scaling since decode allocation is the non-scaling part of the
-    * pipeline on many-core executors. */
-  def processColumnar(df: org.apache.spark.sql.DataFrame, program: RuleProgram): Dataset[DocOut] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    val rdd = df.select(col("doc_id"), col("spans")).queryExecution.toRdd.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      val dec = new SpanStreamDecoder
-      it.map { row =>
-        val docId = row.getUTF8String(0).toString
-        val stream = dec.decode(row)
-        engine.processStream(docId, stream, dec.markers)
-      }
-    }
-    spark.createDataset(rdd)
-  }
+  /** `process` over an untyped (doc_id, spans) DataFrame. */
+  def processColumnar(df: DataFrame, program: RuleProgram): Dataset[DocOut] =
+    op(df, program).as(Encoders.product[DocOut])
 
-  /** DocOut schema as the product encoder derives it (so `.as[DocOut]`
-    * lines up with the hand-written rows below). */
-  private lazy val docOutSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[DocOut].schema
-
-  /** Zero-object end-to-end path: input rows are decoded in place
-    * (SpanStreamDecoder), the engine fills its reusable SpanAcc, and the
-    * output row is written straight into a reused UnsafeRowWriter — no
-    * Span/DocOut objects, no Encoder SerializeFromObject pass. This is the
-    * write-shaped job path (engine output feeding a parquet/Iceberg sink
-    * or further SQL), where the Encoder's per-span mapobjects loop is real
-    * per-row work; count-shaped jobs prune the serializer anyway. */
-  def processColumnarRaw(df: org.apache.spark.sql.DataFrame, program: RuleProgram)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(program)
-    val schema = docOutSchema
-    val rdd = df.select(col("doc_id"), col("spans")).queryExecution.toRdd
-      .mapPartitions { it =>
-        val engine = new ShadowEngine(bc.value)
-        val dec = new SpanStreamDecoder
-        import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
-        import org.apache.spark.unsafe.types.UTF8String
-        val rowWriter = new UnsafeRowWriter(4)
-        val spansWriter = new UnsafeArrayWriter(rowWriter, 8)
-        val spanStructWriter = new UnsafeRowWriter(spansWriter, 4)
-        val errsWriter = new UnsafeArrayWriter(rowWriter, 8)
-        // kind strings are a tiny closed set ("html"/"media"/"data"/...);
-        // media_refs are unique per doc, so those are NOT memoized
-        val kindU = new java.util.HashMap[String, UTF8String](8)
-        def u8(s: String): UTF8String = UTF8String.fromString(s)
-        def kindOf(s: String): UTF8String = {
-          var v = kindU.get(s)
-          if (v == null) { v = u8(s); kindU.put(s, v) }
-          v
-        }
-        it.map { row =>
-          val docIdU = row.getUTF8String(0)
-          val stream = dec.decode(row)
-          val acc = engine.processStreamAcc(stream, dec.markers)
-          rowWriter.reset()
-          rowWriter.zeroOutNullBytes()
-          rowWriter.write(0, docIdU)
-          // spans: array<struct<kind,text,media_ref,offset>>
-          val spansCursor = rowWriter.cursor()
-          spansWriter.initialize(acc.n)
-          var i = 0
-          while (i < acc.n) {
-            val structCursor = spansWriter.cursor()
-            spanStructWriter.resetRowWriter()
-            spanStructWriter.write(0, kindOf(acc.kinds(i)))
-            spanStructWriter.write(1, u8(acc.texts(i)))
-            spanStructWriter.write(2, u8(acc.refs(i)))
-            spanStructWriter.write(3, i)
-            spansWriter.setOffsetAndSizeFromPreviousCursor(i, structCursor)
-            i += 1
-          }
-          rowWriter.setOffsetAndSizeFromPreviousCursor(1, spansCursor)
-          rowWriter.write(2, u8(acc.dataJson))
-          val errsCursor = rowWriter.cursor()
-          errsWriter.initialize(acc.errors.length)
-          var e = 0
-          while (e < acc.errors.length) {
-            errsWriter.write(e, u8(acc.errors(e)))
-            e += 1
-          }
-          rowWriter.setOffsetAndSizeFromPreviousCursor(3, errsCursor)
-          rowWriter.getRow: org.apache.spark.sql.catalyst.InternalRow
-        }
-      }
-    org.apache.spark.sql.graftbridge.DataFrameBridge.fromInternalRows(spark, rdd, schema)
-  }
+  /** `op` under its earlier name. */
+  def processColumnarRaw(df: DataFrame, program: RuleProgram): DataFrame = op(df, program)
 
   /** Engine application + per-partition lineage (accumulated driver-side;
     * one small row per task). Call `lineage.value` after an action. */
@@ -321,10 +259,9 @@ object ShadowSpark {
       : (Dataset[DocOut], CollectionAccumulator[LineageRow]) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
     val acc = spark.sparkContext.collectionAccumulator[LineageRow]("graft_lineage")
-    val out = docs.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
+    // a pass-through tally over the operator's output rows
+    val out = process(docs, program).mapPartitions { it =>
       val t0 = System.nanoTime()
       var lo: String = null
       var hi: String = null
@@ -338,10 +275,9 @@ object ShadowSpark {
         acc.add(LineageRow(tc.partitionId(), Option(lo).getOrElse(""), Option(hi).getOrElse(""),
           n, checksum, (System.nanoTime() - t0) / 1000000L))
       }
-      it.map { doc =>
-        val r = engine.process(doc)
-        if (lo == null || doc.doc_id < lo) lo = doc.doc_id
-        if (hi == null || doc.doc_id > hi) hi = doc.doc_id
+      it.map { r =>
+        if (lo == null || r.doc_id < lo) lo = r.doc_id
+        if (hi == null || r.doc_id > hi) hi = r.doc_id
         n += 1
         checksum ^= java.lang.Long.rotateLeft(
           r.data_json.hashCode.toLong * 0x9e3779b97f4a7c15L + r.spans.length, (n % 63).toInt)
@@ -389,7 +325,6 @@ object ShadowSpark {
       path: String,
       nBuckets: Int = 64): Seq[Int] = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val done = committedBuckets(path)
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return Seq.empty
@@ -398,20 +333,7 @@ object ShadowSpark {
       if (done.isEmpty) docs
       else docs.where(!bucketOf(nBuckets).isin(done.toSeq.map(Integer.valueOf): _*))
 
-    // columnar emission, under a TIE-BAND routing rule: columnar is the
-    // documented incumbent, and the route flips ONLY when the bench A/B
-    // (BENCH/BASELINE.md, >= 3 interleaved rounds per path, noop sink)
-    // shows a challenger leading the incumbent by MORE than 5% in a
-    // committed run. Rounds 3 and 4 measured columnar and raw within
-    // ~2-4% of each other with the sign flipping between runs — that is
-    // host noise, i.e. a tie, and a tie keeps the incumbent (chasing a
-    // sub-noise winner flip-flopped the route two rounds running).
-    // processColumnarRaw stays available for the zero-object-emission
-    // invariant if row width ever grows enough to beat the band. Output
-    // byte-equal across all three paths (SparkSpec pins raw == typed;
-    // columnar shares the typed emitter).
-    val out = processColumnar(remaining.toDF(), program).toDF()
-      .withColumn("bucket", bucketOf(nBuckets))
+    val out = op(remaining.toDF(), program).withColumn("bucket", bucketOf(nBuckets))
 
     val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.core.{Doc, DocOut}
-import graft.engine.{RuleProgram, ShadowEngine}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.engine.RuleProgram
+import graft.spark.ShadowSpark
+import org.apache.spark.sql.Dataset
 
 /** Structured Streaming surface for the extraction engine.
   *
@@ -20,16 +21,10 @@ object StreamingExtract {
   val docSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[Doc].schema
 
-  /** Works on both batch and streaming Datasets (pure mapPartitions). */
-  def transform(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    docs.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      it.map(engine.process)
-    }
-  }
+  /** Works on both batch and streaming Datasets: the same engine operator
+    * as batch (`ShadowSpark.process`), planned into each micro-batch. */
+  def transform(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] =
+    ShadowSpark.process(docs, program)
 
   /** Streaming entry: read a directory of (doc_id, spans) parquet as a
     * stream and extract. Caller attaches the sink:

@@ -1,17 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.SparkSession
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
-/** `SparkSession.internalCreateDataFrame` is private[sql]; this shim lets
-  * graft hand already-built InternalRows (UnsafeRow emission from the
-  * engine's span accumulator) straight to the planner with no object
-  * round-trip. */
+/** `Dataset.ofRows` is private[sql]; this shim lets graft build a DataFrame
+  * from a logical plan that holds its own Catalyst node (the engine
+  * operator), so the planner sees the whole plan. */
 object DataFrameBridge {
-  def fromInternalRows(spark: org.apache.spark.sql.SparkSession,
-                       rdd: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[SparkSession].internalCreateDataFrame(rdd, schema)
+  def ofPlan(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 }

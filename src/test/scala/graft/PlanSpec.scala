@@ -164,4 +164,44 @@ class PlanSpec extends AnyFunSuite {
     // per-iteration mass aggregation must combine map-side
     assert("HashAggregate".r.findAllIn(p).size >= 2, p.take(1500))
   }
+
+  test("engine: one EngineOp per route, over a scan of doc_id and spans only") {
+    import graft.corpus.Corpus
+    import graft.spark.{EngineOp, EngineOpExec, ShadowSpark}
+    import graft.streaming.StreamingExtract
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan").toString
+    // a wider table than the operator reads, so the pruning shows
+    Corpus.generate(spark, 20, 2).withColumn("url", org.apache.spark.sql.functions.lit("u"))
+      .write.mode("overwrite").parquet(dir)
+    val program = graft.engine.RuleCompiler.compile(Seq(
+      graft.rules.RuleParser.parseStr(Corpus.corpusRules, new scala.collection.mutable.ArrayBuffer[String])))
+    val other = Set("SerializeFromObject", "MapPartitions", "LogicalRDD", "ExternalRDD")
+    def one(route: String, plan: LogicalPlan): EngineOp = {
+      assert(plan.collect { case o: EngineOp => o }.size == 1, s"$route:\n$plan")
+      assert(!plan.exists(n => other(n.nodeName)), s"$route:\n$plan")
+      val op = plan.collectFirst { case o: EngineOp => o }.get
+      assert(op.missingInput.isEmpty, s"$route:\n$plan")
+      op
+    }
+    import spark.implicits._
+    val df = spark.read.parquet(dir)
+    for ((route, ds) <- Seq(
+        "process" -> ShadowSpark.process(df.as[graft.core.Doc], program),
+        "processColumnar" -> ShadowSpark.processColumnar(df, program))) {
+      one(route, ds.queryExecution.optimizedPlan)
+      val exec = ds.queryExecution.sparkPlan.collect { case e: EngineOpExec => e }
+      assert(exec.size == 1 && exec.head.missingInput.isEmpty, ds.queryExecution.sparkPlan)
+      exec.head.child match {
+        case scan: FileSourceScanExec =>
+          assert(scan.requiredSchema.fieldNames.toSeq == Seq("doc_id", "spans"), scan)
+        case c => fail(s"$route: the operator reads ${c.nodeName}, not the scan")
+      }
+    }
+    val streamed = one("stream", StreamingExtract.stream(spark, dir, program).queryExecution.analyzed)
+    val source = streamed.child.collect { case r: StreamingRelation => r }
+    assert(source.size == 1 && source.head.output.map(_.name) == Seq("doc_id", "spans"), streamed)
+  }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.{Doc, DocOut}
+import graft.core.{Doc, DocOut, Span}
 import graft.corpus.Corpus
-import graft.engine.RuleCompiler
+import graft.engine.{RuleCompiler, ShadowEngine}
 import graft.pipeline.{Dedup, Multimodal, TextStats}
 import graft.rules.RuleParser
 import graft.spark.ShadowSpark
@@ -40,16 +40,21 @@ class SparkSpec extends AnyFunSuite {
     p
   }
 
+  /** The per-row engine run on the driver: the reference every Spark route
+    * of the engine must reproduce. */
+  def reference(docs: Seq[Doc], p: graft.engine.RuleProgram = program): Seq[DocOut] = {
+    val engine = new ShadowEngine(p)
+    docs.map(engine.process).sortBy(_.doc_id)
+  }
+
   test("processColumnar matches typed process exactly") {
     val docs = Corpus.generate(spark, 300, 4, megaEvery = 97)
-    val typed = ShadowSpark.process(docs, program).collect().sortBy(_.doc_id)
-    val fast = ShadowSpark.processColumnar(docs.toDF(), program).collect().sortBy(_.doc_id)
-    assert(typed.length == 300 && fast.length == 300)
-    assert(typed.toSeq == fast.toSeq)
+    val fast = ShadowSpark.processColumnar(docs.toDF(), program).collect().sortBy(_.doc_id).toSeq
+    assert(fast.length == 300)
+    assert(fast == reference(docs.collect().toSeq))
   }
 
   test("processColumnar: non-ASCII docs with media markers (byte->char remap)") {
-    import graft.core.{Doc, Span}
     // Japanese text (multi-byte UTF-8) split mid-document with media spans
     // between and after non-ASCII content
     val docs = Seq(
@@ -61,10 +66,9 @@ class SparkSpec extends AnyFunSuite {
       Doc("u2", Seq(
         Span("media", "", "media://u2/lead", 0),
         Span("html", "<b>\u65e5\u672c\u8a9e</b>", "", 1))))
-    val ds = spark.createDataset(docs)
-    val typed = ShadowSpark.process(ds, program).collect().sortBy(_.doc_id).toSeq
-    val fast = ShadowSpark.processColumnar(ds.toDF(), program).collect().sortBy(_.doc_id).toSeq
-    assert(typed == fast)
+    val fast = ShadowSpark.processColumnar(spark.createDataset(docs).toDF(), program)
+      .collect().sortBy(_.doc_id).toSeq
+    assert(fast == reference(docs))
     // media refs preserved in order
     assert(fast.head.spans.filter(_.kind == "media").map(_.media_ref) ==
       Seq("media://u1/a", "media://u1/b"))
@@ -75,16 +79,46 @@ class SparkSpec extends AnyFunSuite {
     // media spans + mega-doc skew + compile errors all represented
     Corpus.generate(spark, 250, 4, megaEvery = 83).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    val typed = ShadowSpark.process(
-      df.as[Doc], program).collect().sortBy(_.doc_id).toSeq
+    val expected = reference(df.as[Doc].collect().toSeq)
     val raw = ShadowSpark.processColumnarRaw(df, program)
       .as[DocOut].collect().sortBy(_.doc_id).toSeq
-    assert(raw == typed)
+    assert(raw == expected)
     // and the raw rows survive a real columnar write+read round-trip
     val outDir = tmpDir("graft_raw_out").toString
     ShadowSpark.processColumnarRaw(df, program).write.mode("overwrite").parquet(outDir)
     val reread = spark.read.parquet(outDir).as[DocOut].collect().sortBy(_.doc_id).toSeq
-    assert(reread == typed)
+    assert(reread == expected)
+  }
+
+  test("spans out of offset order decode in offset order, as the per-row engine does") {
+    val p = RuleCompiler.compile(Seq(RuleParser.parseStr(
+      """{"s":"p","data":{"path":"d","values":{"c":{"source":"Contents"}}}}""", new ArrayBuffer[String])))
+    // 2-, 3- and 4-byte UTF-8 text around a media span, stored shuffled;
+    // the in-order doc first, so the task's layout self-check runs too
+    val inOrder = Doc("a", Seq(Span("html", "<p>\u00e9</p>", "", 0)))
+    val shuffled = Doc("b", Seq(
+      Span("html", "\ud83d\ude00 \u00e9t\u00e9</p>", "", 3),
+      Span("media", "payload", "media://b/m", 1),
+      Span("html", "<p id=\"x\">\u4e16\u754c ", "", 0),
+      Span("html", "\u00fc ", "", 2)))
+    val docs = Seq(inOrder, shuffled)
+    val out = ShadowSpark.processColumnar(spark.createDataset(docs).coalesce(1).toDF(), p)
+      .collect().sortBy(_.doc_id).toSeq
+    assert(out == reference(docs, p))
+    assert(out(1).data_json == "{\"d\":{\"c\":\"\u4e16\u754c \u00fc \ud83d\ude00 \u00e9t\u00e9\"}}",
+      out(1).data_json)
+  }
+
+  test("s2 chunking splits on code points: astral text survives 7-char spans") {
+    val dir = tmpDir("graft_s2").toString
+    Seq((0L, "a\ud83d\ude00b\u00e9\u4e16 \ud83d\ude00\ud83d\ude00 x", "en", "src0", 0L),
+        (1L, "\ud83d\ude00" * 9, "de", "src1", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    def run(q: String) = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+    val whole = run("s1_full_rewrite")
+    assert(whole.forall(_(1).toString.contains("\ud83d\ude00")), whole)
+    assert(run("s2_chunk_invariance") == whole)
   }
 
   test("parallelism invariance: local partitioning does not change results") {
@@ -312,6 +346,25 @@ class SparkSpec extends AnyFunSuite {
       """SELECT shadow_extract(array(named_struct('kind','html','text','<p>x</p>','media_ref','','offset',0)),
         |'{"s":"p[","hide":true}').errors AS e""".stripMargin).head().getSeq[String](0)
     assert(bad.exists(_.startsWith("Selector p[ is invalid")))
+  }
+
+  test("shadow_extract: a null text and a null span element return a row equal to the operator's") {
+    graft.spark.SqlFunctions.register(spark)
+    val rules = """{"s":"#t","data":{"path":"d","values":{"c":{"source":"Contents"}}}}"""
+    val spans =
+      """array(
+        |  named_struct('kind','html','text','<p id="t">a','media_ref','','offset',0),
+        |  named_struct('kind','html','text',CAST(NULL AS STRING),'media_ref','','offset',1),
+        |  NULL,
+        |  named_struct('kind','html','text','b</p>','media_ref','','offset',2))""".stripMargin
+    val r = spark.sql(s"SELECT shadow_extract($spans, '$rules') AS r").select("r.*").head()
+    val errs = new ArrayBuffer[String]
+    val p = RuleCompiler.compile(Seq(RuleParser.parseStr(rules, errs)))
+    val op = ShadowSpark.processColumnar(spark.sql(s"SELECT 'n' AS doc_id, $spans AS spans"), p).head()
+    assert(r.getString(0) == """<p id="t">ab</p>""")
+    assert(r.getString(0) == op.spans.filter(s => s.kind == "html" || s.kind == "data").map(_.text).mkString)
+    assert(r.getString(1) == op.data_json && op.data_json == """{"d":{"c":"ab"}}""")
+    assert(r.getSeq[String](2) == op.errors && errs.isEmpty)
   }
 
   test("tx1: language-ID heuristic on real-language samples") {
