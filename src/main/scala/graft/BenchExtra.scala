@@ -22,18 +22,6 @@ object BenchExtra {
     val rounds = sys.env.getOrElse("SPARK_GRAFT_XROUNDS", "3").toInt
     val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN")
     val spark = Bench.session(cpus)
-    if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, System.nanoTime())
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(j.jobId)
-          if (t0 != 0L)
-            println(f"JOBLOG id=${j.jobId}%-4d wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-        }
-      })
-    }
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => args.isEmpty || args.exists(n.contains) }
     val out = new StringBuilder("{")

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -135,8 +136,9 @@ object Multimodal {
 
   /** Shared synth plumbing: one media row per doc, content built by `f`
     * from (doc_id, UTF-8 payload) -> (media_ref, container bytes). The
-    * mm1/mm2/mm3 queries parameterize this with different builders. */
-  /** `spread = true` redistributes rows over the session's
+    * mm1/mm2/mm3 queries parameterize this with different builders.
+    *
+    * `spread = true` redistributes rows over the session's
     * shuffle-partition count BEFORE the codec work: scan splits follow
     * input file BYTES, which underparallelizes per-row codec CPU (and
     * mega-doc skew concentrates it; same rationale as
@@ -145,7 +147,7 @@ object Multimodal {
     * WARC decodes yes, header-only walks no (their per-row work is at
     * scan speed, so the exchange is pure overhead; those call sites pass
     * spread = false). The count is the deployment-sized
-    * spark.sql.shuffle.partitions, never a constant. */
+    * spark.sql.shuffle.partitions as Spark parses it, never a constant. */
   def synthTable(docs: DataFrame, spread: Boolean = true)
                 (f: (Long, Array[Byte]) => (String, Array[Byte])): DataFrame = {
     val spark = docs.sparkSession
@@ -153,8 +155,7 @@ object Multimodal {
     val base = docs.select(col("doc_id"), col("text"))
     val part =
       if (!spread) base
-      else base.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+      else base.repartition(SQLConf.get.numShufflePartitions, col("doc_id"))
     part.as[(Long, String)].mapPartitions { it =>
       it.map { case (id, text) =>
         val (ref, content) = f(id, text.getBytes(UTF_8))

@@ -1,25 +1,31 @@
 package graft.spark
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.core.{Doc, DocOut}
 import graft.engine.RuleProgram
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DataFrameBridge
-import org.apache.spark.util.CollectionAccumulator
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.collection.mutable.ArrayBuffer
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** One lineage row per task partition (north rule: per-partition lineage +
-  * metrics: partition id, doc range, checksum, timings). */
-final case class LineageRow(
-    partition_id: Int,
+/** One committed run of `ShadowSpark.writeResumable`, as stored in
+  * `run=N/_graft_commit.json`: the doc-hash buckets it wrote (of
+  * `n_buckets`) and the lineage of its write — row count, doc_id range,
+  * an order-free checksum of (doc_id, data_json), rows with errors and
+  * the write's wall time. */
+final case class Commit(
+    run: Int,
+    buckets: Seq[Int],
+    n_buckets: Int,
+    n_docs: Long,
     doc_lo: String,
     doc_hi: String,
-    n_docs: Long,
     checksum: Long,
+    n_errors: Long,
     wall_ms: Long)
 
 /** Spark wiring for the extraction engine (SURVEY.md §3.5).
@@ -33,11 +39,12 @@ final case class LineageRow(
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
   *    an OPTIONAL salted repartition spreads pathological mega-docs;
-  *  - lineage is gathered with a lightweight accumulator (one row per
-  *    partition, not per doc) — no second pass over the data;
-  *  - resumable writes bucket the output by xxhash64(doc_id)%N with one
-  *    commit marker per bucket: a re-run recomputes only uncommitted
-  *    buckets (sandbox stand-in for Iceberg snapshot commits; the writer
+  *  - each `writeResumable` call writes one run and commits it with one
+  *    rename of its staging directory; the run's manifest (`Commit`)
+  *    names the xxhash64(doc_id)%N buckets it covers, so a re-run
+  *    recomputes only uncommitted buckets, and carries the lineage,
+  *    observed on the write itself — no accumulator, no second pass
+  *    (sandbox stand-in for Iceberg/Delta snapshot commits; the writer
   *    sits behind this object so a real catalog is a drop-in).
   */
 object ShadowSpark {
@@ -253,66 +260,74 @@ object ShadowSpark {
   /** `op` under its earlier name. */
   def processColumnarRaw(df: DataFrame, program: RuleProgram): DataFrame = op(df, program)
 
-  /** Engine application + per-partition lineage (accumulated driver-side;
-    * one small row per task). Call `lineage.value` after an action. */
-  def processWithLineage(docs: Dataset[Doc], program: RuleProgram)
-      : (Dataset[DocOut], CollectionAccumulator[LineageRow]) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val acc = spark.sparkContext.collectionAccumulator[LineageRow]("graft_lineage")
-    // a pass-through tally over the operator's output rows
-    val out = process(docs, program).mapPartitions { it =>
-      val t0 = System.nanoTime()
-      var lo: String = null
-      var hi: String = null
-      var n = 0L
-      var checksum = 0L
-      // emit exactly one lineage row per task at completion: a completion
-      // listener (not a drained-iterator probe) so a downstream `limit`
-      // that stops consuming early still records what WAS processed
-      val tc = TaskContext.get()
-      if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-        acc.add(LineageRow(tc.partitionId(), Option(lo).getOrElse(""), Option(hi).getOrElse(""),
-          n, checksum, (System.nanoTime() - t0) / 1000000L))
-      }
-      it.map { r =>
-        if (lo == null || r.doc_id < lo) lo = r.doc_id
-        if (hi == null || r.doc_id > hi) hi = r.doc_id
-        n += 1
-        checksum ^= java.lang.Long.rotateLeft(
-          r.data_json.hashCode.toLong * 0x9e3779b97f4a7c15L + r.spans.length, (n % 63).toInt)
-        r
-      }
-    }
-    (out, acc)
-  }
-
   /** Salted explicit repartition for skewed corpora: hash(doc_id) spreads
     * mega-docs uniformly; `parallelism` should be ~2-3x the executor-core
     * count at scale. AQE handles residual imbalance. */
   def repartitionByDoc(docs: Dataset[Doc], parallelism: Int): Dataset[Doc] =
     docs.repartition(parallelism, xxhash64(col("doc_id")))
 
-  // ---------------- resumable bucketed writer ----------------
+  // ---------------- resumable run writer ----------------
 
   def bucketOf(nBuckets: Int) = pmod(xxhash64(col("doc_id")), lit(nBuckets))
 
-  private def markerDir(path: String) = Paths.get(path, "_graft_committed")
+  private val ManifestName = "_graft_commit.json"
+  private val RunDir = "run=(\\d+)".r
+  private lazy val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  def committedBuckets(path: String): Set[Int] = {
-    val dir = markerDir(path)
-    if (!Files.isDirectory(dir)) Set.empty
-    else Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("bucket-") => s.stripPrefix("bucket-").toInt }
-      .toSet
+  /** The committed runs under `path`, in run order. */
+  def commits(path: String): Seq[Commit] = {
+    val root = Paths.get(path)
+    if (!Files.isDirectory(root)) return Seq.empty
+    val ls = Files.list(root)
+    try ls.iterator().asScala.toSeq
+      .collect { case d if RunDir.matches(d.getFileName.toString) => d.resolve(ManifestName) }
+      .map(m => json.readValue(m.toFile, classOf[Commit]))
+      .sortBy(_.run)
+    finally ls.close()
   }
 
-  /** Write DocOut rows partitioned into `nBuckets` doc-hash buckets with a
-    * commit marker per bucket. On re-run after a failure, committed buckets
-    * are skipped (their input rows are filtered out BEFORE the engine runs,
-    * so no recompute) and only missing buckets are (re)written via dynamic
-    * partition overwrite. Returns the buckets written this run.
+  def committedBuckets(path: String): Set[Int] = commits(path).flatMap(_.buckets).toSet
+
+  /** Writes `out` (DocOut columns) as the next run under `path` and commits
+    * it: the rows go to a fresh `_staging/<uuid>` directory, the lineage is
+    * observed on that same write (a result stage, so a retried task counts
+    * once), `_graft_commit.json` records it with `buckets`, and one atomic
+    * rename publishes the directory as `run=N`. A committed run is never
+    * empty (it holds its manifest), so a racing writer's rename onto the
+    * same N fails instead of replacing it. On any failure this call's
+    * staging directory is deleted; a crashed driver leaves it under
+    * `_staging`, which readers skip like every `_`-prefixed path. */
+  private[graft] def commitRun(out: DataFrame, path: String, buckets: Seq[Int], nBuckets: Int): Commit = {
+    val staging = Paths.get(path, "_staging", java.util.UUID.randomUUID().toString)
+    try {
+      val lineage = Observation()
+      val t0 = System.nanoTime()
+      out.observe(lineage,
+        count(lit(1)).as("n_docs"),
+        min("doc_id").as("doc_lo"),
+        max("doc_id").as("doc_hi"),
+        // xor, not sum: a long sum overflows under ANSI mode
+        bit_xor(xxhash64(col("doc_id"), col("data_json"))).as("checksum"),
+        count_if(size(col("errors")) > 0).as("n_errors"))
+        .write.parquet(staging.toString)
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val m = lineage.get
+      def get[T](k: String, empty: T): T = Option(m(k)).fold(empty)(_.asInstanceOf[T])
+      val c = Commit(commits(path).map(_.run + 1).maxOption.getOrElse(0), buckets.sorted, nBuckets,
+        get("n_docs", 0L), get("doc_lo", ""), get("doc_hi", ""), get("checksum", 0L),
+        get("n_errors", 0L), wallMs)
+      Files.write(staging.resolve(ManifestName), json.writeValueAsBytes(c))
+      Files.move(staging, Paths.get(path, s"run=${c.run}"), StandardCopyOption.ATOMIC_MOVE)
+      c
+    } finally FileUtils.deleteQuietly(staging.toFile) // gone after the rename
+  }
+
+  /** Write DocOut rows for the doc-hash buckets (`bucketOf(nBuckets)`) no
+    * earlier run under `path` committed, as one new run (`commitRun`). On
+    * re-run after a failure, committed buckets are skipped: their input
+    * rows are filtered out BEFORE the engine runs, so nothing is
+    * recomputed. Every run of a path must use the same `nBuckets`.
+    * Returns the buckets written this run.
     *
     * At real scale the input table would be Iceberg-partitioned by the same
     * bucket expression, so the resume filter prunes input partitions rather
@@ -324,46 +339,19 @@ object ShadowSpark {
       program: RuleProgram,
       path: String,
       nBuckets: Int = 64): Seq[Int] = {
-    val spark = docs.sparkSession
-    val done = committedBuckets(path)
+    val prior = commits(path)
+    prior.find(_.n_buckets != nBuckets).foreach { c =>
+      throw new IllegalArgumentException(
+        s"$path run ${c.run} was bucketed by ${c.n_buckets}, not $nBuckets")
+    }
+    val done = prior.flatMap(_.buckets).toSet
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return Seq.empty
 
     val remaining =
       if (done.isEmpty) docs
       else docs.where(!bucketOf(nBuckets).isin(done.toSeq.map(Integer.valueOf): _*))
-
-    val out = op(remaining.toDF(), program).withColumn("bucket", bucketOf(nBuckets))
-
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      out.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(path)
-    } finally {
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-
-    // commit markers, one per bucket written this run
-    Files.createDirectories(markerDir(path))
-    todo.foreach { b =>
-      Files.write(markerDir(path).resolve(s"bucket-$b"),
-        s"""{"bucket":$b}""".getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    }
+    commitRun(op(remaining.toDF(), program), path, todo, nBuckets)
     todo
-  }
-
-  /** Write the collected lineage rows as a metrics side table. */
-  def writeLineage(spark: SparkSession, rows: java.util.List[LineageRow], path: String): Unit = {
-    import spark.implicits._
-    val buf = new ArrayBuffer[LineageRow](rows.size())
-    rows.iterator().asScala.foreach(buf += _)
-    buf.toSeq.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
   }
 }

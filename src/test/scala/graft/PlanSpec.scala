@@ -204,4 +204,36 @@ class PlanSpec extends AnyFunSuite {
     val source = streamed.child.collect { case r: StreamingRelation => r }
     assert(source.size == 1 && source.head.output.map(_.name) == Seq("doc_id", "spans"), streamed)
   }
+
+  test("sink: the write plan has one EngineOp and one CollectMetrics, no Exchange or Sort") {
+    import graft.corpus.Corpus
+    import graft.spark.{EngineOpExec, ShadowSpark}
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.concurrent.duration._
+    val written = scala.concurrent.Promise[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.executedPlan match {
+          case w: DataWritingCommandExec => written.trySuccess(w)
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val program = graft.engine.RuleCompiler.compile(Seq(
+      graft.rules.RuleParser.parseStr(Corpus.corpusRules, new scala.collection.mutable.ArrayBuffer[String])))
+    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    spark.listenerManager.register(listener)
+    val p = try {
+      ShadowSpark.writeResumable(Corpus.generate(spark, 20, 2), program, out, 4)
+      scala.concurrent.Await.result(written.future, 30.seconds)
+    } finally spark.listenerManager.unregister(listener)
+    object aqe extends AdaptiveSparkPlanHelper
+    assert(aqe.collect(p) { case e: EngineOpExec => e }.size == 1, p)
+    assert(aqe.collect(p) { case m: CollectMetricsExec => m }.size == 1, p)
+    assert(aqe.collect(p) { case n @ (_: Exchange | _: SortExec) => n }.isEmpty, p)
+  }
 }

@@ -5,14 +5,13 @@ import graft.corpus.Corpus
 import graft.engine.{RuleCompiler, ShadowEngine}
 import graft.pipeline.{Dedup, Multimodal, TextStats}
 import graft.rules.RuleParser
-import graft.spark.ShadowSpark
+import graft.spark.{Commit, ShadowSpark}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path}
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 class SparkSpec extends AnyFunSuite {
 
@@ -129,24 +128,25 @@ class SparkSpec extends AnyFunSuite {
     assert(one == many)
   }
 
-  test("lineage: one row per partition, counts and ranges add up") {
+  test("lineage: one commit record per run, counts and ranges add up") {
     val docs = Corpus.generate(spark, 500, 5)
-    val (out, acc) = ShadowSpark.processWithLineage(docs, program)
-    val n = out.count()
-    assert(n == 500)
-    val rows = acc.value.asScala.toSeq
-    assert(rows.size == 5, s"expected 5 lineage rows, got ${rows.size}")
-    assert(rows.map(_.n_docs).sum == 500)
-    assert(rows.forall(r => r.doc_lo <= r.doc_hi))
-    assert(rows.map(_.partition_id).distinct.size == 5)
-    assert(rows.forall(_.wall_ms >= 0))
+    def written(): Commit = {
+      val path = tmpDir("graft_lineage").toString
+      assert(ShadowSpark.writeResumable(docs, program, path, 4) == (0 until 4))
+      val Seq(c) = ShadowSpark.commits(path)
+      assert(c.run == 0 && c.buckets == (0 until 4) && c.n_buckets == 4, c)
+      c
+    }
+    val c = written()
+    assert(c.n_docs == 500)
+    assert(c.doc_lo <= c.doc_hi)
+    assert(c.wall_ms >= 0)
     // checksum must be deterministic across runs
-    val (out2, acc2) = ShadowSpark.processWithLineage(docs, program)
-    out2.count()
-    val sums1 = rows.map(r => r.partition_id -> r.checksum).toMap
-    val sums2 = acc2.value.asScala.map(r => r.partition_id -> r.checksum).toMap
-    assert(sums1 == sums2)
+    assert(written().checksum == c.checksum)
   }
+
+  def readRuns(path: String): Seq[DocOut] =
+    spark.read.parquet(path).drop("run").as[DocOut].collect().sortBy(_.doc_id).toSeq
 
   test("resumable writer: rerun recomputes only uncommitted buckets, output identical") {
     val docs = Corpus.generate(spark, 400, 4)
@@ -156,32 +156,67 @@ class SparkSpec extends AnyFunSuite {
     val refPath = tmpDir("graft_ref").toString
     val wrote = ShadowSpark.writeResumable(docs, program, refPath, nBuckets)
     assert(wrote.sorted == (0 until nBuckets))
-    val reference = spark.read.parquet(refPath).drop("bucket")
-      .as[DocOut].collect().sortBy(_.doc_id).toSeq
+    val reference = readRuns(refPath)
 
-    // simulated failure: full write, then delete markers+data for 3 buckets
+    // simulated failure: a run that committed all but 3 buckets, made by
+    // re-committing the reference rows of the other 5
     val crashPath = tmpDir("graft_crash").toString
-    ShadowSpark.writeResumable(docs, program, crashPath, nBuckets)
     val lost = Seq(1, 4, 6)
-    lost.foreach { b =>
-      Files.delete(java.nio.file.Paths.get(crashPath, "_graft_committed", s"bucket-$b"))
-      val dir = java.nio.file.Paths.get(crashPath, s"bucket=$b")
-      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+    ShadowSpark.commitRun(
+      spark.read.parquet(refPath).drop("run").where(!ShadowSpark.bucketOf(nBuckets).isin(lost: _*)),
+      crashPath, (0 until nBuckets).diff(lost), nBuckets)
     assert(ShadowSpark.committedBuckets(crashPath).size == nBuckets - lost.size)
 
     // resume: must write exactly the lost buckets
     val rewrote = ShadowSpark.writeResumable(docs, program, crashPath, nBuckets)
     assert(rewrote.sorted == lost)
-    val resumed = spark.read.parquet(crashPath).drop("bucket")
-      .as[DocOut].collect().sortBy(_.doc_id).toSeq
-    assert(resumed == reference)
+    assert(readRuns(crashPath) == reference)
 
     // fully committed -> nothing to do
     assert(ShadowSpark.writeResumable(docs, program, crashPath, nBuckets).isEmpty)
   }
 
+  test("resumable writer: a crash before the commit leaves staging that readers ignore") {
+    val docs = Corpus.generate(spark, 200, 2)
+    val nBuckets = 4
+
+    // the state a driver killed between the data write and the rename leaves
+    val path = tmpDir("graft_staged").toString
+    val staged = java.nio.file.Paths.get(path, "_staging", "crashed")
+    ShadowSpark.op(docs.toDF(), program).write.parquet(staged.toString)
+    def parquetFiles = staged.toFile.list().count(_.endsWith(".parquet"))
+    assert(parquetFiles > 0)
+    assert(ShadowSpark.committedBuckets(path).isEmpty)
+
+    assert(ShadowSpark.writeResumable(docs, program, path, nBuckets) == (0 until nBuckets))
+    assert(readRuns(path) == reference(docs.collect().toSeq))
+    assert(parquetFiles > 0)
+  }
+
+  test("resumable writer: a run with a different bucket count is refused") {
+    val docs = Corpus.generate(spark, 100, 2)
+    val path = tmpDir("graft_nbuckets").toString
+    assert(ShadowSpark.writeResumable(docs, program, path, 8) == (0 until 8))
+    intercept[IllegalArgumentException](ShadowSpark.writeResumable(docs, program, path, 16))
+    assert(spark.read.parquet(path).count() == 100)
+  }
+
   // ---- training-pipeline operators ----
+
+  test("synthTable spreads over the shuffle-partition count as Spark parses it") {
+    // Spark trims the value it reads; a raw String.toInt does not
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, " 8 ")
+    try {
+      val docs = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+      val table = Multimodal.synthTable(docs)((id, payload) => (s"m$id", payload))
+      val parts = table.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r.numPartitions
+      }
+      assert(parts == Seq(8), table.queryExecution.analyzed)
+    } finally spark.conf.set(key, old)
+  }
 
   def plantedDocs: org.apache.spark.sql.DataFrame = {
     // 40 base docs of 30 tokens; docs 100+i are near-dups of doc i (one
