@@ -175,18 +175,20 @@ object Bench {
     val pairs4 = (0 until rounds).map(r => (walls(4)(r), walls(16)(r)))
     val pairs = (0 until rounds).map(r => (walls(8)(r), walls(32)(r)))
 
-    // ---- write-shaped output-path A/B (typed Encoder vs columnar decode
-    // vs zero-object raw UnsafeRow emission), interleaved in one warmed
-    // session, "noop" sink = full serialization without disk. The count-
-    // shaped scaling pairs stay on processColumnar because count prunes
-    // the output serializer entirely (raw's advantage is write-shaped —
-    // that is exactly what this A/B measures). ----
+    // ---- write-shaped A/B over the three ways into the one engine
+    // operator (EngineOp): a typed Dataset[Doc] via `process`, an untyped
+    // DataFrame via `processColumnar`, and `op` itself ("raw"). All three
+    // plan to the same node with the same UnsafeRow emitter, so the arms
+    // time one path and read as a tie; they stay as arms because their
+    // keys and table rows are part of this bench's output. Interleaved in
+    // one warmed session; the "noop" sink serializes every row without
+    // disk. ----
     def abWall(kind: String, s: SparkSession): Double = {
       import s.implicits._
       val df = kind match {
         case "typed" => ShadowSpark.process(s.read.parquet(corpusPath).as[Doc], program).toDF()
         case "columnar" => ShadowSpark.processColumnar(s.read.parquet(corpusPath), program).toDF()
-        case _ => ShadowSpark.processColumnarRaw(s.read.parquet(corpusPath), program)
+        case _ => ShadowSpark.op(s.read.parquet(corpusPath), program)
       }
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
@@ -490,12 +492,13 @@ object Bench {
          |end-to-end (the oracle reconstructs the engine's full rewritten
          |HTML + extraction JSON by string concatenation).
          |
-         |Resume correctness + lineage: SparkSpec exercises the bucketed
-         |commit-marker writer (rerun after partial commit recomputes only
-         |uncommitted buckets; output identical) and per-partition lineage
-         |(partition id, doc range, count, checksum, wall ms). Iceberg jar is
-         |absent in this sandbox — commit markers stand in for snapshot
-         |commits (SURVEY.md §7.0).
+         |Resume correctness + lineage: SparkSpec exercises the run-committed
+         |writer (each call stages its files and publishes them as `run=N`
+         |with one atomic rename; a rerun after a partial commit recomputes
+         |only the uncommitted buckets; output identical) and the lineage
+         |record committed with each run (doc range, count, checksum, error
+         |rows, wall ms). Iceberg is not on the classpath — the one rename
+         |per run stands in for a snapshot commit (SURVEY.md §7.0).
          |
          |Per-query seconds (sf dir `$sfDir`, local[$cpus]):
          |

@@ -62,8 +62,6 @@ object Boilerplate {
       sb.setLength(0); words = 0; linkWords = 0
     }
 
-    // iterative DFS (crawled HTML nests arbitrarily deep; call recursion
-    // would StackOverflow the task — same rationale as Engine's walks)
     def enter(node: Int): Boolean = a.kind(node) match { // returns: descend?
       case a.nElem =>
         val tag = a.name(node)
@@ -106,27 +104,7 @@ object Boilerplate {
         }
       }
 
-    {
-      var node = 0
-      var desc = enter(node)
-      var done = false
-      while (!done) {
-        val c = if (desc) a.firstChild(node) else -1
-        if (c != -1) { node = c; desc = enter(node) }
-        else {
-          exit(node)
-          var climbing = true
-          while (climbing) {
-            if (node == 0) { climbing = false; done = true }
-            else {
-              val s = a.nextSibling(node)
-              if (s != -1) { node = s; desc = enter(node); climbing = false }
-              else { node = a.parent(node); exit(node) }
-            }
-          }
-        }
-      }
-    }
+    a.walk(enter, exit)
     flush()
     out.toVector
   }

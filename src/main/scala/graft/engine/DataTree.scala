@@ -94,21 +94,18 @@ object DNode {
   /** Insertion-order JSON writer with the reference's string-escape quirk
     * (shadow_data.rs:40-69): each string value is ROUND-TRIPPED as if it
     * were already-escaped JSON (parse failure -> silently ""), then the
-    * unescaped result is written RAW between quotes; keys are written raw.
-    * strict=true instead emits correctly-escaped JSON (conscious deviation
-    * flag; default off to match reference fixtures — SURVEY.md §2.4 E8).
+    * unescaped result is written RAW between quotes; keys are written raw
+    * (SURVEY.md §2.4 E8).
     */
-  def serialize(n: DNode, sb: java.lang.StringBuilder, strict: Boolean): Unit = n.kind match {
+  def serialize(n: DNode, sb: java.lang.StringBuilder): Unit = n.kind match {
     case KStr =>
-      sb.append('"')
-      if (strict) escapeJson(n.str, sb) else sb.append(quirkRoundTrip(n.str))
-      sb.append('"')
+      sb.append('"').append(quirkRoundTrip(n.str)).append('"')
     case KArr =>
       sb.append('[')
       var first = true
       n.arr.foreach { c =>
         if (!first) sb.append(','); first = false
-        serialize(c, sb, strict)
+        serialize(c, sb)
       }
       sb.append(']')
     case KObj =>
@@ -116,37 +113,16 @@ object DNode {
       var first = true
       n.obj.foreach { case (k, v) =>
         if (!first) sb.append(','); first = false
-        sb.append('"')
-        if (strict) escapeJson(k, sb) else sb.append(k)
-        sb.append('"').append(':')
-        serialize(v, sb, strict)
+        sb.append('"').append(k).append('"').append(':')
+        serialize(v, sb)
       }
       sb.append('}')
   }
 
-  def toJson(n: DNode, strict: Boolean = false): String = {
+  def toJson(n: DNode): String = {
     val sb = new java.lang.StringBuilder(256)
-    serialize(n, sb, strict)
+    serialize(n, sb)
     sb.toString
-  }
-
-  def escapeJson(s: String, sb: java.lang.StringBuilder): Unit = {
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"'  => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '\b' => sb.append("\\b")
-        case '\f' => sb.append("\\f")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
   }
 
   /** Interpret v as the interior of a JSON string literal; on any invalidity

@@ -15,7 +15,6 @@ import scala.collection.mutable.ArrayBuffer
 final case class EngineConfig(
     asJson: Boolean = false,
     dataFormatter: String => String = EngineConfig.defaultFormatter,
-    strictJsonEscape: Boolean = false,
     /** E9 (ShadowData::transform_strings, shadow_data.rs:251-269): the
       * reference user applies this post-hoc to the collected tree, so it
       * transforms the final data_json (values only, never keys) but NOT
@@ -145,17 +144,20 @@ final class SpanAcc {
 }
 
 /** Per-task engine instance: pure per-row function
-  * (rules, spans) -> (spans_out, data_json, errors). Holds only a regex
-  * memo cache across rows (reference: regex_map in the parse cache,
-  * shadow_api.rs:141-143); all other state is row-local. */
+  * (rules, spans) -> (spans_out, data_json, errors). Across rows it keeps
+  * only reusable scratch (the regex memo cache — reference: regex_map in
+  * the parse cache, shadow_api.rs:141-143 — the name pool, the arena, the
+  * per-depth element frames and the output accumulator); everything a row
+  * observes is row-local. */
 final class ShadowEngine(program: RuleProgram) extends Serializable {
 
   @transient private lazy val regexCache = new mutable.HashMap[String, Pattern]
   /** tag/attr-name intern pool, reused across all docs of this task */
   @transient private lazy val namePool = new graft.html.NamePool
-  /** per-task scratch arena + overlay arrays, reused across docs */
+  /** per-task scratch arena, reused across docs */
   @transient private lazy val scratchArena = new Arena("")
-  @transient private lazy val scratch = new EngineScratch
+  /** one Frame per open-element depth, reused across elements and docs */
+  @transient private lazy val frames = new ArrayBuffer[Frame](64)
 
   private val config = program.config
   private val rules = program.rules
@@ -236,71 +238,71 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
     acc
   }
 
+  /** One document-order walk, like lol_html's single pass: each node's
+    * handlers fire at its enter, then its output is written right away;
+    * what an open element's handlers recorded for its exit lives in that
+    * depth's Frame. */
   private def processInternal(stream: String,
                               markers: scala.collection.Seq[HtmlParser.MediaMarker],
                               errors: ArrayBuffer[String], acc: SpanAcc): Unit = {
     val a = HtmlParser.parse(stream, markers, namePool, scratchArena)
-
-    // ---- mutation overlay (per-task scratch, cleared for this doc) ----
-    scratch.ensure(a.size)
-    val removed = scratch.removed
-    val contentOverride = scratch.contentOverride
-    val beforeL = scratch.beforeL
-    val prependL = scratch.prependL
-    val appendL = scratch.appendL
-    val afterL = scratch.afterL
-    val chunkRemoved = scratch.chunkRemoved
-    val chunkReplacement = scratch.chunkReplacement
-    val attrOverlay = scratch.attrOverlay
-    /** body end-tag JSON injection html, keyed by element node */
-    val dataInjection = scratch.dataInjection
+    val frames = this.frames
+    // as_json: the HTML output is discarded, so nothing is written during
+    // the walk (process_json, shadow_api.rs:714-732)
+    val emitting = !config.asJson
 
     val cursor = new DataCursor
     val textBuffers = new mutable.HashMap[Int, java.lang.StringBuilder]
     // rule indexes (into `rules`) with text handlers active for the open
-    // element chain; parallel to an element-stack of marks
+    // element chain; each open element's frame marks the length at its enter
     val activeTextRules = new ArrayBuffer[Int]
+    // the visited text chunk's fate, set by its text handlers
+    var chunkDropped = false
+    var chunkReplacement: String = null
 
-    def attrsOf(el: Int): AttrOverlay = {
-      var ov = attrOverlay(el)
-      if (ov == null) { ov = new AttrOverlay(a, el); attrOverlay(el) = ov }
-      ov
+    def attrsOf(f: Frame, el: Int): AttrOverlay = {
+      if (!f.attrsLive) {
+        if (f.attrs == null) f.attrs = new AttrOverlay
+        f.attrs.reset(a, el)
+        f.attrsLive = true
+      }
+      f.attrs
     }
 
     // ---- element handler (element_content_handler, shadow_api.rs:339-565) ----
-    def elementHandler(rule: CompiledRule, el: Int, endActions: ArrayBuffer[() => Unit]): Unit = {
+    def elementHandler(rule: CompiledRule, el: Int, f: Frame): Unit = {
       val r = rule.node
       val delete = r.delete
 
       // (1) injections; lol_html accumulation order: before/append in call
       // order, after/prepend reversed (later call closest to the element)
       if (r.insertAfter.nonEmpty) {
-        if (afterL(el) == null) afterL(el) = new ArrayBuffer[String]
-        r.insertAfter.foreach(t => afterL(el).insert(0, t))
+        if (f.after == null) f.after = new ArrayBuffer[String]
+        r.insertAfter.foreach(t => f.after.insert(0, t))
       }
       if (r.insertBefore.nonEmpty) {
-        if (beforeL(el) == null) beforeL(el) = new ArrayBuffer[String]
-        beforeL(el) ++= r.insertBefore
+        if (f.before == null) f.before = new ArrayBuffer[String]
+        f.before ++= r.insertBefore
       }
       if (r.append.nonEmpty) {
-        if (appendL(el) == null) appendL(el) = new ArrayBuffer[String]
-        appendL(el) ++= r.append
+        if (f.append == null) f.append = new ArrayBuffer[String]
+        f.append ++= r.append
       }
       if (r.prepend.nonEmpty) {
-        if (prependL(el) == null) prependL(el) = new ArrayBuffer[String]
-        r.prepend.foreach(t => prependL(el).insert(0, t))
+        if (f.prepend == null) f.prepend = new ArrayBuffer[String]
+        r.prepend.foreach(t => f.prepend.insert(0, t))
       }
 
       if (!delete) {
         // (2) hide — quirk kept: NO-OP when a style attribute already
         // exists (shadow_api.rs:373-377 mutates an owned copy)
         if (r.hide) {
-          val ov = attrsOf(el)
+          val ov = attrsOf(f, el)
           if (!ov.has("style")) ov.set("style", "display: none")
         }
         r.edit.foreach { edit =>
           edit.attrs.foreach { case (key, op) =>
-            val ov = attrsOf(el)
+            val ov = attrsOf(f, el)
             op.op match {
               case "delete" => ov.remove(key)
               case "upsert" =>
@@ -323,7 +325,7 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
             // (M10) empty-element path: upsert replaces the WHOLE subtree
             // (shadow_api.rs:419-425; tests/test_edge_cases.rs)
             if (c.op == "upsert" && a.canHaveContent(el) && c.value.isDefined)
-              contentOverride(el) = escapeText(c.value.get)
+              f.content = escapeText(c.value.get)
           }
         }
       }
@@ -335,13 +337,12 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
             case Left(err) => errors += err
             case Right(dataItem) =>
               if (a.canHaveContent(el) && a.hasEndTag(el)) {
-                endActions += { () =>
-                  DataOps.onDataTagClose(dataDef, cursor).foreach(errors += _)
-                }
+                if (f.pops == null) f.pops = new ArrayBuffer[DataDef]
+                f.pops += dataDef
               }
               dataDef.values match {
                 case Some(values) if values.nonEmpty =>
-                  val ov = attrsOf(el) // post-edit snapshot (shadow_api.rs:456-460)
+                  val ov = attrsOf(f, el) // post-edit snapshot (shadow_api.rs:456-460)
                   values.foreach { case (key, source) =>
                     source match {
                       case ValueSource.Attribute(attrName) =>
@@ -365,7 +366,7 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
       }
 
       // (4) delete last — injections already registered, extraction done
-      if (delete) removed(el) = true
+      if (delete) f.removed = true
     }
 
     // form-value shortcut (shadow_api.rs:477-544)
@@ -402,7 +403,7 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
       val r = rule.node
       val buf = textBuffers.getOrElseUpdate(ruleIdx, new java.lang.StringBuilder)
       buf.append(a.src, a.rawS(chunk), a.rawE(chunk))
-      chunkRemoved(chunk) = true
+      chunkDropped = true
       if (a.lastInTextNode(chunk)) {
         var content = buf.toString
         r.edit.flatMap(_.content).foreach { c =>
@@ -432,227 +433,143 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
             }
           }
         }
-        chunkReplacement(chunk) = escapeText(content)
+        chunkReplacement = escapeText(content)
         buf.setLength(0)
       }
     }
 
-    // ---- document-order traversal replaying lol_html handler dispatch ----
-    // ITERATIVE (explicit heap stacks, not call recursion): crawled HTML can
-    // nest arbitrarily deep, and a StackOverflowError would kill the task
-    // (and after 4 retries, the job) instead of producing an error row.
-    val scratchRules = new ArrayBuffer[Int](8) // reused per text node
-    val elemMarks = new ArrayBuffer[Int](32) // activeTextRules length at enter
-    val elemActs = new ArrayBuffer[ArrayBuffer[() => Unit]](32) // endActions per open elem
-
-    def enterWalk(node: Int): Unit = a.kind(node) match {
-      case a.nElem =>
-        elemMarks += activeTextRules.length
-        var endActions: ArrayBuffer[() => Unit] = null // lazy: most elements match nothing
-        def actions(): ArrayBuffer[() => Unit] = {
-          if (endActions == null) endActions = new ArrayBuffer[() => Unit](2)
-          endActions
-        }
-        val tagged = { val t = rulesByTag.get(a.name(node)); if (t == null) noRules else t }
-        var i = 0; var j = 0
-        while (i < tagged.length || j < wildcardRules.length) {
-          val ri =
-            if (j >= wildcardRules.length || (i < tagged.length && tagged(i) < wildcardRules(j))) {
-              i += 1; tagged(i - 1)
-            } else { j += 1; wildcardRules(j - 1) }
-          val rule = rules(ri)
-          if (SelectorMatcher.matches(a, node, rule.selector)) {
-            if (rule.useElementHandler) elementHandler(rule, node, actions())
-            if (rule.useTextHandler) activeTextRules += ri
-          }
-        }
-        // data injection registered last (data_content_handler appended
-        // after all user rules — shadow_api.rs:153-161,690-712)
-        if (!config.asJson && a.hasEndTag(node) && a.name(node) == "body") {
-          val bodyNode = node
-          actions() += { () =>
-            dataInjection(bodyNode) = config.dataFormatter(DNode.toJson(cursor.root, config.strictJsonEscape))
-          }
-        }
-        elemActs += endActions
-      case a.nText =>
-        val len = activeTextRules.length
-        if (len == 1) textHandler(activeTextRules(0), node)
-        else if (len > 1) {
-          // fire in ech order, once per rule (buffers are per-rule);
-          // allocation-free dedup+sort into a reused scratch buffer
-          scratchRules.clear()
-          var i = 0
-          while (i < len) {
-            val r = activeTextRules(i)
-            var dup = false
-            var d = 0
-            while (d < scratchRules.length && !dup) { dup = scratchRules(d) == r; d += 1 }
-            if (!dup) {
-              // insertion keeping ascending order
-              var k = scratchRules.length
-              scratchRules += r
-              while (k > 0 && scratchRules(k - 1) > r) {
-                scratchRules(k) = scratchRules(k - 1); k -= 1
-              }
-              scratchRules(k) = r
-            }
-            i += 1
-          }
-          i = 0
-          while (i < scratchRules.length) { textHandler(scratchRules(i), node); i += 1 }
-        }
-      case _ => // raw/media/root: nothing on enter
-    }
-
-    def exitWalk(node: Int): Unit =
-      if (a.kind(node) == a.nElem) {
-        val textMark = elemMarks.remove(elemMarks.length - 1)
-        val endActions = elemActs.remove(elemActs.length - 1)
-        activeTextRules.dropRightInPlace(activeTextRules.length - textMark)
-        if (endActions != null && a.hasEndTag(node)) endActions.foreach(_.apply())
-      }
-
-    {
-      var node = 0
-      enterWalk(node)
-      var done = false
-      while (!done) {
-        val c = a.firstChild(node)
-        if (c != -1) { node = c; enterWalk(node) }
-        else {
-          exitWalk(node)
-          var climbing = true
-          while (climbing) {
-            if (node == 0) { climbing = false; done = true }
-            else {
-              val s = a.nextSibling(node)
-              if (s != -1) { node = s; enterWalk(node); climbing = false }
-              else { node = a.parent(node); exitWalk(node) }
-            }
-          }
-        }
-      }
-    }
-
-    config.dataTransform.foreach(cursor.root.transformStrings)
-    val dataJson = DNode.toJson(cursor.root, config.strictJsonEscape)
-
-    // ---- serialization: arena + overlay -> output spans (into acc) ----
+    // ---- output: written during the walk, into hb / acc ----
     val hb = new java.lang.StringBuilder(stream.length + 64)
     def flushHtml(): Unit =
       if (hb.length > 0) { acc.add(SpanKinds.Html, hb.toString, ""); hb.setLength(0) }
 
     def emitList(l: ArrayBuffer[String]): Unit = if (l != null) l.foreach(hb.append)
 
-    def emitMediaSpan(node: Int): Unit = {
-      flushHtml()
-      acc.add(SpanKinds.Media, a.mediaText(a.rawS(node)), a.name(node))
-    }
-
-    def emitEndOf(node: Int): Unit = {
-      emitList(appendL(node))
-      if (dataInjection(node) != null && dataInjection(node).nonEmpty) {
-        flushHtml()
-        acc.add(SpanKinds.Data, dataInjection(node), "")
-      }
-      hb.append(a.src, a.rawEndS(node), a.rawEndE(node))
-    }
-
-    // ---- serialization walk, ITERATIVE like the rule walk (same deep-doc
-    // rationale). `mediaRoot != -1` marks a removed / content-overridden
-    // subtree: inside it only media spans pass through (north-rule
-    // contract) — no overlays, no tags.
-    var mediaRoot = -1
-
-    def enterEmit(node: Int): Boolean = { // returns: descend into children?
-      if (mediaRoot != -1) {
-        if (a.kind(node) == a.nMedia) emitMediaSpan(node)
-        true
-      } else a.kind(node) match {
-        case a.nRoot => true
-        case a.nElem =>
-          emitList(beforeL(node))
-          if (removed(node)) {
-            // element + content removed; before/after content survives,
-            // media spans inside still pass through
-            mediaRoot = node
-          } else {
-            emitStartTag(node)
-            if (a.canHaveContent(node)) emitList(prependL(node))
-            if (contentOverride(node) != null) {
-              hb.append(contentOverride(node))
-              mediaRoot = node // media inside replaced subtree still emitted
-            }
-          }
-          true
-        case a.nText =>
-          if (chunkReplacement(node) != null) hb.append(chunkReplacement(node))
-          else if (!chunkRemoved(node)) hb.append(a.src, a.rawS(node), a.rawE(node))
-          false
-        case a.nRaw =>
-          hb.append(a.src, a.rawS(node), a.rawE(node))
-          false
-        case _ => // nMedia
-          emitMediaSpan(node)
-          false
-      }
-    }
-
-    def exitEmit(node: Int): Unit = {
-      if (mediaRoot == node) {
-        mediaRoot = -1
-        // removed elements drop their end tag + appends; an overridden
-        // element still closes normally
-        if (!removed(node) && a.hasEndTag(node)) emitEndOf(node)
-        emitList(afterL(node))
-      } else if (mediaRoot == -1 && a.kind(node) == a.nElem) {
-        if (a.hasEndTag(node)) emitEndOf(node)
-        emitList(afterL(node))
-      }
-    }
-
-    def emit(start: Int): Unit = {
-      var node = start
-      var desc = enterEmit(node)
-      var done = false
-      while (!done) {
-        val c = if (desc) a.firstChild(node) else -1
-        if (c != -1) { node = c; desc = enterEmit(node) }
-        else {
-          exitEmit(node)
-          var climbing = true
-          while (climbing) {
-            if (node == start) { climbing = false; done = true }
-            else {
-              val s = a.nextSibling(node)
-              if (s != -1) { node = s; desc = enterEmit(node); climbing = false }
-              else { node = a.parent(node); exitEmit(node) }
-            }
-          }
-        }
-      }
-    }
-
-    def emitStartTag(node: Int): Unit = {
-      val ov = attrOverlay(node)
-      if (ov == null || !ov.dirty) hb.append(a.src, a.rawS(node), a.rawE(node))
+    def emitStartTag(node: Int, f: Frame): Unit =
+      if (!f.attrsLive || !f.attrs.dirty) hb.append(a.src, a.rawS(node), a.rawE(node))
       else {
         hb.append('<').append(a.src, a.tagNameS(node), a.tagNameE(node))
-        ov.emit(hb)
+        f.attrs.emit(hb)
         hb.append(a.src, a.trailS(node), a.trailE(node))
       }
+
+    // ---- the walk: lol_html handler dispatch, then the node's output ----
+    val scratchRules = new ArrayBuffer[Int](8) // reused per text node
+    var depth = -1
+    // root of a removed or content-replaced subtree, -1 outside one: inside
+    // it only media spans pass through (north-rule contract), no overlays,
+    // no tags, though rules keep firing
+    var mediaRoot = -1
+
+    def enter(node: Int): Boolean = {
+      a.kind(node) match {
+        case a.nElem =>
+          depth += 1
+          if (depth == frames.length) frames += new Frame
+          val f = frames(depth)
+          f.reset(activeTextRules.length)
+          val tagged = { val t = rulesByTag.get(a.name(node)); if (t == null) noRules else t }
+          var i = 0; var j = 0
+          while (i < tagged.length || j < wildcardRules.length) {
+            val ri =
+              if (j >= wildcardRules.length || (i < tagged.length && tagged(i) < wildcardRules(j))) {
+                i += 1; tagged(i - 1)
+              } else { j += 1; wildcardRules(j - 1) }
+            val rule = rules(ri)
+            if (SelectorMatcher.matches(a, node, rule.selector)) {
+              if (rule.useElementHandler) elementHandler(rule, node, f)
+              if (rule.useTextHandler) activeTextRules += ri
+            }
+          }
+          // data injection registered last (data_content_handler appended
+          // after all user rules — shadow_api.rs:153-161,690-712)
+          f.inject = emitting && a.hasEndTag(node) && a.name(node) == "body"
+          if (emitting && mediaRoot == -1) {
+            emitList(f.before)
+            // removed: element + content go, before/after content survives
+            if (f.removed) mediaRoot = node
+            else {
+              emitStartTag(node, f)
+              if (a.canHaveContent(node)) emitList(f.prepend)
+              if (f.content != null) { hb.append(f.content); mediaRoot = node }
+            }
+          }
+        case a.nText =>
+          chunkDropped = false; chunkReplacement = null
+          val len = activeTextRules.length
+          if (len == 1) textHandler(activeTextRules(0), node)
+          else if (len > 1) {
+            // fire in ech order, once per rule (buffers are per-rule);
+            // allocation-free dedup+sort into a reused scratch buffer
+            scratchRules.clear()
+            var i = 0
+            while (i < len) {
+              val r = activeTextRules(i)
+              var dup = false
+              var d = 0
+              while (d < scratchRules.length && !dup) { dup = scratchRules(d) == r; d += 1 }
+              if (!dup) {
+                // insertion keeping ascending order
+                var k = scratchRules.length
+                scratchRules += r
+                while (k > 0 && scratchRules(k - 1) > r) {
+                  scratchRules(k) = scratchRules(k - 1); k -= 1
+                }
+                scratchRules(k) = r
+              }
+              i += 1
+            }
+            i = 0
+            while (i < scratchRules.length) { textHandler(scratchRules(i), node); i += 1 }
+          }
+          if (emitting && mediaRoot == -1) {
+            if (chunkReplacement != null) hb.append(chunkReplacement)
+            else if (!chunkDropped) hb.append(a.src, a.rawS(node), a.rawE(node))
+          }
+        case a.nRaw =>
+          if (emitting && mediaRoot == -1) hb.append(a.src, a.rawS(node), a.rawE(node))
+        case a.nMedia =>
+          if (emitting) {
+            flushHtml()
+            acc.add(SpanKinds.Media, a.mediaText(a.rawS(node)), a.name(node))
+          }
+        case _ => // root
+      }
+      true
     }
 
-    if (config.asJson) {
-      // as_json: HTML output discarded; the JSON itself is the output
-      // stream (process_json, shadow_api.rs:714-732)
-      acc.add(SpanKinds.Data, dataJson, "")
-    } else {
-      emit(0)
-      flushHtml()
-    }
+    def exit(node: Int): Unit =
+      if (a.kind(node) == a.nElem) {
+        val f = frames(depth)
+        depth -= 1
+        activeTextRules.dropRightInPlace(activeTextRules.length - f.textMark)
+        // end-tag actions (registered only with a real end tag): data-path
+        // pops in rule order, then the body injection — computed even for a
+        // removed body, so a throwing formatter still yields an error row
+        if (f.pops != null) f.pops.foreach(d => DataOps.onDataTagClose(d, cursor).foreach(errors += _))
+        val injection = if (f.inject) config.dataFormatter(DNode.toJson(cursor.root)) else null
+        if (emitting && (mediaRoot == -1 || mediaRoot == node)) {
+          if (mediaRoot == node) mediaRoot = -1
+          // a removed element drops its end tag and appends; a
+          // content-replaced one still closes normally
+          if (!f.removed && a.hasEndTag(node)) {
+            emitList(f.append)
+            if (injection != null && injection.nonEmpty) {
+              flushHtml()
+              acc.add(SpanKinds.Data, injection, "")
+            }
+            hb.append(a.src, a.rawEndS(node), a.rawEndE(node))
+          }
+          emitList(f.after)
+        }
+      }
 
+    a.walk(enter, exit)
+
+    config.dataTransform.foreach(cursor.root.transformStrings)
+    val dataJson = DNode.toJson(cursor.root)
+    if (emitting) flushHtml()
+    else acc.add(SpanKinds.Data, dataJson, "") // as_json: the JSON is the output stream
     acc.dataJson = dataJson
   }
 
@@ -759,23 +676,26 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
 
 /** Lazily materialized logical attribute list with edit tracking; preserves
   * original bytes for untouched attrs (region emit, zero copies), rebuilds
-  * minimally for edited ones. */
-final class AttrOverlay(a: Arena, el: Int) {
+  * minimally for edited ones. Reusable: `reset` points it at an element. */
+final class AttrOverlay {
   // states
   private final val SKeep = 0; private final val SEdited = 1
   private final val SAdded = 2; private final val SRemoved = 3
   /** HTML5 duplicate attr: logically invisible, bytes preserved */
   private final val SDup = 4
 
-  private val n0 = a.attrEnd(el) - a.attrStart(el)
-  private val origIdx = new ArrayBuffer[Int](n0 + 2)
-  private val names = new ArrayBuffer[String](n0 + 2)
+  private var a: Arena = _
+  private val origIdx = new ArrayBuffer[Int]
+  private val names = new ArrayBuffer[String]
   /** edited/added value; null while untouched (read through the arena) */
-  private val values = new ArrayBuffer[String](n0 + 2)
-  private val states = new ArrayBuffer[Int](n0 + 2)
+  private val values = new ArrayBuffer[String]
+  private val states = new ArrayBuffer[Int]
   var dirty = false
 
-  {
+  def reset(arena: Arena, el: Int): Unit = {
+    a = arena
+    origIdx.clear(); names.clear(); values.clear(); states.clear()
+    dirty = false
     var i = a.attrStart(el)
     while (i < a.attrEnd(el)) {
       origIdx += i
@@ -869,46 +789,37 @@ final class AttrOverlay(a: Arena, el: Int) {
   }
 }
 
-/** Per-task reusable overlay arrays (cleared up to the previous doc's node
-  * count on ensure()); avoids 10 fresh arrays per row. */
-final class EngineScratch {
-  var removed: Array[Boolean] = new Array[Boolean](0)
-  var contentOverride: Array[String] = new Array[String](0)
-  var beforeL: Array[ArrayBuffer[String]] = new Array[ArrayBuffer[String]](0)
-  var prependL: Array[ArrayBuffer[String]] = new Array[ArrayBuffer[String]](0)
-  var appendL: Array[ArrayBuffer[String]] = new Array[ArrayBuffer[String]](0)
-  var afterL: Array[ArrayBuffer[String]] = new Array[ArrayBuffer[String]](0)
-  var chunkRemoved: Array[Boolean] = new Array[Boolean](0)
-  var chunkReplacement: Array[String] = new Array[String](0)
-  var attrOverlay: Array[AttrOverlay] = new Array[AttrOverlay](0)
-  var dataInjection: Array[String] = new Array[String](0)
-  private var used = 0
+/** What one open element's handlers recorded, from its enter to its exit.
+  * The engine keeps one per depth and reuses it across the elements and
+  * docs of a task; the lists are allocated on first use. */
+private final class Frame {
+  var before: ArrayBuffer[String] = _
+  var prepend: ArrayBuffer[String] = _
+  var append: ArrayBuffer[String] = _
+  var after: ArrayBuffer[String] = _
+  /** data defs whose path the end tag pops, in rule order */
+  var pops: ArrayBuffer[DataDef] = _
+  var attrs: AttrOverlay = _
+  /** attrs holds this element's overlay */
+  var attrsLive = false
+  /** escaped replacement content (content upsert), or null */
+  var content: String = _
+  var removed = false
+  /** the body data injection fires at this element's end tag */
+  var inject = false
+  /** activeTextRules length at enter */
+  var textMark = 0
 
-  def ensure(n: Int): Unit = {
-    if (n > removed.length) {
-      val cap = math.max(n, removed.length * 2)
-      removed = new Array[Boolean](cap)
-      contentOverride = new Array[String](cap)
-      beforeL = new Array[ArrayBuffer[String]](cap)
-      prependL = new Array[ArrayBuffer[String]](cap)
-      appendL = new Array[ArrayBuffer[String]](cap)
-      afterL = new Array[ArrayBuffer[String]](cap)
-      chunkRemoved = new Array[Boolean](cap)
-      chunkReplacement = new Array[String](cap)
-      attrOverlay = new Array[AttrOverlay](cap)
-      dataInjection = new Array[String](cap)
-    } else {
-      java.util.Arrays.fill(removed, 0, used, false)
-      java.util.Arrays.fill(contentOverride.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(beforeL.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(prependL.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(appendL.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(afterL.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(chunkRemoved, 0, used, false)
-      java.util.Arrays.fill(chunkReplacement.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(attrOverlay.asInstanceOf[Array[AnyRef]], 0, used, null)
-      java.util.Arrays.fill(dataInjection.asInstanceOf[Array[AnyRef]], 0, used, null)
-    }
-    used = n
+  def reset(mark: Int): Unit = {
+    if (before != null) before.clear()
+    if (prepend != null) prepend.clear()
+    if (append != null) append.clear()
+    if (after != null) after.clear()
+    if (pops != null) pops.clear()
+    attrsLive = false
+    content = null
+    removed = false
+    inject = false
+    textMark = mark
   }
 }

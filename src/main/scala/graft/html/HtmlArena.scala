@@ -200,6 +200,33 @@ final class Arena(var src: String) {
   def canHaveContent(id: Int): Boolean = kind(id) == nElem && !isVoid(id)
   def lastInTextNode(id: Int): Boolean = (flags(id) & fLastInTextNode) != 0
 
+  /** Document-order walk from the root. `enter` runs on each node and
+    * returns whether to descend into its children; `exit` runs on each
+    * entered node once its subtree is done. ITERATIVE (climbs the parent
+    * links, no call recursion): crawled HTML nests arbitrarily deep, and a
+    * StackOverflowError would kill the task instead of giving an error row. */
+  def walk(enter: Int => Boolean, exit: Int => Unit): Unit = {
+    var node = 0
+    var desc = enter(node)
+    var done = false
+    while (!done) {
+      val c = if (desc) firstChild(node) else -1
+      if (c != -1) { node = c; desc = enter(node) }
+      else {
+        exit(node)
+        var climbing = true
+        while (climbing) {
+          if (node == 0) { climbing = false; done = true }
+          else {
+            val s = nextSibling(node)
+            if (s != -1) { node = s; desc = enter(node); climbing = false }
+            else { node = parent(node); exit(node) }
+          }
+        }
+      }
+    }
+  }
+
   /** raw slice of a node as String (tests / cold paths). */
   def rawString(id: Int): String =
     if (kind(id) == nMedia) mediaText(rawS(id)) else src.substring(rawS(id), rawE(id))

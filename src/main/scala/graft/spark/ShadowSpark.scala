@@ -257,9 +257,6 @@ object ShadowSpark {
   def processColumnar(df: DataFrame, program: RuleProgram): Dataset[DocOut] =
     op(df, program).as(Encoders.product[DocOut])
 
-  /** `op` under its earlier name. */
-  def processColumnarRaw(df: DataFrame, program: RuleProgram): DataFrame = op(df, program)
-
   /** Salted explicit repartition for skewed corpora: hash(doc_id) spreads
     * mega-docs uniformly; `parallelism` should be ~2-3x the executor-core
     * count at scale. AQE handles residual imbalance. */

@@ -78,9 +78,6 @@ class EngineEdgeSpec extends AnyFunSuite {
       r.set("a", DNode.newString(1, r, """tab\there""")); r }) == "{\"a\":\"tab\there\"}")
     assert(DNode.toJson({ val r = DNode.newObject(0, null)
       r.set("a", DNode.newString(1, r, "trailing\\")); r }) == """{"a":""}""")
-    // strict mode escapes correctly instead
-    assert(DNode.toJson({ val r = DNode.newObject(0, null)
-      r.set("a", DNode.newString(1, r, "ra\"w")); r }, strict = true) == """{"a":"ra\"w"}""")
   }
 
   test("deep merge: objects merge recursively, scalars override in place (shadow_data.rs:152-223)") {
@@ -199,6 +196,37 @@ class EngineEdgeSpec extends AnyFunSuite {
     val out = new ShadowEngine(program).process(Doc("t", Seq(Span(SpanKinds.Html, "<body><div>x</div></body>", "", 0))))
     assert(out.spans.map(_.kind) == Seq(SpanKinds.Data))
     assert(out.spans.head.text == """{"d":{"c":"x"}}""")
+  }
+
+  test("suppressed subtrees: exact span sequence around deleted and content-replaced elements") {
+    // a deleted element with all four injections and a media span inside,
+    // a content-replaced element with a media span inside and an append,
+    // and the body data span; rules keep firing inside the deleted subtree
+    val errs = new ArrayBuffer[String]
+    val program = RuleCompiler.compile(Seq(
+      """{ "s": "#del", "delete": true, "insert_before": ["[B]"], "insert_after": ["[A]"],
+          "prepend": ["[P]"], "append": ["[Ap]"] }""",
+      """{ "s": "#del b", "data": { "path": "g", "values": { "t": {"source": "Contents"} } } }""",
+      """{ "s": "#rep", "append": ["[R]"], "edit": { "content": { "op": "upsert", "val": "N<w>" } } }"""
+    ).map(RuleParser.parseStr(_, errs)))
+    assert(errs.isEmpty)
+    val spans = Seq(
+      Span(SpanKinds.Html, "<html><body><p>intro</p><div id=\"del\"><b>go", "", 0),
+      Span(SpanKinds.Media, "M1", "media://s/1", 1),
+      Span(SpanKinds.Html, "ne</b> tail</div><section id=\"rep\">old<i>", "", 2),
+      Span(SpanKinds.Media, "M2", "media://s/2", 3),
+      Span(SpanKinds.Html, "</i></section><p>end</p></body></html>", "", 4))
+    val out = new ShadowEngine(program).process(Doc("s", spans))
+    assert(out.errors.isEmpty)
+    assert(out.data_json == """{"g":{"t":"gone"}}""")
+    assert(out.spans.map(s => (s.kind, s.text, s.media_ref)) == Seq(
+      (SpanKinds.Html, "<html><body><p>intro</p>[B]", ""),
+      (SpanKinds.Media, "M1", "media://s/1"),
+      (SpanKinds.Html, "[A]<section id=\"rep\">N&lt;w&gt;", ""),
+      (SpanKinds.Media, "M2", "media://s/2"),
+      (SpanKinds.Html, "[R]</section><p>end</p>", ""),
+      (SpanKinds.Data, """<script>var shadow_api_data = {"g":{"t":"gone"}};</script>""", ""),
+      (SpanKinds.Html, "</body></html>", "")))
   }
 
   test("multiple rules match one element: handlers fire in rule order") {

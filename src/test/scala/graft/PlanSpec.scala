@@ -172,7 +172,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan").toString
+    val dir = TempDirs.create("graft_plan").toString
     // a wider table than the operator reads, so the pruning shows
     Corpus.generate(spark, 20, 2).withColumn("url", org.apache.spark.sql.functions.lit("u"))
       .write.mode("overwrite").parquet(dir)
@@ -225,7 +225,7 @@ class PlanSpec extends AnyFunSuite {
     }
     val program = graft.engine.RuleCompiler.compile(Seq(
       graft.rules.RuleParser.parseStr(Corpus.corpusRules, new scala.collection.mutable.ArrayBuffer[String])))
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val out = TempDirs.create("graft_sink").toString
     spark.listenerManager.register(listener)
     val p = try {
       ShadowSpark.writeResumable(Corpus.generate(spark, 20, 2), program, out, 4)

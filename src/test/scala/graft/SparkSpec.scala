@@ -10,7 +10,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Path}
 import scala.collection.mutable.ArrayBuffer
 
 class SparkSpec extends AnyFunSuite {
@@ -30,12 +29,6 @@ class SparkSpec extends AnyFunSuite {
       RuleParser.parseStr(Corpus.headRules, errs),
       RuleParser.parseStr(Corpus.corpusRules, errs)))
     assert(errs.isEmpty && p.compileErrors.isEmpty)
-    p
-  }
-
-  def tmpDir(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
     p
   }
 
@@ -73,18 +66,18 @@ class SparkSpec extends AnyFunSuite {
       Seq("media://u1/a", "media://u1/b"))
   }
 
-  test("processColumnarRaw (UnsafeRow emission) equals the typed path exactly") {
-    val dir = tmpDir("graft_raw").toString
+  test("op (UnsafeRow emission) equals the typed path exactly") {
+    val dir = TempDirs.create("graft_raw").toString
     // media spans + mega-doc skew + compile errors all represented
     Corpus.generate(spark, 250, 4, megaEvery = 83).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
     val expected = reference(df.as[Doc].collect().toSeq)
-    val raw = ShadowSpark.processColumnarRaw(df, program)
+    val raw = ShadowSpark.op(df, program)
       .as[DocOut].collect().sortBy(_.doc_id).toSeq
     assert(raw == expected)
     // and the raw rows survive a real columnar write+read round-trip
-    val outDir = tmpDir("graft_raw_out").toString
-    ShadowSpark.processColumnarRaw(df, program).write.mode("overwrite").parquet(outDir)
+    val outDir = TempDirs.create("graft_raw_out").toString
+    ShadowSpark.op(df, program).write.mode("overwrite").parquet(outDir)
     val reread = spark.read.parquet(outDir).as[DocOut].collect().sortBy(_.doc_id).toSeq
     assert(reread == expected)
   }
@@ -109,7 +102,7 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("s2 chunking splits on code points: astral text survives 7-char spans") {
-    val dir = tmpDir("graft_s2").toString
+    val dir = TempDirs.create("graft_s2").toString
     Seq((0L, "a\ud83d\ude00b\u00e9\u4e16 \ud83d\ude00\ud83d\ude00 x", "en", "src0", 0L),
         (1L, "\ud83d\ude00" * 9, "de", "src1", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -131,7 +124,7 @@ class SparkSpec extends AnyFunSuite {
   test("lineage: one commit record per run, counts and ranges add up") {
     val docs = Corpus.generate(spark, 500, 5)
     def written(): Commit = {
-      val path = tmpDir("graft_lineage").toString
+      val path = TempDirs.create("graft_lineage").toString
       assert(ShadowSpark.writeResumable(docs, program, path, 4) == (0 until 4))
       val Seq(c) = ShadowSpark.commits(path)
       assert(c.run == 0 && c.buckets == (0 until 4) && c.n_buckets == 4, c)
@@ -153,14 +146,14 @@ class SparkSpec extends AnyFunSuite {
     val nBuckets = 8
 
     // reference output: one clean full run
-    val refPath = tmpDir("graft_ref").toString
+    val refPath = TempDirs.create("graft_ref").toString
     val wrote = ShadowSpark.writeResumable(docs, program, refPath, nBuckets)
     assert(wrote.sorted == (0 until nBuckets))
     val reference = readRuns(refPath)
 
     // simulated failure: a run that committed all but 3 buckets, made by
     // re-committing the reference rows of the other 5
-    val crashPath = tmpDir("graft_crash").toString
+    val crashPath = TempDirs.create("graft_crash").toString
     val lost = Seq(1, 4, 6)
     ShadowSpark.commitRun(
       spark.read.parquet(refPath).drop("run").where(!ShadowSpark.bucketOf(nBuckets).isin(lost: _*)),
@@ -181,7 +174,7 @@ class SparkSpec extends AnyFunSuite {
     val nBuckets = 4
 
     // the state a driver killed between the data write and the rename leaves
-    val path = tmpDir("graft_staged").toString
+    val path = TempDirs.create("graft_staged").toString
     val staged = java.nio.file.Paths.get(path, "_staging", "crashed")
     ShadowSpark.op(docs.toDF(), program).write.parquet(staged.toString)
     def parquetFiles = staged.toFile.list().count(_.endsWith(".parquet"))
@@ -195,7 +188,7 @@ class SparkSpec extends AnyFunSuite {
 
   test("resumable writer: a run with a different bucket count is refused") {
     val docs = Corpus.generate(spark, 100, 2)
-    val path = tmpDir("graft_nbuckets").toString
+    val path = TempDirs.create("graft_nbuckets").toString
     assert(ShadowSpark.writeResumable(docs, program, path, 8) == (0 until 8))
     intercept[IllegalArgumentException](ShadowSpark.writeResumable(docs, program, path, 16))
     assert(spark.read.parquet(path).count() == 100)

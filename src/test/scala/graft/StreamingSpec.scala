@@ -27,7 +27,7 @@ class StreamingSpec extends AnyFunSuite {
       RuleParser.parseStr(Corpus.headRules, errs),
       RuleParser.parseStr(Corpus.corpusRules, errs)))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = TempDirs.create("graft_stream").toString
     Corpus.generate(spark, 120, 3).write.mode("overwrite").parquet(dir)
 
     val q = StreamingExtract.stream(spark, dir, program)
@@ -45,7 +45,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermarked windowed aggregation over a stream matches the batch twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    val dir = TempDirs.create("graft_events").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .write.mode("overwrite").parquet(dir)
     val streamDf = spark.readStream
@@ -143,7 +143,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming dedup (watermark-bounded state) emits exactly the batch-distinct keys") {
     import graft.streaming.Sessionize
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val dir = TempDirs.create("graft_sdedup").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .write.mode("overwrite").parquet(dir)
     val stream = spark.readStream
@@ -174,7 +174,7 @@ class StreamingSpec extends AnyFunSuite {
     val lastIdx = all.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
     val closed = all.filterNot { case (u, i, _, _) => lastIdx(u) == i }
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = TempDirs.create("graft_sess").toString
     eventsDf.select("user_id", "ts", "value").write.mode("overwrite").parquet(dir)
     val stream = spark.readStream
       .schema(spark.read.parquet(dir).schema).parquet(dir)
