@@ -492,13 +492,15 @@ object Bench {
          |end-to-end (the oracle reconstructs the engine's full rewritten
          |HTML + extraction JSON by string concatenation).
          |
-         |Resume correctness + lineage: SparkSpec exercises the run-committed
-         |writer (each call stages its files and publishes them as `run=N`
-         |with one atomic rename; a rerun after a partial commit recomputes
-         |only the uncommitted buckets; output identical) and the lineage
-         |record committed with each run (doc range, count, checksum, error
-         |rows, wall ms). Iceberg is not on the classpath — the one rename
-         |per run stands in for a snapshot commit (SURVEY.md §7.0).
+         |Resume correctness + lineage: SparkSpec exercises the committed
+         |writer (each call stages its files beside the output path and
+         |publishes them as the path with one atomic rename; a rerun on a
+         |committed path writes nothing; a racing writer cannot commit a
+         |second copy; a crash before the commit leaves the path
+         |uncommitted) and the lineage record committed with the output
+         |(doc range, count, checksum, error rows, wall ms). Iceberg is not
+         |on the classpath — the one rename stands in for a snapshot commit
+         |(SURVEY.md §7.0).
          |
          |Per-query seconds (sf dir `$sfDir`, local[$cpus]):
          |

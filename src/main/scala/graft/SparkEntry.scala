@@ -69,13 +69,6 @@ object SparkEntry {
   private def events(spark: SparkSession, dir: String): DataFrame =
     sourceTable(spark, s"$dir/events.parquet")
 
-  private def compile(rules: Seq[String], config: EngineConfig = EngineConfig()): RuleProgram = {
-    val errs = new ArrayBuffer[String]
-    val parsed = rules.map(RuleParser.parseStr(_, errs))
-    val p = RuleCompiler.compile(parsed, config)
-    p.copy(compileErrors = errs.toVector ++ p.compileErrors)
-  }
-
   /** The engine operator over (doc_id string, h html) rows: one html span
     * per doc, or `chunk`-code-point spans when `chunk` > 0 (chunk-invariance
     * path; code points, because a lone surrogate would not survive the
@@ -102,7 +95,7 @@ object SparkEntry {
                         chunk: Int = 0): DataFrame = {
     val input = documents(spark, dir)
       .select(col("doc_id").cast("string").as("doc_id"), tplCol(template).as("h"))
-    engineOn(input, compile(rules, config), chunk)
+    engineOn(input, RuleCompiler.compileJson(rules, config), chunk)
       .select("doc_id", "html", "data_json", "errs")
       .orderBy("doc_id")
   }
@@ -187,7 +180,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val docs = Corpus.generate(spark, 200, 8, megaEvery = 100)
-    val program = compile(Seq(Corpus.headRules, Corpus.corpusRules))
+    val program = RuleCompiler.compileJson(Seq(Corpus.headRules, Corpus.corpusRules))
     ShadowSpark.process(docs, program).toDF()
       .select(col("doc_id"), size(col("spans")).as("n_spans"),
         length(col("data_json")).as("json_len"), size(col("errors")).as("n_errors"))
@@ -206,7 +199,7 @@ object SparkEntry {
       // engine output spans -> rows via the built-in explode Generator
       val input = documents(s, dir)
         .select(col("doc_id").cast("string").as("doc_id"), tplCol(tplMain).as("h"))
-      engineOn(input, compile(Seq(rulesHead, rulesMain)))
+      engineOn(input, RuleCompiler.compileJson(Seq(rulesHead, rulesMain)))
         .select(col("doc_id"), explode(col("spans")).as("sp"))
         .groupBy("doc_id")
         .agg(count(when(col("sp.kind") === "html", 1)).as("n_html"),
@@ -642,7 +635,7 @@ object SparkEntry {
     // with the relational layer and that extraction is byte-faithful
     // through the JSON round-trip.
     "pipe3_extract_quality_dedup" -> ((s, dir) => {
-      val program = compile(Seq(
+      val program = RuleCompiler.compileJson(Seq(
         """{ "s": "div.nav", "data": { "path": "m", "values": { "l": {"source": "Attribute", "name": "data-lang"} } } }""",
         """{ "s": "p.art", "data": { "path": "d", "values": { "t": {"source": "Contents"} } } }"""))
       val input = documents(s, dir).select(col("doc_id").cast("string").as("doc_id"),
@@ -666,7 +659,7 @@ object SparkEntry {
     // engine fidelity, JSON round-trip, posexplode, native resolution
     // expressions — every link individually oracled.
     "pipe4_extract_outlinks" -> ((s, dir) => {
-      val program = compile(Seq(
+      val program = RuleCompiler.compileJson(Seq(
         """{ "s": "a", "data": { "path": "links.", "values": { "h": {"source": "Attribute", "name": "href"} } } }"""))
       // the page's base URL and html are functions of doc_id
       def a(id: Column): Column = (id % 7).cast("int")

@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.core.{Doc, DocOut, Span, SpanKinds}
 import graft.html.{Arena, HtmlParser}
-import graft.rules.{DataDef, EditOp, RuleNode, ValueSource}
+import graft.rules.{DataDef, EditOp, RuleNode, RuleParser, ValueSource}
 import graft.selector.{SelectorList, SelectorMatcher, SelectorParser}
 
 import java.util.regex.{Matcher, Pattern, PatternSyntaxException}
@@ -48,6 +48,14 @@ final case class RuleProgram(
     extends Serializable
 
 object RuleCompiler {
+
+  /** Parses each rules JSON document and compiles them together; parse
+    * errors come first in `compileErrors`. */
+  def compileJson(rules: Seq[String], config: EngineConfig = EngineConfig()): RuleProgram = {
+    val errs = new ArrayBuffer[String]
+    val p = compile(rules.map(RuleParser.parseStr(_, errs)), config)
+    p.copy(compileErrors = errs.toVector ++ p.compileErrors)
+  }
 
   /** Port of ShadowApi::parse / parse_rec / parse_one
     * (shadow_api.rs:129-337). Quirks preserved: ids consumed even by

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.core.SpanKinds
 import graft.engine.{RuleCompiler, ShadowEngine}
-import graft.rules.RuleParser
 import graft.spark.ShadowSpark
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -11,8 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.collection.mutable.ArrayBuffer
 
 /** SQL surface for the extraction engine (SURVEY.md §4.3):
   * `shadow_extract(spans, rules_json)` over the canonical
@@ -48,12 +45,8 @@ case class ShadowExtractExpr(left: Expression, right: Expression)
     }
   }
 
-  @transient private lazy val engine: ShadowEngine = {
-    val errs = new ArrayBuffer[String]
-    val rules = right.eval(null).asInstanceOf[UTF8String].toString
-    val p = RuleCompiler.compile(Seq(RuleParser.parseStr(rules, errs)))
-    new ShadowEngine(p.copy(compileErrors = errs.toVector ++ p.compileErrors))
-  }
+  @transient private lazy val engine: ShadowEngine = new ShadowEngine(
+    RuleCompiler.compileJson(Seq(right.eval(null).asInstanceOf[UTF8String].toString)))
 
   @transient private lazy val decoder = new ShadowSpark.SpanStreamDecoder
 

@@ -16,21 +16,11 @@ import org.apache.spark.sql.types.DecimalType
 object Dedup {
 
   /** The JVM's single local-mode checkpoint dir (see connectedComponents):
-    * created on first use, cleaned by one shutdown hook. The Files.walk
-    * stream is closed (try/finally) — a leaked stream holds directory
-    * handles for the hook's whole run. */
+    * created on first use, deleted tree and all by one shutdown hook. */
   private lazy val localCkptDir: java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        val walk = java.nio.file.Files.walk(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } finally walk.close()
-      } catch { case _: java.io.IOException => () }))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)))
     dir
   }
 
@@ -186,7 +176,10 @@ object Dedup {
     * are star-shaped around their anchors by construction, so 2-4
     * iterations in practice; `maxIter` bounds adversarial chains). All
     * arithmetic is min over int64 — deterministic, externally replayable
-    * (recursive CTE). */
+    * (recursive CTE).
+    *
+    * `nodes` must be distinct: a repeated node gets one output row per
+    * copy. (A `.distinct()` here would add a shuffle to every call.) */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame, maxIter: Int = 20): DataFrame = {
     // RELIABLE checkpoints (not localCheckpoint): localCheckpoint stores
     // blocks on executors AND truncates lineage, so one lost executor

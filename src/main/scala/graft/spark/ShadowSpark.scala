@@ -10,17 +10,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DataFrameBridge
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
-/** One committed run of `ShadowSpark.writeResumable`, as stored in
-  * `run=N/_graft_commit.json`: the doc-hash buckets it wrote (of
-  * `n_buckets`) and the lineage of its write — row count, doc_id range,
-  * an order-free checksum of (doc_id, data_json), rows with errors and
-  * the write's wall time. */
+/** The commit of one `ShadowSpark.writeResumable` output, as stored in
+  * `path/_graft_commit.json`: the lineage of its write — row count,
+  * doc_id range, an order-free checksum of (doc_id, data_json), rows with
+  * errors and the write's wall time. */
 final case class Commit(
-    run: Int,
-    buckets: Seq[Int],
-    n_buckets: Int,
     n_docs: Long,
     doc_lo: String,
     doc_hi: String,
@@ -39,13 +34,12 @@ final case class Commit(
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
   *    an OPTIONAL salted repartition spreads pathological mega-docs;
-  *  - each `writeResumable` call writes one run and commits it with one
-  *    rename of its staging directory; the run's manifest (`Commit`)
-  *    names the xxhash64(doc_id)%N buckets it covers, so a re-run
-  *    recomputes only uncommitted buckets, and carries the lineage,
-  *    observed on the write itself — no accumulator, no second pass
-  *    (sandbox stand-in for Iceberg/Delta snapshot commits; the writer
-  *    sits behind this object so a real catalog is a drop-in).
+  *  - `writeResumable` writes an output path once and commits it with one
+  *    rename of its staging directory onto the path; the manifest
+  *    (`Commit`) carries the lineage, observed on the write itself — no
+  *    accumulator, no second pass (local-filesystem stand-in for
+  *    Iceberg/Delta snapshot commits; the writer sits behind this object
+  *    so a real catalog is a drop-in).
   */
 object ShadowSpark {
 
@@ -263,43 +257,44 @@ object ShadowSpark {
   def repartitionByDoc(docs: Dataset[Doc], parallelism: Int): Dataset[Doc] =
     docs.repartition(parallelism, xxhash64(col("doc_id")))
 
-  // ---------------- resumable run writer ----------------
+  // ---------------- committed writer ----------------
 
-  def bucketOf(nBuckets: Int) = pmod(xxhash64(col("doc_id")), lit(nBuckets))
+  /** The doc-hash bucket, `xxhash64(doc_id) mod n`. */
+  def bucketOf(n: Int) = pmod(xxhash64(col("doc_id")), lit(n))
 
   private val ManifestName = "_graft_commit.json"
-  private val RunDir = "run=(\\d+)".r
   private lazy val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  /** The committed runs under `path`, in run order. */
-  def commits(path: String): Seq[Commit] = {
-    val root = Paths.get(path)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val ls = Files.list(root)
-    try ls.iterator().asScala.toSeq
-      .collect { case d if RunDir.matches(d.getFileName.toString) => d.resolve(ManifestName) }
-      .map(m => json.readValue(m.toFile, classOf[Commit]))
-      .sortBy(_.run)
-    finally ls.close()
+  /** The commit of `path`, if `path` is committed. */
+  def commit(path: String): Option[Commit] = {
+    val m = Paths.get(path, ManifestName)
+    if (Files.exists(m)) Some(json.readValue(m.toFile, classOf[Commit])) else None
   }
 
-  def committedBuckets(path: String): Set[Int] = commits(path).flatMap(_.buckets).toSet
-
-  /** Writes `out` (DocOut columns) as the next run under `path` and commits
-    * it: the rows go to a fresh `_staging/<uuid>` directory, the lineage is
-    * observed on that same write (a result stage, so a retried task counts
-    * once), `_graft_commit.json` records it with `buckets`, and one atomic
-    * rename publishes the directory as `run=N`. A committed run is never
-    * empty (it holds its manifest), so a racing writer's rename onto the
-    * same N fails instead of replacing it. On any failure this call's
-    * staging directory is deleted; a crashed driver leaves it under
-    * `_staging`, which readers skip like every `_`-prefixed path. */
-  private[graft] def commitRun(out: DataFrame, path: String, buckets: Seq[Int], nBuckets: Int): Commit = {
-    val staging = Paths.get(path, "_staging", java.util.UUID.randomUUID().toString)
+  /** Writes DocOut rows for every doc to `path` and commits them, unless
+    * `path` is already committed. The rows go to a fresh hidden sibling
+    * `.<name>._staging-<uuid>` (Spark's reader skips `.`- and
+    * `_`-prefixed paths), the lineage is observed on that same write (a
+    * result stage, so a retried task counts once), `_graft_commit.json`
+    * records it, and one atomic rename publishes the staging directory as
+    * `path` itself. A rename onto a non-empty directory fails, so a writer
+    * racing another onto the same `path` throws instead of committing a
+    * second copy. On any failure this call's staging directory is deleted;
+    * a crashed driver leaves it beside `path`, which stays uncommitted.
+    * Returns the runs this call committed: `Seq(0)`, or empty when `path`
+    * was already committed.
+    *
+    * At real scale the commit would be a put-if-absent in a table log
+    * (Delta/Iceberg); neither is on the classpath (SURVEY.md §7.0).
+    */
+  def writeResumable(docs: Dataset[Doc], program: RuleProgram, path: String): Seq[Int] = {
+    if (commit(path).isDefined) return Seq.empty
+    val target = Paths.get(path).toAbsolutePath
+    val staging = target.resolveSibling(s".${target.getFileName}._staging-${java.util.UUID.randomUUID()}")
     try {
       val lineage = Observation()
       val t0 = System.nanoTime()
-      out.observe(lineage,
+      op(docs.toDF(), program).observe(lineage,
         count(lit(1)).as("n_docs"),
         min("doc_id").as("doc_lo"),
         max("doc_id").as("doc_hi"),
@@ -310,45 +305,11 @@ object ShadowSpark {
       val wallMs = (System.nanoTime() - t0) / 1000000L
       val m = lineage.get
       def get[T](k: String, empty: T): T = Option(m(k)).fold(empty)(_.asInstanceOf[T])
-      val c = Commit(commits(path).map(_.run + 1).maxOption.getOrElse(0), buckets.sorted, nBuckets,
-        get("n_docs", 0L), get("doc_lo", ""), get("doc_hi", ""), get("checksum", 0L),
-        get("n_errors", 0L), wallMs)
+      val c = Commit(get("n_docs", 0L), get("doc_lo", ""), get("doc_hi", ""),
+        get("checksum", 0L), get("n_errors", 0L), wallMs)
       Files.write(staging.resolve(ManifestName), json.writeValueAsBytes(c))
-      Files.move(staging, Paths.get(path, s"run=${c.run}"), StandardCopyOption.ATOMIC_MOVE)
-      c
+      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+      Seq(0)
     } finally FileUtils.deleteQuietly(staging.toFile) // gone after the rename
-  }
-
-  /** Write DocOut rows for the doc-hash buckets (`bucketOf(nBuckets)`) no
-    * earlier run under `path` committed, as one new run (`commitRun`). On
-    * re-run after a failure, committed buckets are skipped: their input
-    * rows are filtered out BEFORE the engine runs, so nothing is
-    * recomputed. Every run of a path must use the same `nBuckets`.
-    * Returns the buckets written this run.
-    *
-    * At real scale the input table would be Iceberg-partitioned by the same
-    * bucket expression, so the resume filter prunes input partitions rather
-    * than scanning them (documented deviation: no Iceberg jar in sandbox —
-    * SURVEY.md §7.0).
-    */
-  def writeResumable(
-      docs: Dataset[Doc],
-      program: RuleProgram,
-      path: String,
-      nBuckets: Int = 64): Seq[Int] = {
-    val prior = commits(path)
-    prior.find(_.n_buckets != nBuckets).foreach { c =>
-      throw new IllegalArgumentException(
-        s"$path run ${c.run} was bucketed by ${c.n_buckets}, not $nBuckets")
-    }
-    val done = prior.flatMap(_.buckets).toSet
-    val todo = (0 until nBuckets).filterNot(done.contains)
-    if (todo.isEmpty) return Seq.empty
-
-    val remaining =
-      if (done.isEmpty) docs
-      else docs.where(!bucketOf(nBuckets).isin(done.toSeq.map(Integer.valueOf): _*))
-    commitRun(op(remaining.toDF(), program), path, todo, nBuckets)
-    todo
   }
 }

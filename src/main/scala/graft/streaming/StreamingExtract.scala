@@ -12,26 +12,23 @@ import org.apache.spark.sql.Dataset
   * streaming mode is a pure stateless map over a streaming Dataset[Doc]:
   * no watermarks, no state store, no output-mode constraints. A continuous
   * feed of the same (doc_id, spans) table becomes
-  * `spark.readStream.schema(docSchema).parquet(dir)` -> transform ->
-  * `writeStream` with exactly the same per-row semantics as batch
-  * (verified by StreamingSpec against the batch output).
+  * `spark.readStream.schema(docSchema).parquet(dir)` -> the engine
+  * operator -> `writeStream` with exactly the same per-row semantics as
+  * batch (verified by StreamingSpec against the batch output).
   */
 object StreamingExtract {
 
   val docSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[Doc].schema
 
-  /** Works on both batch and streaming Datasets: the same engine operator
-    * as batch (`ShadowSpark.process`), planned into each micro-batch. */
-  def transform(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] =
-    ShadowSpark.process(docs, program)
-
   /** Streaming entry: read a directory of (doc_id, spans) parquet as a
-    * stream and extract. Caller attaches the sink:
+    * stream and extract with the same engine operator as batch
+    * (`ShadowSpark.process`), planned into each micro-batch. Caller
+    * attaches the sink:
     * `stream(spark, dir, program).writeStream.format(...)...start()`. */
   def stream(spark: org.apache.spark.sql.SparkSession, dir: String,
              program: RuleProgram): Dataset[DocOut] = {
     import spark.implicits._
-    transform(spark.readStream.schema(docSchema).parquet(dir).as[Doc], program)
+    ShadowSpark.process(spark.readStream.schema(docSchema).parquet(dir).as[Doc], program)
   }
 }

@@ -11,11 +11,8 @@ import scala.collection.mutable.ArrayBuffer
 class EngineEdgeSpec extends AnyFunSuite {
 
   def run(html: String, rules: String*): (String, String, Seq[String]) = {
-    val errs = new ArrayBuffer[String]
-    val parsed = rules.map(RuleParser.parseStr(_, errs))
-    val program = RuleCompiler.compile(parsed, EngineConfig(dataFormatter = _ => ""))
-    val p2 = program.copy(compileErrors = errs.toVector ++ program.compileErrors)
-    val out = new ShadowEngine(p2).process(Doc("t", Seq(Span(SpanKinds.Html, html, "", 0))))
+    val program = RuleCompiler.compileJson(rules, EngineConfig(dataFormatter = _ => ""))
+    val out = new ShadowEngine(program).process(Doc("t", Seq(Span(SpanKinds.Html, html, "", 0))))
     (out.spans.filter(s => s.kind != SpanKinds.Media).map(_.text).mkString, out.data_json, out.errors)
   }
 

@@ -228,7 +228,7 @@ class PlanSpec extends AnyFunSuite {
     val out = TempDirs.create("graft_sink").toString
     spark.listenerManager.register(listener)
     val p = try {
-      ShadowSpark.writeResumable(Corpus.generate(spark, 20, 2), program, out, 4)
+      ShadowSpark.writeResumable(Corpus.generate(spark, 20, 2), program, out)
       scala.concurrent.Await.result(written.future, 30.seconds)
     } finally spark.listenerManager.unregister(listener)
     object aqe extends AdaptiveSparkPlanHelper

@@ -125,10 +125,8 @@ class SparkSpec extends AnyFunSuite {
     val docs = Corpus.generate(spark, 500, 5)
     def written(): Commit = {
       val path = TempDirs.create("graft_lineage").toString
-      assert(ShadowSpark.writeResumable(docs, program, path, 4) == (0 until 4))
-      val Seq(c) = ShadowSpark.commits(path)
-      assert(c.run == 0 && c.buckets == (0 until 4) && c.n_buckets == 4, c)
-      c
+      assert(ShadowSpark.writeResumable(docs, program, path) == Seq(0))
+      ShadowSpark.commit(path).get
     }
     val c = written()
     assert(c.n_docs == 500)
@@ -138,60 +136,63 @@ class SparkSpec extends AnyFunSuite {
     assert(written().checksum == c.checksum)
   }
 
-  def readRuns(path: String): Seq[DocOut] =
-    spark.read.parquet(path).drop("run").as[DocOut].collect().sortBy(_.doc_id).toSeq
+  def readOut(path: String): Seq[DocOut] =
+    spark.read.parquet(path).as[DocOut].collect().sortBy(_.doc_id).toSeq
 
-  test("resumable writer: rerun recomputes only uncommitted buckets, output identical") {
+  test("resumable writer: a rerun on a committed path writes nothing, output identical") {
     val docs = Corpus.generate(spark, 400, 4)
-    val nBuckets = 8
+    val path = TempDirs.create("graft_rerun").toString
+    assert(ShadowSpark.writeResumable(docs, program, path) == Seq(0))
+    val first = ShadowSpark.commit(path)
+    assert(first.isDefined)
 
-    // reference output: one clean full run
-    val refPath = TempDirs.create("graft_ref").toString
-    val wrote = ShadowSpark.writeResumable(docs, program, refPath, nBuckets)
-    assert(wrote.sorted == (0 until nBuckets))
-    val reference = readRuns(refPath)
-
-    // simulated failure: a run that committed all but 3 buckets, made by
-    // re-committing the reference rows of the other 5
-    val crashPath = TempDirs.create("graft_crash").toString
-    val lost = Seq(1, 4, 6)
-    ShadowSpark.commitRun(
-      spark.read.parquet(refPath).drop("run").where(!ShadowSpark.bucketOf(nBuckets).isin(lost: _*)),
-      crashPath, (0 until nBuckets).diff(lost), nBuckets)
-    assert(ShadowSpark.committedBuckets(crashPath).size == nBuckets - lost.size)
-
-    // resume: must write exactly the lost buckets
-    val rewrote = ShadowSpark.writeResumable(docs, program, crashPath, nBuckets)
-    assert(rewrote.sorted == lost)
-    assert(readRuns(crashPath) == reference)
-
-    // fully committed -> nothing to do
-    assert(ShadowSpark.writeResumable(docs, program, crashPath, nBuckets).isEmpty)
+    assert(ShadowSpark.writeResumable(docs, program, path).isEmpty)
+    assert(ShadowSpark.commit(path) == first)
+    assert(readOut(path) == reference(docs.collect().toSeq))
   }
 
   test("resumable writer: a crash before the commit leaves staging that readers ignore") {
     val docs = Corpus.generate(spark, 200, 2)
-    val nBuckets = 4
 
-    // the state a driver killed between the data write and the rename leaves
-    val path = TempDirs.create("graft_staged").toString
-    val staged = java.nio.file.Paths.get(path, "_staging", "crashed")
+    // the state a driver killed between the data write and the rename
+    // leaves: a staging directory beside the uncommitted path
+    val root = TempDirs.create("graft_staged")
+    val path = root.resolve("out").toString
+    val staged = root.resolve(".out._staging-crashed")
     ShadowSpark.op(docs.toDF(), program).write.parquet(staged.toString)
     def parquetFiles = staged.toFile.list().count(_.endsWith(".parquet"))
     assert(parquetFiles > 0)
-    assert(ShadowSpark.committedBuckets(path).isEmpty)
+    assert(ShadowSpark.commit(path).isEmpty)
 
-    assert(ShadowSpark.writeResumable(docs, program, path, nBuckets) == (0 until nBuckets))
-    assert(readRuns(path) == reference(docs.collect().toSeq))
+    assert(ShadowSpark.writeResumable(docs, program, path) == Seq(0))
+    assert(readOut(path) == reference(docs.collect().toSeq))
     assert(parquetFiles > 0)
   }
 
-  test("resumable writer: a run with a different bucket count is refused") {
-    val docs = Corpus.generate(spark, 100, 2)
-    val path = TempDirs.create("graft_nbuckets").toString
-    assert(ShadowSpark.writeResumable(docs, program, path, 8) == (0 until 8))
-    intercept[IllegalArgumentException](ShadowSpark.writeResumable(docs, program, path, 16))
-    assert(spark.read.parquet(path).count() == 100)
+  test("resumable writer: a racing writer cannot commit a second copy") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val n = 200
+    val docs = Corpus.generate(spark, n, 1)
+    val root = TempDirs.create("graft_race")
+    val path = root.resolve("out").toString
+    RaceGate.reset()
+    // writer B: one task that blocks on its first row until released
+    val gated = docs.map { d => RaceGate.pass(); d }
+    val b = Future(ShadowSpark.writeResumable(gated, program, path))(ExecutionContext.global)
+    val bResult = try {
+      assert(RaceGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // writer A starts after B and commits first
+      assert(ShadowSpark.writeResumable(docs, program, path).nonEmpty)
+      RaceGate.release.countDown()
+      scala.util.Try(Await.result(b, 120.seconds))
+    } finally RaceGate.release.countDown()
+
+    val out = spark.read.parquet(path)
+    assert(out.count() == n)
+    assert(bResult.fold(_ => true, _.isEmpty), bResult)
+    assert(out.columns.toSeq == Seq("doc_id", "spans", "data_json", "errors"))
+    assert(root.toFile.list().toSeq == Seq("out")) // B's staging is deleted
   }
 
   // ---- training-pipeline operators ----
@@ -595,5 +596,22 @@ class SparkSpec extends AnyFunSuite {
     val rows = df.collect()
     assert(rows.length == 200)
     assert(rows.forall(_.getAs[Int]("n_errors") == 0))
+  }
+}
+
+/** The latches of the racing-writer spec: a Scala object, so the task's
+  * closure reaches the same instance in local mode. */
+object RaceGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def pass(): Unit = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
   }
 }
