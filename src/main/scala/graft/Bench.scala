@@ -2,8 +2,7 @@ package graft
 
 import graft.core.Doc
 import graft.corpus.Corpus
-import graft.engine.RuleCompiler
-import graft.rules.RuleParser
+import graft.engine.{RuleCompiler, RuleProgram}
 import graft.spark.ShadowSpark
 import org.apache.spark.sql.SparkSession
 
@@ -28,6 +27,14 @@ import scala.collection.mutable.ArrayBuffer
   *    (spark.sql.files.maxPartitionBytes).
   */
 object Bench {
+
+  /** The corpus head + main rules, compiled; a parse or compile error
+    * stops the bench rather than timing a partial program. */
+  private[graft] def corpusProgram(): RuleProgram = {
+    val p = RuleCompiler.compileJson(Seq(Corpus.headRules, Corpus.corpusRules))
+    require(p.compileErrors.isEmpty, s"corpus rules: ${p.compileErrors.mkString("; ")}")
+    p
+  }
 
   private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -121,10 +128,7 @@ object Bench {
     Corpus.generate(spark0, nDocs, 128).write.mode("overwrite").parquet(corpusPath)
     spark0.stop()
 
-    val errs = new ArrayBuffer[String]
-    val program = RuleCompiler.compile(Seq(
-      RuleParser.parseStr(Corpus.headRules, errs),
-      RuleParser.parseStr(Corpus.corpusRules, errs)))
+    val program = corpusProgram()
 
     // one measured wall of read->extract->count at the given parallelism.
     // default inproc: JIT warmup is amortized across all measurements and
@@ -613,10 +617,7 @@ object BenchChild {
     val Array(corpusPath, nDocsS, cpusS) = args
     val nDocs = nDocsS.toLong
     val cpus = cpusS.toInt
-    val errs = new ArrayBuffer[String]
-    val program = RuleCompiler.compile(Seq(
-      RuleParser.parseStr(Corpus.headRules, errs),
-      RuleParser.parseStr(Corpus.corpusRules, errs)))
+    val program = Bench.corpusProgram()
     val s = Bench.session(cpus)
     try {
       ShadowSpark.processColumnar(s.read.parquet(corpusPath).limit(60000), program).count()

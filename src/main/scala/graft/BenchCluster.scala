@@ -1,12 +1,7 @@
 package graft
 
-import graft.corpus.Corpus
-import graft.engine.RuleCompiler
-import graft.rules.RuleParser
 import graft.spark.ShadowSpark
 import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable.ArrayBuffer
 
 /** Scaling measurement on a REAL multi-executor cluster, sandbox edition:
   * `local-cluster[n, 4, mem]` forks n genuine executor JVMs (own heap, GC,
@@ -47,10 +42,7 @@ object BenchCluster {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     try {
-      val errs = new ArrayBuffer[String]
-      val program = RuleCompiler.compile(Seq(
-        RuleParser.parseStr(Corpus.headRules, errs),
-        RuleParser.parseStr(Corpus.corpusRules, errs)))
+      val program = Bench.corpusProgram()
       val progBc = s.sparkContext.broadcast(program)
 
       // SAME-TOPOLOGY pure-engine ceiling: the engine alone over

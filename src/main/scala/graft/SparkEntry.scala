@@ -54,11 +54,15 @@ object SparkEntry {
     * would cache in the session catalog. Reusing the resolved DataFrame
     * (an immutable logical plan) is the same metadata caching; every
     * query still scans the parquet data itself — no rows, results or
-    * intermediates are cached. */
-  private val sourceCache =
+    * intermediates are cached. A stopped session's entries can never
+    * run again, so each lookup drops them: a long-lived JVM that runs
+    * many sessions does not pin every one it has stopped. */
+  private[graft] val sourceCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def sourceTable(spark: SparkSession, path: String): DataFrame =
+  private def sourceTable(spark: SparkSession, path: String): DataFrame = {
+    sourceCache.keySet.removeIf(_._1.sparkContext.isStopped)
     sourceCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+  }
 
   private def documents(spark: SparkSession, dir: String): DataFrame =
     sourceTable(spark, s"$dir/documents.parquet")

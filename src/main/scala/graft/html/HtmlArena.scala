@@ -226,10 +226,6 @@ final class Arena(var src: String) {
       }
     }
   }
-
-  /** raw slice of a node as String (tests / cold paths). */
-  def rawString(id: Int): String =
-    if (kind(id) == nMedia) mediaText(rawS(id)) else src.substring(rawS(id), rawE(id))
 }
 
 /** Lowercasing intern pool for tag/attr names: looks up a source region

@@ -854,187 +854,47 @@ object JpegCodec {
 
   // --------------------------------------------------------------- build
 
-  /** DC-only grayscale baseline JPEG: block (br, bc) is the flat value
-    * `clamp(dc(br, bc) + 128)` where dc is quantized with Q(0,0) = 8 (so
-    * dequant/IDCT is exactly the DC value — replayable without a DCT in
-    * sight). Real canonical Huffman tables, real byte stuffing. `dc`
-    * values must lie in [-128, 127]. */
-  def buildJpegDcOnly(w: Int, h: Int, dc: (Int, Int) => Int): Array[Byte] = {
-    require(w > 0 && h > 0, s"buildJpegDcOnly: bad dims ${w}x$h")
-    val out = new ByteArrayOutputStream(w * h / 8 + 512)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    u16(0xffd8) // SOI
-    // APP0/JFIF (some readers want it before anything else)
-    u16(0xffe0); u16(16)
-    "JFIF".getBytes("US-ASCII").foreach(c => u8(c)); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-    // DQT table 0: Q(0,0)=8 (zigzag index 0), all else 16
-    u16(0xffdb); u16(2 + 1 + 64); u8(0x00)
-    u8(8); (1 until 64).foreach(_ => u8(16))
-    // SOF0: 8-bit, 1 component, 1x1 sampling, qtable 0
-    u16(0xffc0); u16(8 + 3); u8(8); u16(h); u16(w); u8(1); u8(1); u8(0x11); u8(0)
-    // DHT DC table 0: 12 symbols (categories 0-11), all at code length 4
-    u16(0xffc4); u16(2 + 17 + 12); u8(0x00)
-    val dcBits = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    dcBits.foreach(u8); (0 until 12).foreach(u8)
-    // DHT AC table 0: single symbol 0x00 (EOB) at code length 2
-    u16(0xffc4); u16(2 + 17 + 1); u8(0x10)
-    val acBits = Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    acBits.foreach(u8); u8(0x00)
-    // SOS
-    u16(0xffda); u16(6 + 2); u8(1); u8(1); u8(0x00); u8(0); u8(63); u8(0)
-    // entropy data: per block, DC category code (4 bits) + diff bits + EOB (2 bits)
-    var bitBuf = 0
-    var bitCnt = 0
-    val body = new ByteArrayOutputStream(w * h / 8)
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> i) & 1)
-        bitCnt += 1
-        if (bitCnt == 8) {
-          body.write(bitBuf & 0xff)
-          if ((bitBuf & 0xff) == 0xff) body.write(0x00) // byte stuffing
-          bitBuf = 0; bitCnt = 0
-        }
-        i -= 1
-      }
-    }
-    val bw = (w + 7) / 8
-    val bh = (h + 7) / 8
-    var pred = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        val v = dc(by, bx)
-        require(v >= -128 && v <= 127, s"dc out of range: $v")
-        val diff = v - pred
-        pred = v
-        val mag = math.abs(diff)
-        var t = 0
-        while ((mag >> t) != 0) t += 1 // category = bit length of |diff|
-        putBits(t, 4) // canonical code for symbol t at length 4 IS t (0..11)
-        if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
-        putBits(0, 2) // AC EOB: canonical single length-2 code = 00
-        bx += 1
-      }
-      by += 1
-    }
-    if (bitCnt > 0) { // pad the final byte with 1s (T.81 F.1.2.3)
-      val pad = (bitBuf << (8 - bitCnt)) | ((1 << (8 - bitCnt)) - 1)
-      body.write(pad & 0xff)
-      if ((pad & 0xff) == 0xff) body.write(0x00)
-    }
-    val bb = body.toByteArray
-    out.write(bb, 0, bb.length)
-    u16(0xffd9) // EOI
-    out.toByteArray
+  private def u8(out: ByteArrayOutputStream, v: Int): Unit = out.write(v & 0xff)
+  private def u16(out: ByteArrayOutputStream, v: Int): Unit = { u8(out, v >> 8); u8(out, v) }
+
+  /** A DHT segment for table `tc` (0x00 = DC 0, 0x10 = AC 0) whose
+    * `symbols` all sit at code length `len`, so the canonical code of
+    * the k-th symbol IS k. */
+  private def dht(out: ByteArrayOutputStream, tc: Int, len: Int, symbols: Seq[Int]): Unit = {
+    u16(out, 0xffc4); u16(out, 2 + 17 + symbols.size); u8(out, tc)
+    (1 to 16).foreach(l => u8(out, if (l == len) symbols.size else 0))
+    symbols.foreach(u8(out, _))
   }
 
-  /** DC-only 4:2:0 YCbCr baseline JPEG: Y sampled 2x2 (full res), Cb/Cr
-    * 1x1 (quarter res) — the real-world chroma-subsampled MCU interleave
-    * (4 Y blocks + Cb + Cr per MCU). Luma block (br, bc) is the flat
-    * value `dcY(br, bc) + 128`; BOTH chroma planes are flat 128 (DC diff
-    * 0 every block), so after ANY conformant upsampling the chroma stays
-    * exactly 128 and RGB = the luma value on every channel — keeping the
-    * whole 4:2:0 path (MCU loop, per-component DC prediction, upsample,
-    * color convert) SQL-replayable: pixel = dcY(r/8, c/8) + 128. Same
-    * Q(0,0)=8 identity trick and canonical Huffman tables as
-    * buildJpegDcOnly. `dcY` values must lie in [-128, 127]. */
-  def buildJpegDcOnly420(w: Int, h: Int, dcY: (Int, Int) => Int): Array[Byte] = {
-    require(w > 0 && h > 0, s"buildJpegDcOnly420: bad dims ${w}x$h")
-    val out = new ByteArrayOutputStream(w * h / 8 + 512)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    u16(0xffd8) // SOI
-    u16(0xffe0); u16(16)
-    "JFIF".getBytes("US-ASCII").foreach(c => u8(c)); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-    // DQT table 0: Q(0,0)=8, rest 16 (all components share it)
-    u16(0xffdb); u16(2 + 1 + 64); u8(0x00)
-    u8(8); (1 until 64).foreach(_ => u8(16))
-    // SOF0: 8-bit, 3 components — Y id 1 sampling 2x2, Cb id 2 1x1, Cr id 3 1x1
-    u16(0xffc0); u16(8 + 9); u8(8); u16(h); u16(w); u8(3)
-    u8(1); u8(0x22); u8(0)
-    u8(2); u8(0x11); u8(0)
-    u8(3); u8(0x11); u8(0)
-    // DHT DC table 0: categories 0-11 at code length 4 (shared)
-    u16(0xffc4); u16(2 + 17 + 12); u8(0x00)
-    val dcBits = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    dcBits.foreach(u8); (0 until 12).foreach(u8)
-    // DHT AC table 0: single EOB symbol at code length 2 (shared)
-    u16(0xffc4); u16(2 + 17 + 1); u8(0x10)
-    val acBits = Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    acBits.foreach(u8); u8(0x00)
-    // SOS: 3 components, all on DC/AC table 0
-    u16(0xffda); u16(6 + 6); u8(3)
-    u8(1); u8(0x00); u8(2); u8(0x00); u8(3); u8(0x00)
-    u8(0); u8(63); u8(0)
-    var bitBuf = 0
-    var bitCnt = 0
-    val body = new ByteArrayOutputStream(w * h / 8)
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> i) & 1)
-        bitCnt += 1
-        if (bitCnt == 8) {
-          body.write(bitBuf & 0xff)
-          if ((bitBuf & 0xff) == 0xff) body.write(0x00) // byte stuffing
-          bitBuf = 0; bitCnt = 0
-        }
-        i -= 1
-      }
-    }
-    def putDcDiff(diff: Int): Unit = {
-      val mag = math.abs(diff)
-      var t = 0
-      while ((mag >> t) != 0) t += 1
-      putBits(t, 4) // canonical code for category t at length 4 IS t
-      if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
-      putBits(0, 2) // AC EOB
-    }
-    val mcusX = (w + 15) / 16
-    val mcusY = (h + 15) / 16
-    var predY = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var bv = 0
-        while (bv < 2) {
-          var bh = 0
-          while (bh < 2) {
-            val v = dcY(my * 2 + bv, mx * 2 + bh)
-            require(v >= -128 && v <= 127, s"dcY out of range: $v")
-            putDcDiff(v - predY)
-            predY = v
-            bh += 1
-          }
-          bv += 1
-        }
-        putDcDiff(0) // Cb block: stays at 0 -> flat 128
-        putDcDiff(0) // Cr block
-        mx += 1
-      }
-      my += 1
-    }
-    if (bitCnt > 0) { // pad the final byte with 1s (T.81 F.1.2.3)
-      val pad = (bitBuf << (8 - bitCnt)) | ((1 << (8 - bitCnt)) - 1)
-      body.write(pad & 0xff)
-      if ((pad & 0xff) == 0xff) body.write(0x00)
-    }
-    val bb = body.toByteArray
-    out.write(bb, 0, bb.length)
-    u16(0xffd9) // EOI
-    out.toByteArray
+  /** The header every DC-only builder writes: SOI, APP0/JFIF (some
+    * readers want it before anything else), DQT table 0 with Q(0,0) = 8
+    * and all else 16, the `sof` frame (8-bit, component ids 1.. with the
+    * given `sampling` bytes, all on qtable 0), then DHT DC table 0 with
+    * categories 0-11 at code length 4 (shared by every component). */
+  private def dcOnlyPreamble(out: ByteArrayOutputStream, sof: Int, w: Int, h: Int,
+                             sampling: Seq[Int]): Unit = {
+    u16(out, 0xffd8) // SOI
+    u16(out, 0xffe0); u16(out, 16) // APP0
+    "JFIF".getBytes("US-ASCII").foreach(c => u8(out, c)); u8(out, 0)
+    u8(out, 1); u8(out, 1); u8(out, 0); u16(out, 1); u16(out, 1); u8(out, 0); u8(out, 0)
+    u16(out, 0xffdb); u16(out, 2 + 1 + 64); u8(out, 0x00) // DQT
+    u8(out, 8); (1 until 64).foreach(_ => u8(out, 16))
+    u16(out, sof); u16(out, 8 + 3 * sampling.size); u8(out, 8); u16(out, h); u16(out, w)
+    u8(out, sampling.size)
+    sampling.zipWithIndex.foreach { case (hv, i) => u8(out, i + 1); u8(out, hv); u8(out, 0) }
+    dht(out, 0x00, 4, 0 until 12)
   }
 
-  /** Entropy-segment bit writer with byte stuffing (shared by the
-    * progressive builder's per-scan segments). */
-  private final class BitWriter(val body: ByteArrayOutputStream) {
+  /** SOS over component ids `ids`, all on DC/AC table 0. */
+  private def sos(out: ByteArrayOutputStream, ids: Seq[Int], ss: Int, se: Int,
+                  ah: Int, al: Int): Unit = {
+    u16(out, 0xffda); u16(out, 6 + 2 * ids.size); u8(out, ids.size)
+    ids.foreach { id => u8(out, id); u8(out, 0x00) }
+    u8(out, ss); u8(out, se); u8(out, (ah << 4) | al)
+  }
+
+  /** Entropy-segment bit writer with byte stuffing. */
+  private final class BitWriter(body: ByteArrayOutputStream) {
     private var buf = 0
     private var cnt = 0
     def putBits(v: Int, n: Int): Unit = {
@@ -1050,6 +910,15 @@ object JpegCodec {
         i -= 1
       }
     }
+    /** A DC difference: its category t (the bit length of |diff|) under
+      * the DC table, whose code for t IS t, then t magnitude bits. */
+    def putDcDiff(diff: Int): Unit = {
+      val mag = math.abs(diff)
+      var t = 0
+      while ((mag >> t) != 0) t += 1
+      putBits(t, 4)
+      if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
+    }
     /** Pad the final partial byte with 1s (T.81 F.1.2.3) at scan end. */
     def flush(): Unit = {
       if (cnt > 0) {
@@ -1059,6 +928,90 @@ object JpegCodec {
         buf = 0; cnt = 0
       }
     }
+  }
+
+  /** DC-only grayscale baseline JPEG: block (br, bc) is the flat value
+    * `clamp(dc(br, bc) + 128)` where dc is quantized with Q(0,0) = 8 (so
+    * dequant/IDCT is exactly the DC value — replayable without a DCT in
+    * sight). Real canonical Huffman tables, real byte stuffing. `dc`
+    * values must lie in [-128, 127]. */
+  def buildJpegDcOnly(w: Int, h: Int, dc: (Int, Int) => Int): Array[Byte] = {
+    require(w > 0 && h > 0, s"buildJpegDcOnly: bad dims ${w}x$h")
+    val out = new ByteArrayOutputStream(w * h / 8 + 512)
+    dcOnlyPreamble(out, 0xffc0, w, h, Seq(0x11))
+    dht(out, 0x10, 2, Seq(0x00)) // AC table 0: only EOB, at code length 2
+    sos(out, Seq(1), 0, 63, 0, 0)
+    // entropy data: per block, DC category code (4 bits) + diff bits + EOB (2 bits)
+    val bw = new BitWriter(out)
+    var pred = 0
+    var by = 0
+    while (by < (h + 7) / 8) {
+      var bx = 0
+      while (bx < (w + 7) / 8) {
+        val v = dc(by, bx)
+        require(v >= -128 && v <= 127, s"dc out of range: $v")
+        bw.putDcDiff(v - pred); bw.putBits(0, 2)
+        pred = v
+        bx += 1
+      }
+      by += 1
+    }
+    bw.flush()
+    u16(out, 0xffd9) // EOI
+    out.toByteArray
+  }
+
+  /** Walk the 4:2:0 MCUs of a `w` x `h` image in scan order: `luma(v)`
+    * for each of an MCU's four Y blocks, v = `dcY` of the block, then
+    * `chroma()` for its Cb and again for its Cr block. */
+  private def walk420(w: Int, h: Int, dcY: (Int, Int) => Int)(luma: Int => Unit)(
+      chroma: () => Unit): Unit = {
+    var my = 0
+    while (my < (h + 15) / 16) {
+      var mx = 0
+      while (mx < (w + 15) / 16) {
+        var bv = 0
+        while (bv < 2) {
+          var bh = 0
+          while (bh < 2) {
+            val v = dcY(my * 2 + bv, mx * 2 + bh)
+            require(v >= -128 && v <= 127, s"dcY out of range: $v")
+            luma(v)
+            bh += 1
+          }
+          bv += 1
+        }
+        chroma(); chroma()
+        mx += 1
+      }
+      my += 1
+    }
+  }
+
+  /** DC-only 4:2:0 YCbCr baseline JPEG: Y sampled 2x2 (full res), Cb/Cr
+    * 1x1 (quarter res) — the real-world chroma-subsampled MCU interleave
+    * (4 Y blocks + Cb + Cr per MCU). Luma block (br, bc) is the flat
+    * value `dcY(br, bc) + 128`; BOTH chroma planes are flat 128 (DC diff
+    * 0 every block), so after ANY conformant upsampling the chroma stays
+    * exactly 128 and RGB = the luma value on every channel — keeping the
+    * whole 4:2:0 path (MCU loop, per-component DC prediction, upsample,
+    * color convert) SQL-replayable: pixel = dcY(r/8, c/8) + 128. Same
+    * Q(0,0)=8 identity trick and canonical Huffman tables as
+    * buildJpegDcOnly. `dcY` values must lie in [-128, 127]. */
+  def buildJpegDcOnly420(w: Int, h: Int, dcY: (Int, Int) => Int): Array[Byte] = {
+    require(w > 0 && h > 0, s"buildJpegDcOnly420: bad dims ${w}x$h")
+    val out = new ByteArrayOutputStream(w * h / 8 + 512)
+    dcOnlyPreamble(out, 0xffc0, w, h, Seq(0x22, 0x11, 0x11))
+    dht(out, 0x10, 2, Seq(0x00)) // AC table 0: only EOB, at code length 2
+    sos(out, Seq(1, 2, 3), 0, 63, 0, 0)
+    val bw = new BitWriter(out)
+    var predY = 0
+    walk420(w, h, dcY) { v => bw.putDcDiff(v - predY); bw.putBits(0, 2); predY = v } {
+      () => bw.putDcDiff(0); bw.putBits(0, 2) // chroma stays at 0 -> flat 128
+    }
+    bw.flush()
+    u16(out, 0xffd9) // EOI
+    out.toByteArray
   }
 
   /** DC-only 4:2:0 YCbCr PROGRESSIVE JPEG (SOF2): the same image
@@ -1081,77 +1034,23 @@ object JpegCodec {
   def buildJpegDcOnly420Progressive(w: Int, h: Int, dcY: (Int, Int) => Int): Array[Byte] = {
     require(w > 0 && h > 0, s"buildJpegDcOnly420Progressive: bad dims ${w}x$h")
     val out = new ByteArrayOutputStream(w * h / 8 + 768)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    u16(0xffd8) // SOI
-    u16(0xffe0); u16(16)
-    "JFIF".getBytes("US-ASCII").foreach(c => u8(c)); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-    // DQT table 0: Q(0,0)=8, rest 16 (all components share it)
-    u16(0xffdb); u16(2 + 1 + 64); u8(0x00)
-    u8(8); (1 until 64).foreach(_ => u8(16))
-    // SOF2: progressive, 8-bit, Y 2x2 + Cb 1x1 + Cr 1x1 on qtable 0
-    u16(0xffc2); u16(8 + 9); u8(8); u16(h); u16(w); u8(3)
-    u8(1); u8(0x22); u8(0)
-    u8(2); u8(0x11); u8(0)
-    u8(3); u8(0x11); u8(0)
-    // DHT DC table 0: categories 0-11 at code length 4 (canonical code
-    // for category t IS t)
-    u16(0xffc4); u16(2 + 17 + 12); u8(0x00)
-    val dcBits = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    dcBits.foreach(u8); (0 until 12).foreach(u8)
-    // DHT AC table 0: the 15 EOB-run symbols r<<4 (r = 0..14) at code
-    // length 4 — canonical code for symbol r<<4 IS r
-    u16(0xffc4); u16(2 + 17 + 15); u8(0x10)
-    val acBits = Array(0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    acBits.foreach(u8); (0 until 15).foreach(r => u8(r << 4))
-    val mcusX = (w + 15) / 16
-    val mcusY = (h + 15) / 16
-    def sos(compSpecs: Seq[(Int, Int)], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      u16(0xffda); u16(6 + 2 * compSpecs.size); u8(compSpecs.size)
-      compSpecs.foreach { case (id, tabs) => u8(id); u8(tabs) }
-      u8(ss); u8(se); u8((ah << 4) | al)
+    dcOnlyPreamble(out, 0xffc2, w, h, Seq(0x22, 0x11, 0x11))
+    // AC table 0: the 15 EOB-run symbols r<<4 (r = 0..14) at code length 4
+    dht(out, 0x10, 4, (0 until 15).map(_ << 4))
+    sos(out, Seq(1, 2, 3), 0, 0, 0, 1)
+    val first = new BitWriter(out)
+    var predY = 0
+    walk420(w, h, dcY) { v => first.putDcDiff((v >> 1) - predY); predY = v >> 1 } {
+      () => first.putDcDiff(0) // chroma DC 0 -> diff 0
     }
-    def putDcDiff(bw: BitWriter, diff: Int): Unit = {
-      val mag = math.abs(diff)
-      var t = 0
-      while ((mag >> t) != 0) t += 1
-      bw.putBits(t, 4)
-      if (t > 0) bw.putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
-    }
-    def dcScan(refine: Boolean): Unit = {
-      val bw = new BitWriter(new ByteArrayOutputStream(w * h / 32 + 64))
-      var predY = 0
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          var bv = 0
-          while (bv < 2) {
-            var bh = 0
-            while (bh < 2) {
-              val v = dcY(my * 2 + bv, mx * 2 + bh)
-              require(v >= -128 && v <= 127, s"dcY out of range: $v")
-              if (refine) bw.putBits(v & 1, 1)
-              else { putDcDiff(bw, (v >> 1) - predY); predY = v >> 1 }
-              bh += 1
-            }
-            bv += 1
-          }
-          // Cb then Cr: DC 0 -> diff 0 (first pass) / refinement bit 0
-          if (refine) { bw.putBits(0, 1); bw.putBits(0, 1) }
-          else { putDcDiff(bw, 0); putDcDiff(bw, 0) }
-          mx += 1
-        }
-        my += 1
-      }
-      bw.flush()
-      val bb = bw.body.toByteArray
-      out.write(bb, 0, bb.length)
-    }
+    first.flush()
+    sos(out, Seq(1, 2, 3), 0, 0, 1, 0)
+    val refine = new BitWriter(out)
+    walk420(w, h, dcY)(v => refine.putBits(v & 1, 1))(() => refine.putBits(0, 1))
+    refine.flush()
     def acScan(compId: Int, nBlocks: Int): Unit = {
-      sos(Seq((compId, 0x00)), 1, 63, 0, 0)
-      val bw = new BitWriter(new ByteArrayOutputStream(16))
+      sos(out, Seq(compId), 1, 63, 0, 0)
+      val bw = new BitWriter(out)
       var n = nBlocks
       while (n > 0) { // one EOB run of (1<<r)+extra blocks, largest first
         val chunk = math.min(n, 32767)
@@ -1162,18 +1061,12 @@ object JpegCodec {
         n -= chunk
       }
       bw.flush()
-      val bb = bw.body.toByteArray
-      out.write(bb, 0, bb.length)
     }
-    sos(Seq((1, 0x00), (2, 0x00), (3, 0x00)), 0, 0, 0, 1)
-    dcScan(refine = false)
-    sos(Seq((1, 0x00), (2, 0x00), (3, 0x00)), 0, 0, 1, 0)
-    dcScan(refine = true)
     acScan(1, ((w + 7) / 8) * ((h + 7) / 8))
     val cw = (w + 1) / 2; val chh = (h + 1) / 2
     acScan(2, ((cw + 7) / 8) * ((chh + 7) / 8))
     acScan(3, ((cw + 7) / 8) * ((chh + 7) / 8))
-    u16(0xffd9) // EOI
+    u16(out, 0xffd9) // EOI
     out.toByteArray
   }
 }

@@ -707,58 +707,8 @@ object MediaCodec {
     * deflate of a deterministic buffer, fixed level). */
   def buildPngPixels(w: Int, h: Int, pixel: (Int, Int, Int) => Int): Array[Byte] = {
     require(w > 0 && h > 0, s"buildPngPixels: bad dims ${w}x$h")
-    val stride = 1 + w * PngBpp
-    val raw = new Array[Byte](h * stride)
-    // current + previous unfiltered scanlines, needed to APPLY the filters
-    var prev = new Array[Byte](w * PngBpp)
-    var cur = new Array[Byte](w * PngBpp)
-    var r = 0
-    while (r < h) {
-      var i = 0
-      while (i < w * PngBpp) {
-        cur(i) = (pixel(r, i / PngBpp, i % PngBpp) & 0xff).toByte
-        i += 1
-      }
-      val ft = r % 5
-      raw(r * stride) = ft.toByte
-      i = 0
-      while (i < w * PngBpp) {
-        val x = cur(i) & 0xff
-        val a = if (i >= PngBpp) cur(i - PngBpp) & 0xff else 0 // left
-        val b = prev(i) & 0xff // up
-        val c = if (i >= PngBpp) prev(i - PngBpp) & 0xff else 0 // up-left
-        val filtered = ft match {
-          case 0 => x
-          case 1 => x - a
-          case 2 => x - b
-          case 3 => x - (a + b) / 2
-          case _ => x - paeth(a, b, c)
-        }
-        raw(r * stride + 1 + i) = (filtered & 0xff).toByte
-        i += 1
-      }
-      val t = prev; prev = cur; cur = t
-      r += 1
-    }
-    buildPng(w, h, Zlib.deflate1(raw))
+    buildPngPasses(w, h, pixel, interlace = 0)
   }
-
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  // Adam7 pass geometry (ISO/IEC 15948 §8.2): start offsets and strides
-  // per pass; each pass is filtered as an independent sub-image.
-  private val A7xStart = Array(0, 4, 0, 2, 0, 1, 0)
-  private val A7yStart = Array(0, 0, 4, 0, 2, 0, 1)
-  private val A7xStep = Array(8, 8, 4, 4, 2, 2, 1)
-  private val A7yStep = Array(8, 8, 8, 4, 4, 2, 2)
-  private def a7PassW(p: Int, w: Int): Int =
-    math.max(0, (w - A7xStart(p) + A7xStep(p) - 1) / A7xStep(p))
-  private def a7PassH(p: Int, h: Int): Int =
-    math.max(0, (h - A7yStart(p) + A7yStep(p) - 1) / A7yStep(p))
 
   /** Adam7-INTERLACED truecolor 8-bit PNG over the same per-pixel
     * formula as buildPngPixels — the progressive layout real web PNGs
@@ -767,48 +717,114 @@ object MediaCodec {
     * against pass-local neighbors). */
   def buildPngPixelsInterlaced(w: Int, h: Int, pixel: (Int, Int, Int) => Int): Array[Byte] = {
     require(w > 0 && h > 0, s"buildPngPixelsInterlaced: bad dims ${w}x$h")
-    val raw = new ByteArrayOutputStream(h * (1 + w * PngBpp) + 64)
-    var p = 0
-    while (p < 7) {
-      val pw = a7PassW(p, w); val ph = a7PassH(p, h)
+    buildPngPasses(w, h, pixel, interlace = 1)
+  }
+
+  private def paeth(a: Int, b: Int, c: Int): Int = {
+    val p = a + b - c
+    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
+    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+  }
+
+  /** PNG row filter `ft` (ISO/IEC 15948 §9.2: None/Sub/Up/Average/Paeth)
+    * over `n` bytes of `bpp`-byte pixels: the unfiltered row at `cur(ci)`
+    * minus its predictor goes to `out(oi)`. The row above is at
+    * `prev(pi)`, or all zero when `pi` < 0. */
+  private def filterRow(ft: Int, cur: Array[Byte], ci: Int, prev: Array[Byte], pi: Int,
+                        out: Array[Byte], oi: Int, n: Int, bpp: Int): Unit = {
+    var j = 0
+    while (j < n) {
+      val x = cur(ci + j) & 0xff
+      val a = if (j >= bpp) cur(ci + j - bpp) & 0xff else 0 // left
+      val b = if (pi >= 0) prev(pi + j) & 0xff else 0 // up
+      val c = if (pi >= 0 && j >= bpp) prev(pi + j - bpp) & 0xff else 0 // up-left
+      val v = ft match {
+        case 0 => x
+        case 1 => x - a
+        case 2 => x - b
+        case 3 => x - (a + b) / 2
+        case _ => x - paeth(a, b, c)
+      }
+      out(oi + j) = v.toByte
+      j += 1
+    }
+  }
+
+  /** The reverse of [[filterRow]]: the filtered row at `src(si)` is
+    * reconstructed into `out(oi)`, whose left neighbours it reads back as
+    * it goes. False when `ft` is not one of the five filter types. */
+  private def unfilterRow(ft: Int, src: Array[Byte], si: Int, prev: Array[Byte], pi: Int,
+                          out: Array[Byte], oi: Int, n: Int, bpp: Int): Boolean = {
+    if (ft > 4) return false
+    var j = 0
+    while (j < n) {
+      val x = src(si + j) & 0xff
+      val a = if (j >= bpp) out(oi + j - bpp) & 0xff else 0
+      val b = if (pi >= 0) prev(pi + j) & 0xff else 0
+      val c = if (pi >= 0 && j >= bpp) prev(pi + j - bpp) & 0xff else 0
+      val v = ft match {
+        case 0 => x
+        case 1 => x + a
+        case 2 => x + b
+        case 3 => x + (a + b) / 2
+        case _ => x + paeth(a, b, c)
+      }
+      out(oi + j) = v.toByte
+      j += 1
+    }
+    true
+  }
+
+  /** One interlace pass (ISO/IEC 15948 §8.2): the pixels at start
+    * (`x0`, `y0`) and step (`dx`, `dy`), filtered as an independent
+    * sub-image of `w(width)` x `h(height)` pixels. */
+  private final case class Pass(x0: Int, y0: Int, dx: Int, dy: Int) {
+    def w(width: Int): Int = math.max(0, (width - x0 + dx - 1) / dx)
+    def h(height: Int): Int = math.max(0, (height - y0 + dy - 1) / dy)
+  }
+  // interlace method 0 (sequential) is the one pass over every pixel
+  private val Passes: Array[Array[Pass]] = Array(
+    Array(Pass(0, 0, 1, 1)),
+    Array(Pass(0, 0, 8, 8), Pass(4, 0, 8, 8), Pass(0, 4, 4, 8), Pass(2, 0, 4, 4),
+      Pass(0, 2, 2, 4), Pass(1, 0, 2, 2), Pass(0, 1, 1, 2)))
+
+  /** Filtered image size: each non-empty pass row carries its own filter byte. */
+  private def pngRawLen(passes: Array[Pass], w: Int, h: Int): Long =
+    passes.iterator.map { p =>
+      val pw = p.w(w).toLong; val ph = p.h(h).toLong
+      if (pw > 0 && ph > 0) ph * (1L + pw * PngBpp) else 0L
+    }.sum
+
+  private def buildPngPasses(w: Int, h: Int, pixel: (Int, Int, Int) => Int,
+                             interlace: Int): Array[Byte] = {
+    val passes = Passes(interlace)
+    val raw = new Array[Byte](pngRawLen(passes, w, h).toInt)
+    var off = 0
+    for (p <- passes) {
+      val pw = p.w(w); val ph = p.h(h)
       if (pw > 0 && ph > 0) {
-        val rowBytes = pw * PngBpp
-        var prev = new Array[Byte](rowBytes)
-        var cur = new Array[Byte](rowBytes)
+        val n = pw * PngBpp
+        // current + previous unfiltered pass rows, needed to APPLY the filters
+        var prev = new Array[Byte](n)
+        var cur = new Array[Byte](n)
         var r = 0
         while (r < ph) {
-          val y = A7yStart(p) + r * A7yStep(p)
+          val y = p.y0 + r * p.dy
           var i = 0
-          while (i < rowBytes) {
-            val x = A7xStart(p) + (i / PngBpp) * A7xStep(p)
-            cur(i) = (pixel(y, x, i % PngBpp) & 0xff).toByte
+          while (i < n) {
+            cur(i) = (pixel(y, p.x0 + (i / PngBpp) * p.dx, i % PngBpp) & 0xff).toByte
             i += 1
           }
           val ft = r % 5
-          raw.write(ft)
-          i = 0
-          while (i < rowBytes) {
-            val x = cur(i) & 0xff
-            val a = if (i >= PngBpp) cur(i - PngBpp) & 0xff else 0
-            val b = prev(i) & 0xff
-            val c = if (i >= PngBpp) prev(i - PngBpp) & 0xff else 0
-            val filtered = ft match {
-              case 0 => x
-              case 1 => x - a
-              case 2 => x - b
-              case 3 => x - (a + b) / 2
-              case _ => x - paeth(a, b, c)
-            }
-            raw.write(filtered & 0xff)
-            i += 1
-          }
+          raw(off) = ft.toByte
+          filterRow(ft, cur, 0, prev, 0, raw, off + 1, n, PngBpp) // prev starts all zero
+          off += 1 + n
           val t = prev; prev = cur; cur = t
           r += 1
         }
       }
-      p += 1
     }
-    buildPng(w, h, Zlib.deflate1(raw.toByteArray), interlace = 1)
+    buildPng(w, h, Zlib.deflate1(raw), interlace)
   }
 
   /** Inflate + unfilter a truecolor 8-bit PNG's pixel data; returns the
@@ -819,23 +835,11 @@ object MediaCodec {
       case Some(info) =>
         if (b(24) != 8 || b(25) != 2) return None // bit depth 8, truecolor only
         val w = info.width; val h = info.height
-        val interlaced = b(28) == 1
         if (b(28) != 0 && b(28) != 1) return None
+        val passes = Passes(b(28))
         // guard the allocation BEFORE trusting header dims: a forged
         // 2^31-pixel header must not OOM the task
-        val stride = 1L + w.toLong * PngBpp
-        val rawLen =
-          if (!interlaced) h.toLong * stride
-          else { // Adam7: each non-empty pass row carries its own filter byte
-            var t = 0L
-            var p = 0
-            while (p < 7) {
-              val pw = a7PassW(p, w).toLong; val ph = a7PassH(p, h).toLong
-              if (pw > 0 && ph > 0) t += ph * (1L + pw * PngBpp)
-              p += 1
-            }
-            t
-          }
+        val rawLen = pngRawLen(passes, w, h)
         if (rawLen > (64L << 20)) return None // 64 MB decoded cap per image
         // concatenate IDAT chunk bodies (PNG allows splitting anywhere)
         val z = new ByteArrayOutputStream(b.length)
@@ -860,7 +864,8 @@ object MediaCodec {
             var ok = true
             while (ok && off < raw.length && !inflater.finished()) {
               val k = inflater.inflate(raw, off, raw.length - off)
-              if (k == 0 && inflater.needsInput()) ok = false // truncated stream
+              // no progress: truncated, or waiting on a preset dictionary
+              if (k == 0 && !inflater.finished()) ok = false
               else off += k
             }
             ok && off == raw.length // false = wrong decompressed size
@@ -869,82 +874,37 @@ object MediaCodec {
           }
         }
         if (!okInflate) return None
-        // reverse the per-scanline filter in place (ISO/IEC 15948 §9.2)
+        // unfilter each pass as an independent sub-image against
+        // PASS-LOCAL neighbors, then scatter it into place
         val out = new Array[Byte](w * h * PngBpp)
-        if (interlaced) {
-          // Adam7: unfilter each pass as an independent sub-image
-          // against PASS-LOCAL neighbors, then scatter into place.
-          var off = 0
-          var p = 0
-          while (p < 7) {
-            val pw = a7PassW(p, w); val ph = a7PassH(p, h)
-            if (pw > 0 && ph > 0) {
-              val prb = pw * PngBpp
-              var prev = new Array[Byte](prb)
-              var cur = new Array[Byte](prb)
-              var pr = 0
-              while (pr < ph) {
-                val ft = raw(off) & 0xff
-                if (ft > 4) return None
-                off += 1
-                var j = 0
-                while (j < prb) {
-                  val x = raw(off + j) & 0xff
-                  val a = if (j >= PngBpp) cur(j - PngBpp) & 0xff else 0
-                  val bb = if (pr > 0) prev(j) & 0xff else 0
-                  val c = if (pr > 0 && j >= PngBpp) prev(j - PngBpp) & 0xff else 0
-                  val v = ft match {
-                    case 0 => x
-                    case 1 => x + a
-                    case 2 => x + bb
-                    case 3 => x + (a + bb) / 2
-                    case _ => x + paeth(a, bb, c)
-                  }
-                  cur(j) = (v & 0xff).toByte
-                  j += 1
-                }
-                off += prb
-                val y = A7yStart(p) + pr * A7yStep(p)
-                var px = 0
-                while (px < pw) {
-                  val dst = (y * w + A7xStart(p) + px * A7xStep(p)) * PngBpp
-                  out(dst) = cur(px * PngBpp)
-                  out(dst + 1) = cur(px * PngBpp + 1)
-                  out(dst + 2) = cur(px * PngBpp + 2)
-                  px += 1
-                }
-                val t = prev; prev = cur; cur = t
-                pr += 1
+        var off = 0
+        var pn = 0
+        while (pn < passes.length) {
+          val p = passes(pn)
+          val pw = p.w(w); val ph = p.h(h)
+          if (pw > 0 && ph > 0) {
+            val n = pw * PngBpp
+            var prev = new Array[Byte](n)
+            var cur = new Array[Byte](n)
+            var r = 0
+            while (r < ph) {
+              if (!unfilterRow(raw(off) & 0xff, raw, off + 1, prev, 0, cur, 0, n, PngBpp))
+                return None
+              off += 1 + n
+              val row = (p.y0 + r * p.dy) * w
+              var px = 0
+              while (px < pw) {
+                val dst = (row + p.x0 + px * p.dx) * PngBpp
+                out(dst) = cur(px * PngBpp)
+                out(dst + 1) = cur(px * PngBpp + 1)
+                out(dst + 2) = cur(px * PngBpp + 2)
+                px += 1
               }
+              val t = prev; prev = cur; cur = t
+              r += 1
             }
-            p += 1
           }
-          return Some((w, h, out))
-        }
-        val rowBytes = w * PngBpp
-        var r = 0
-        while (r < h) {
-          val ft = raw(r * stride.toInt) & 0xff
-          if (ft > 4) return None
-          val src = r * stride.toInt + 1
-          val dst = r * rowBytes
-          var j = 0
-          while (j < rowBytes) {
-            val x = raw(src + j) & 0xff
-            val a = if (j >= PngBpp) out(dst + j - PngBpp) & 0xff else 0
-            val bb = if (r > 0) out(dst - rowBytes + j) & 0xff else 0
-            val c = if (r > 0 && j >= PngBpp) out(dst - rowBytes + j - PngBpp) & 0xff else 0
-            val v = ft match {
-              case 0 => x
-              case 1 => x + a
-              case 2 => x + bb
-              case 3 => x + (a + bb) / 2
-              case _ => x + paeth(a, bb, c)
-            }
-            out(dst + j) = (v & 0xff).toByte
-            j += 1
-          }
-          r += 1
+          pn += 1
         }
         Some((w, h, out))
       case None => None
@@ -1517,29 +1477,12 @@ object MediaCodec {
       val stride = rowBytes.toInt + 1
       if (d.length == 0 || d.length % stride != 0) return None
       val rows = d.length / stride
-      val out = new Array[Byte](rows * rowBytes.toInt)
+      val n = rowBytes.toInt
+      val out = new Array[Byte](rows * n)
       var r = 0
       while (r < rows) {
-        val ft = d(r * stride) & 0xff
-        if (ft > 4) return None
-        val src = r * stride + 1
-        val dst = r * rowBytes.toInt
-        var j = 0
-        while (j < rowBytes) {
-          val x = d(src + j) & 0xff
-          val a = if (j >= bpp) out(dst + j - bpp) & 0xff else 0
-          val bb = if (r > 0) out(dst - rowBytes.toInt + j) & 0xff else 0
-          val c = if (r > 0 && j >= bpp) out(dst - rowBytes.toInt + j - bpp) & 0xff else 0
-          val v = ft match {
-            case 0 => x
-            case 1 => x + a
-            case 2 => x + bb
-            case 3 => x + (a + bb) / 2
-            case _ => x + paeth(a, bb, c)
-          }
-          out(dst + j) = (v & 0xff).toByte
-          j += 1
-        }
+        if (!unfilterRow(d(r * stride) & 0xff, d, r * stride + 1,
+          out, (r - 1) * n, out, r * n, n, bpp)) return None
         r += 1
       }
       Some(out)
@@ -1577,30 +1520,14 @@ object MediaCodec {
       val rows = (d.length + rowBytes - 1) / rowBytes
       val padded = java.util.Arrays.copyOf(d, rows * rowBytes)
       java.util.Arrays.fill(padded, d.length, padded.length, ' '.toByte)
-      val bpp = colors // bpc is 8
       val out = new Array[Byte](rows * (rowBytes + 1))
       var r = 0
       while (r < rows) {
         val ft = r % 5 // exercise every row filter across the stream
         out(r * (rowBytes + 1)) = ft.toByte
-        val src = r * rowBytes
-        val dst = r * (rowBytes + 1) + 1
-        var j = 0
-        while (j < rowBytes) {
-          val x = padded(src + j) & 0xff
-          val a = if (j >= bpp) padded(src + j - bpp) & 0xff else 0
-          val bb = if (r > 0) padded(src - rowBytes + j) & 0xff else 0
-          val c = if (r > 0 && j >= bpp) padded(src - rowBytes + j - bpp) & 0xff else 0
-          val v = ft match {
-            case 0 => x
-            case 1 => x - a
-            case 2 => x - bb
-            case 3 => x - (a + bb) / 2
-            case _ => x - paeth(a, bb, c)
-          }
-          out(dst + j) = (v & 0xff).toByte
-          j += 1
-        }
+        // bpc is 8, so a pixel is `colors` bytes
+        filterRow(ft, padded, r * rowBytes, padded, (r - 1) * rowBytes,
+          out, r * (rowBytes + 1) + 1, rowBytes, colors)
         r += 1
       }
       out
@@ -1775,7 +1702,7 @@ object MediaCodec {
     filters.foldLeft(Option(data)) { (acc, f) =>
       acc.flatMap { d =>
         f match {
-          case "FlateDecode" => inflateAll(d, cap)
+          case "FlateDecode" => Zlib.inflate(d, nowrap = false, cap)
           case "LZWDecode" => lzwDecodePdf(d, cap, earlyChange)
           case "ASCIIHexDecode" => asciiHexDecode(d)
           case "ASCII85Decode" => ascii85Decode(d, cap)
@@ -2040,28 +1967,6 @@ object MediaCodec {
     put(257) // EOD
     if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
     out.toByteArray
-  }
-
-  private def inflateAll(z: Array[Byte], cap: Int): Option[Array[Byte]] = {
-    Zlib.withInflater(nowrap = false) { inflater =>
-      inflater.setInput(z)
-      val out = new ByteArrayOutputStream(math.min(cap, z.length * 4 + 64))
-      val buf = new Array[Byte](8192)
-      try {
-        var ok = true
-        while (ok && !inflater.finished()) {
-          val k = inflater.inflate(buf)
-          if (k == 0 && inflater.needsInput()) ok = false // truncated
-          else {
-            out.write(buf, 0, k)
-            if (out.size() > cap) ok = false // zip-bomb guard
-          }
-        }
-        if (ok) Some(out.toByteArray) else None
-      } catch {
-        case _: java.util.zip.DataFormatException => None
-      }
-    }
   }
 
   /** Content-stream show-op tokenizer: collects literal strings and

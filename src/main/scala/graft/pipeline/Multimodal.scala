@@ -141,8 +141,7 @@ object Multimodal {
     * `spread = true` redistributes rows over the session's
     * shuffle-partition count BEFORE the codec work: scan splits follow
     * input file BYTES, which underparallelizes per-row codec CPU (and
-    * mega-doc skew concentrates it; same rationale as
-    * ShadowSpark.repartitionByDoc). Worth one shuffle of the text only
+    * mega-doc skew concentrates it). Worth one shuffle of the text only
     * when the builder + downstream decode dominate it — deep pixel/PDF/
     * WARC decodes yes, header-only walks no (their per-row work is at
     * scan speed, so the exchange is pure overhead; those call sites pass

@@ -371,31 +371,9 @@ object WarcCodec {
     * deflate), with the raw-deflate fallback some of them actually emit
     * (a long-standing interop quirk). Bounded like the gzip walk. */
   def inflateDeflate(bytes: Array[Byte],
-                     maxTotal: Long = MaxDecompressedBytes): Option[Array[Byte]] = {
-    def run(nowrap: Boolean): Option[Array[Byte]] =
-      Zlib.withInflater(nowrap) { inf =>
-        inf.setInput(bytes)
-        val out = new java.io.ByteArrayOutputStream(8192)
-        val buf = new Array[Byte](8192)
-        var total = 0L
-        var ok = true
-        while (ok && !inf.finished()) {
-          val n =
-            try inf.inflate(buf)
-            catch { case _: java.util.zip.DataFormatException => ok = false; 0 }
-          if (ok) {
-            if (n == 0 && !inf.finished()) ok = false
-            else {
-              total += n
-              if (total > maxTotal) ok = false
-              else out.write(buf, 0, n)
-            }
-          }
-        }
-        if (ok) Some(out.toByteArray) else None
-      }
-    run(nowrap = false).orElse(run(nowrap = true))
-  }
+                     maxTotal: Long = MaxDecompressedBytes): Option[Array[Byte]] =
+    Zlib.inflate(bytes, nowrap = false, maxTotal)
+      .orElse(Zlib.inflate(bytes, nowrap = true, maxTotal))
 
   /** The decoded entity body of a captured response: reverse the
     * transfer coding first (chunked de-framing), then the content

@@ -59,4 +59,32 @@ private[pipeline] object Zlib {
     * read loops, caps and error handling; they must not call end()). */
   def withInflater[R](nowrap: Boolean)(f: Inflater => R): R =
     inflaters(if (nowrap) 1 else 0).loan(_.reset())(f)
+
+  /** Inflate the whole of `input` (`nowrap` = raw deflate, no zlib
+    * wrapper). None when the stream is corrupt, when it inflates to more
+    * than `limit` bytes, or when a call makes no progress before the
+    * end: a truncated stream, or one that asks for a preset dictionary
+    * (inflate returns 0 forever there, with needsInput() false). */
+  def inflate(input: Array[Byte], nowrap: Boolean, limit: Long): Option[Array[Byte]] =
+    withInflater(nowrap) { inf =>
+      inf.setInput(input)
+      val out = new java.io.ByteArrayOutputStream(8192)
+      val buf = new Array[Byte](8192)
+      var total = 0L
+      var ok = true
+      while (ok && !inf.finished()) {
+        val n =
+          try inf.inflate(buf)
+          catch { case _: java.util.zip.DataFormatException => ok = false; 0 }
+        if (ok) {
+          if (n == 0 && !inf.finished()) ok = false
+          else {
+            total += n
+            if (total > limit) ok = false
+            else out.write(buf, 0, n)
+          }
+        }
+      }
+      if (ok) Some(out.toByteArray) else None
+    }
 }

@@ -33,7 +33,6 @@ final case class Commit(
   *    per-row setup, no driver round-trips, no collect(), no Encoder pass);
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
-  *    an OPTIONAL salted repartition spreads pathological mega-docs;
   *  - `writeResumable` writes an output path once and commits it with one
   *    rename of its staging directory onto the path; the manifest
   *    (`Commit`) carries the lineage, observed on the write itself — no
@@ -250,12 +249,6 @@ object ShadowSpark {
   /** `process` over an untyped (doc_id, spans) DataFrame. */
   def processColumnar(df: DataFrame, program: RuleProgram): Dataset[DocOut] =
     op(df, program).as(Encoders.product[DocOut])
-
-  /** Salted explicit repartition for skewed corpora: hash(doc_id) spreads
-    * mega-docs uniformly; `parallelism` should be ~2-3x the executor-core
-    * count at scale. AQE handles residual imbalance. */
-  def repartitionByDoc(docs: Dataset[Doc], parallelism: Int): Dataset[Doc] =
-    docs.repartition(parallelism, xxhash64(col("doc_id")))
 
   // ---------------- committed writer ----------------
 

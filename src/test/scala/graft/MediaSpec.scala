@@ -1263,4 +1263,90 @@ class MediaSpec extends AnyFunSuite {
     val forged = MediaCodec.buildPng(16, 16, Array.fill(8)(0.toByte), interlace = 2)
     assert(MediaCodec.decodePngRaw(forged).isEmpty) // unknown interlace method
   }
+
+  // ---- builder byte pins ----
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b).map(x => f"${x & 0xff}%02x").mkString
+
+  /** Every synthesis builder that writes a PNG row filter or a JPEG
+    * entropy segment, at awkward sizes (partial Adam7 passes, empty
+    * passes, partial MCUs, ragged predictor rows). */
+  private def builderOutputs: Seq[(String, Array[Byte])] = {
+    import graft.pipeline.JpegCodec
+    val dims = Seq((21, 13), (8, 8), (3, 2), (1, 1))
+    val png = dims.flatMap { case (w, h) =>
+      Seq(s"png ${w}x$h" -> MediaCodec.buildPngPixels(w, h, a7Formula),
+        s"png adam7 ${w}x$h" -> MediaCodec.buildPngPixelsInterlaced(w, h, a7Formula))
+    }
+    // 3 colors x 5 columns = 15-byte rows; 68 bytes leaves a ragged 8-byte last row
+    val d = Array.tabulate(68)(i => ((i * 89 + i / 3) & 0xff).toByte)
+    val pred = Seq(2, 10, 15).map(p => s"predict $p" -> MediaCodec.predictEncode(d, p, 3, 5))
+    def dc(br: Int, bc: Int): Int = ((br * 37 + bc * 11 + 5) % 256) - 128
+    val jpeg = Seq((8, 8), (17, 9), (33, 31)).flatMap { case (w, h) =>
+      Seq(s"jpeg ${w}x$h" -> JpegCodec.buildJpegDcOnly(w, h, dc),
+        s"jpeg 420 ${w}x$h" -> JpegCodec.buildJpegDcOnly420(w, h, dc),
+        s"jpeg 420 progressive ${w}x$h" -> JpegCodec.buildJpegDcOnly420Progressive(w, h, dc))
+    }
+    png ++ pred ++ jpeg
+  }
+
+  private val builderDigests: Map[String, String] = Map(
+    "png 21x13" -> "45ded0bcfd110f39128582f4373f9137064b60e4516407d4f8840b62d88a707c",
+    "png adam7 21x13" -> "1b0fb5260f63e319902b58a80bed7b8f0a87618044c4e4d199982267fdfb23b1",
+    "png 8x8" -> "38ee37eff5d36dffbb9ff5c216e44b33b87800eb31a95863fcb0f53e6e27d475",
+    "png adam7 8x8" -> "6003469ae9f6b65221a2b344c40ee87a1df46e3cd93f4917f734941f0d8076e6",
+    "png 3x2" -> "8f5dd00a83094ab2d191e8c2aef8e94de8188d2c25b26149fba6a96ae67d37b5",
+    "png adam7 3x2" -> "75f8ce00c9f57fc5ded4e45c3acef84e8d97bd8c2430d9c25e42901dcde231e0",
+    "png 1x1" -> "120c0de5435f695a14ab459eec20eacae4d0076fea945bf312a0d26dc73a583c",
+    "png adam7 1x1" -> "3eaf65f21104cc7964882051a6f3cf87d9f5d8a9fc8b135d9ca40e0a58a5b50d",
+    "predict 2" -> "ce0b53de54d90bd433d6d8a193a60ddaeb84c4ab16a9a98e572569514115bcc2",
+    "predict 10" -> "15ca3fa439b28e716d520c14310252832e51ac682063b78a4fa56f60d394e666",
+    "predict 15" -> "15ca3fa439b28e716d520c14310252832e51ac682063b78a4fa56f60d394e666",
+    "jpeg 8x8" -> "cc3baa1a1f988e4a73710bc07f822c0a06f72a647b009b8be6e8873883744d23",
+    "jpeg 420 8x8" -> "dedd4b3a5917172e47296d7d298b9924644c6e26f3f1cd0cfc74be84dff7c664",
+    "jpeg 420 progressive 8x8" -> "e3d658f7d7170b24371c5acf74b17f63c33c9557f013415d62042f0120e635f9",
+    "jpeg 17x9" -> "13d3d0d702c864e7c741ed57258c4248bcb64bafd11ff12e9d096ca5cad71be9",
+    "jpeg 420 17x9" -> "b17b4f8a26b4063dae6b1cad9455282df99d907e641baae81a91e4115d42368d",
+    "jpeg 420 progressive 17x9" -> "57bdd9d61141db6969c037e140486e8da9c0e6a5de81ab09361b6b24fdf4fc37",
+    "jpeg 33x31" -> "513233ddfc0c540e7fdcfa1342e152e69feb0c699f529e8b3326d851cffabf53",
+    "jpeg 420 33x31" -> "257a6a017a010b37884b175e53899effc98d46ac0b2209cc579f7a7d966cc30f",
+    "jpeg 420 progressive 33x31" -> "89270b82706ed07c707e7c6f45f1195065ea5b14cd337f33228cac49c2fc109a")
+
+  test("builders: PNG, predictor and JPEG output bytes are pinned by SHA-256") {
+    val got = builderOutputs.map { case (k, b) => k -> sha256(b) }
+    assert(got.map(_._1).toSet == builderDigests.keySet)
+    for ((k, v) <- got) assert(builderDigests(k) == v, s"$k bytes changed")
+  }
+
+  // ---- zlib preset dictionary (FDICT) ----
+
+  // A zlib header with the FDICT bit set (78 BB passes the mod-31 check),
+  // dictionary id 1, then an empty final block: Inflater.inflate returns
+  // 0 forever here with needsDictionary() true and needsInput() false.
+  private val presetDictZlib = Array(0x78, 0xbb, 0, 0, 0, 1, 3, 0).map(_.toByte)
+
+  private def within10s[T](body: => T): T = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    scala.concurrent.Await.result(scala.concurrent.Future(body),
+      scala.concurrent.duration.Duration(10, "s"))
+  }
+
+  test("PNG pixel decode: an IDAT stream that needs a preset dictionary rejects, no hang") {
+    assert(within10s(MediaCodec.decodePngPixels(MediaCodec.buildPng(4, 4, presetDictZlib))).isEmpty)
+  }
+
+  test("PDF text: a FlateDecode stream that needs a preset dictionary is skipped, no hang") {
+    val pdf = ("%PDF-1.4\n" +
+      s"4 0 obj << /Length ${presetDictZlib.length} /Filter /FlateDecode >> stream\n")
+      .getBytes(US_ASCII) ++ presetDictZlib ++ "\nendstream endobj\n%%EOF\n".getBytes(US_ASCII)
+    assert(within10s(MediaCodec.extractPdfText(pdf)).isEmpty)
+  }
+
+  test("WARC deflate body that needs a preset dictionary rejects, no hang") {
+    import graft.pipeline.WarcCodec
+    val resp = WarcCodec.parseHttpResponse(WarcCodec.buildHttpResponse(200,
+      Seq("Content-Encoding" -> "deflate"), presetDictZlib)).get
+    assert(within10s(WarcCodec.httpEntityBody(resp)).isEmpty)
+  }
 }

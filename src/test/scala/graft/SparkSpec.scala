@@ -587,7 +587,7 @@ class SparkSpec extends AnyFunSuite {
     val docs = Corpus.generate(spark, 300, 2, megaEvery = 50) // 6 mega-docs
     val direct = ShadowSpark.process(docs, program).collect().sortBy(_.doc_id).toSeq
     val salted = ShadowSpark.process(
-      ShadowSpark.repartitionByDoc(docs, 11), program).collect().sortBy(_.doc_id).toSeq
+      docs.repartition(11, xxhash64(col("doc_id"))), program).collect().sortBy(_.doc_id).toSeq
     assert(salted == direct)
   }
 
