@@ -188,22 +188,16 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
   }
   private val noRules = new Array[Int](0)
 
+  /** One document through the engine, its spans joined in stable `offset`
+    * order under `ShadowSpark.SpanStreamDecoder`'s null policy. */
   def process(doc: Doc): DocOut = {
-    // ---- assemble the byte stream + media markers ----
-    val ordered = doc.spans match {
-      case sp: scala.collection.IndexedSeq[Span] =>
-        // skip the sort allocation when spans are already in offset order
-        var sorted = true; var i = 1
-        while (i < sp.length && sorted) { if (sp(i).offset < sp(i - 1).offset) sorted = false; i += 1 }
-        if (sorted) sp else sp.sortBy(_.offset)
-      case sp => sp.sortBy(_.offset)
-    }
     val sb = new java.lang.StringBuilder
     val markers = new ArrayBuffer[HtmlParser.MediaMarker]
-    ordered.foreach { sp =>
+    def orEmpty(s: String) = if (s == null) "" else s
+    doc.spans.filter(sp => sp != null && sp.kind != null).sortBy(_.offset).foreach { sp =>
       if (sp.kind == SpanKinds.Media)
-        markers += HtmlParser.MediaMarker(sb.length, sp.media_ref, sp.text)
-      else sb.append(sp.text)
+        markers += HtmlParser.MediaMarker(sb.length, orEmpty(sp.media_ref), orEmpty(sp.text))
+      else if (sp.text != null) sb.append(sp.text)
     }
     val acc = processStreamAcc(sb.toString, markers)
     DocOut(doc.doc_id, acc.toSpans, acc.dataJson, acc.errors.toSeq)

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * Exactness contract (bit-for-bit vs the SQL it replaces; pinned by
   * VecFunctionsSpec against the live SQL expressions and by the DuckDB
   * oracle): quantization replicates `cast(round(x * 1000) as bigint)`
-  * EXACTLY — the multiply happens in DOUBLE (Spark coerces float*int to
-  * double), the round is Spark's Round-on-double semantics
+  * EXACTLY for finite x — the multiply happens in DOUBLE (Spark coerces
+  * float*int to double), the round is Spark's Round-on-double semantics
   * (`BigDecimal(Double.toString(m)).setScale(0, HALF_UP).doubleValue()`,
   * NaN/Inf passed through), the cast is the JVM d2l truncation; integer
   * dots fold left-to-right with Long wraparound; double dots/norms cast
@@ -31,7 +31,10 @@ object VecOps {
   /** Replica of SQL `cast(round(x * 1000) as bigint)` on a FLOAT x: Spark
     * coerces float*int to DOUBLE, Round-on-double is
     * BigDecimal(Double.toString(m)).setScale(0, HALF_UP).doubleValue()
-    * with NaN/Inf passed through, and the double->long cast is d2l. */
+    * with NaN/Inf passed through, and the double->long cast is d2l. Only
+    * finite x replicate the SQL: on NaN or +-Inf the SQL cast throws under
+    * ANSI mode (Spark 4's default), while d2l clamps (NaN -> 0, +-Inf ->
+    * Long.MaxValue/MinValue). Embeddings are finite by construction. */
   def quantize1000(x: Float): Long = {
     val m = x.toDouble * 1000.0
     val r =

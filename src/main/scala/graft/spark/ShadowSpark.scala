@@ -4,12 +4,20 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.core.{Doc, DocOut}
 import graft.engine.RuleProgram
+import graft.html.HtmlParser.MediaMarker
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DataFrameBridge
+import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.collection.mutable.ArrayBuffer
 
 /** The commit of one `ShadowSpark.writeResumable` output, as stored in
   * `path/_graft_commit.json`: the lineage of its write — row count,
@@ -59,173 +67,85 @@ object ShadowSpark {
 
   /** Per-task decoder for the canonical
     * (doc_id string, spans array<struct<kind,text,media_ref,offset>>) rows:
-    * assembles the document stream as raw UTF-8 bytes (decoded to String
-    * ONCE) and collects media markers, via a raw UnsafeArrayData read path
-    * with a generic-accessor fallback. Spans are concatenated in `offset`
-    * order (Model.scala's contract): the fast path checks that offsets
-    * never decrease, and a row whose spans are out of order is decoded by
-    * the generic path after a stable sort by offset.
+    * joins the non-media spans' text in stable `offset` order (Model.scala's
+    * contract) into one UTF-8 buffer, decoded to a String once, and
+    * records each media span as a marker at its char position.
     *
-    * Raw-layout fast path rationale: the generic accessors allocate a
-    * wrapper per struct element and per string field (~4 per span, ~120
-    * per doc) — at 350k docs/s that wrapper churn alone is >1 GB/s of
-    * garbage and is what keeps the decode half from scaling on many-core
-    * executors. Layout read directly:
-    *   [numElements:8][null bits: ceil(n/64)*8][n x 8B (off<<32|sz)]
-    * struct element -> UnsafeRow bytes at arrayBase+off:
-    *   [null bits: 8][4 x 8B slots]; string slots hold off<<32|sz
-    *   relative to the STRUCT start; int slot holds the value.
+    * Null policy (one bad row must not kill the job; `ShadowEngine.process(Doc)`
+    * keeps it too): a null span element or null kind contributes nothing;
+    * a media span with a null ref or text gets empty strings; a non-media
+    * span with a null text contributes nothing; a null offset counts as 0.
     *
-    * Safety: any set null bit (array element or struct field) drops the
-    * row to the generic accessors, which surface the null explicitly
-    * instead of reading bytes at offset 0; and each task's first
-    * fast-decoded row is cross-checked byte-for-byte against the generic
-    * decode, pinning the generic path if Spark's internal layout ever
-    * drifts. */
+    * One read path, Spark's public accessors, serves every array
+    * representation. Reading Spark's internal array layout saved the
+    * per-span wrappers (decode probe 9887 against 10908 B/doc) but needed
+    * a per-task self-check; end to end it saved 0.9% of `crawl_write`'s
+    * allocation (143.6 against 144.9 KiB/doc, medians of ten runs, 4
+    * cores) and no time outside the runs' spread. */
   private[graft] final class SpanStreamDecoder {
     private var buf = new Array[Byte](16384) // per-task reusable byte scratch
-    private var chkBuf = new Array[Byte](0) // self-check scratch (first fast row only)
-    val markers = new scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker](8)
-    private val chkMarkers = new scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker](8)
-    private val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    private val kindMedia = org.apache.spark.unsafe.types.UTF8String.fromString(graft.core.SpanKinds.Media)
-    private var fastOk = true
-    private var fastChecked = false
-
-    // generic accessor decode (allocates ~4 wrappers per span). Null policy
-    // (one bad row must not kill the job, same stance as the engine's
-    // Throwable row guard): a null span element or null kind contributes
-    // nothing; a media span with null ref/text gets empty strings; a text
-    // span with null text contributes no stream bytes; a null offset
-    // counts as 0.
-    private def decodeGeneric(arr: org.apache.spark.sql.catalyst.util.ArrayData, n: Int,
-                              buf0: Array[Byte],
-                              mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
-        : (Array[Byte], Int) = {
-      def offsetAt(i: Int): Int =
-        if (arr.isNullAt(i)) 0 else { val st = arr.getStruct(i, 4); if (st.isNullAt(3)) 0 else st.getInt(3) }
-      var inOrder = true
-      var k = 1
-      while (k < n && inOrder) { inOrder = offsetAt(k - 1) <= offsetAt(k); k += 1 }
-      val order = if (inOrder) null else Array.range(0, n).sortBy(offsetAt) // stable
-      var b = buf0
-      var bytePos = 0
-      var j = 0
-      while (j < n) {
-        val i = if (order == null) j else order(j)
-        if (!arr.isNullAt(i)) {
-          val st = arr.getStruct(i, 4)
-          val kind = if (st.isNullAt(0)) null else st.getUTF8String(0)
-          if (kind == kindMedia) {
-            mk += graft.html.HtmlParser.MediaMarker(
-              bytePos,
-              if (st.isNullAt(2)) "" else st.getUTF8String(2).toString,
-              if (st.isNullAt(1)) "" else st.getUTF8String(1).toString)
-          } else if (kind != null && !st.isNullAt(1)) {
-            val u = st.getUTF8String(1)
-            val nb = u.numBytes()
-            if (bytePos + nb > b.length)
-              b = java.util.Arrays.copyOf(b, math.max(b.length * 2, bytePos + nb))
-            u.writeTo(java.nio.ByteBuffer.wrap(b, bytePos, nb))
-            bytePos += nb
-          }
-        }
-        j += 1
-      }
-      (b, bytePos)
-    }
-
-    // returns -1 length when any null bit is set or an offset decreases
-    // (the generic path then decides what a null span/field means instead
-    // of reading garbage, and sorts the spans by offset)
-    private def decodeFast(ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData, n: Int,
-                           base: Array[Byte], buf0: Array[Byte],
-                           mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
-        : (Array[Byte], Int) = {
-      var b = buf0
-      var bytePos = 0
-      val a0 = ua.getBaseOffset
-      val nullWords = (n + 63) / 64
-      var w = 0
-      while (w < nullWords) {
-        if (org.apache.spark.unsafe.Platform.getLong(base, a0 + 8 + w * 8L) != 0L)
-          return (b, -1) // null element present
-        w += 1
-      }
-      val elems = a0 + 8 + (nullWords.toLong * 8)
-      val B = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
-      var prevOffset = Int.MinValue
-      var i = 0
-      while (i < n) {
-        val os = org.apache.spark.unsafe.Platform.getLong(base, elems + i * 8L)
-        val st = a0 + (os >>> 32) // struct base (absolute)
-        if (org.apache.spark.unsafe.Platform.getLong(base, st) != 0L)
-          return (b, -1) // null struct field present
-        def fieldOff(f: Int): Long =
-          org.apache.spark.unsafe.Platform.getLong(base, st + 8 + f * 8L)
-        val offset = org.apache.spark.unsafe.Platform.getInt(base, st + 8 + 3 * 8L)
-        if (offset < prevOffset) return (b, -1) // out of offset order
-        prevOffset = offset
-        val kOs = fieldOff(0)
-        val kLen = kOs.toInt
-        val kIdx = (st + (kOs >>> 32) - B).toInt
-        val isMedia = kLen == 5 && base(kIdx) == 'm' && base(kIdx + 1) == 'e' &&
-          base(kIdx + 2) == 'd' && base(kIdx + 3) == 'i' && base(kIdx + 4) == 'a'
-        val tOs = fieldOff(1)
-        val tLen = tOs.toInt
-        val tIdx = (st + (tOs >>> 32) - B).toInt
-        if (isMedia) {
-          val rOs = fieldOff(2)
-          mk += graft.html.HtmlParser.MediaMarker(bytePos,
-            new String(base, (st + (rOs >>> 32) - B).toInt, rOs.toInt, utf8),
-            new String(base, tIdx, tLen, utf8))
-        } else {
-          if (bytePos + tLen > b.length)
-            b = java.util.Arrays.copyOf(b, math.max(b.length * 2, bytePos + tLen))
-          System.arraycopy(base, tIdx, b, bytePos, tLen)
-          bytePos += tLen
-        }
-        i += 1
-      }
-      (b, bytePos)
-    }
+    // the kept spans of one row, grown to the widest row; keys(k) is
+    // offset << 32 | k, sorted when offsets decrease (distinct, so stable)
+    private var keys = new Array[Long](64)
+    private var spans = new Array[InternalRow](64)
+    private var isMedia = new Array[Boolean](64)
+    val markers = new ArrayBuffer[MediaMarker](8)
+    private val kindMedia = UTF8String.fromString(graft.core.SpanKinds.Media)
 
     /** Decodes the spans column of `row` (ordinal 1); the document stream
       * is returned, media markers (char positions) are in `markers`. */
-    def decode(row: org.apache.spark.sql.catalyst.InternalRow): String =
+    def decode(row: InternalRow): String =
       decode(if (row.isNullAt(1)) null else row.getArray(1))
 
     /** Decodes one spans array; a null array is an empty document. */
-    def decode(arr: org.apache.spark.sql.catalyst.util.ArrayData): String = {
+    def decode(arr: ArrayData): String = {
       markers.clear()
       if (arr == null) return ""
       val n = arr.numElements()
-      var bytePos = -1
-      arr match {
-        case ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-            if fastOk && ua.getBaseObject.isInstanceOf[Array[Byte]] =>
-          val base = ua.getBaseObject.asInstanceOf[Array[Byte]]
-          val r = decodeFast(ua, n, base, buf, markers)
-          buf = r._1; bytePos = r._2
-          if (bytePos >= 0 && !fastChecked) {
-            fastChecked = true
-            chkMarkers.clear()
-            val g = decodeGeneric(arr, n, chkBuf, chkMarkers)
-            chkBuf = g._1
-            val same = g._2 == bytePos &&
-              java.util.Arrays.equals(buf, 0, bytePos, chkBuf, 0, g._2) &&
-              chkMarkers == markers
-            if (!same) { // layout drift: pin the generic path for the task
-              fastOk = false
-              bytePos = -1
+      if (keys.length < n) {
+        val len = math.max(n, keys.length * 2)
+        keys = new Array[Long](len)
+        spans = new Array[InternalRow](len)
+        isMedia = new Array[Boolean](len)
+      }
+      var m = 0
+      var inOrder = true
+      var i = 0
+      while (i < n) {
+        if (!arr.isNullAt(i)) {
+          val st = arr.getStruct(i, 4)
+          if (!st.isNullAt(0)) {
+            val media = st.getUTF8String(0) == kindMedia
+            if (media || !st.isNullAt(1)) {
+              val offset = if (st.isNullAt(3)) 0L else st.getInt(3).toLong
+              if (m > 0 && offset < (keys(m - 1) >> 32)) inOrder = false
+              keys(m) = (offset << 32) | m
+              spans(m) = st
+              isMedia(m) = media
+              m += 1
             }
           }
-        case _ =>
+        }
+        i += 1
       }
-      if (bytePos < 0) { // generic path (non-unsafe input, nulls, or drift)
-        markers.clear()
-        val g = decodeGeneric(arr, n, buf, markers)
-        buf = g._1; bytePos = g._2
+      if (!inOrder) java.util.Arrays.sort(keys, 0, m)
+      var bytePos = 0
+      var j = 0
+      while (j < m) {
+        val k = if (inOrder) j else keys(j).toInt
+        val st = spans(k)
+        spans(k) = null // hold no row memory past the call
+        if (isMedia(k)) {
+          markers += MediaMarker(bytePos, orEmpty(st, 2), orEmpty(st, 1))
+        } else {
+          val text = st.getUTF8String(1)
+          val nb = text.numBytes()
+          if (bytePos + nb > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, bytePos + nb))
+          text.writeTo(ByteBuffer.wrap(buf, bytePos, nb))
+          bytePos += nb
+        }
+        j += 1
       }
       if (markers.nonEmpty) {
         // byte offset -> UTF-16 char offset: count non-continuation bytes,
@@ -242,8 +162,11 @@ object ShadowSpark {
           mi += 1
         }
       }
-      new String(buf, 0, bytePos, utf8)
+      new String(buf, 0, bytePos, StandardCharsets.UTF_8)
     }
+
+    private def orEmpty(st: InternalRow, field: Int): String =
+      if (st.isNullAt(field)) "" else st.getUTF8String(field).toString
   }
 
   /** `process` over an untyped (doc_id, spans) DataFrame. */

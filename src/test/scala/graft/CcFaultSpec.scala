@@ -1,17 +1,23 @@
 package graft
 
+import graft.core.{Doc, DocOut}
+import graft.corpus.Corpus
+import graft.engine.RuleCompiler
 import graft.pipeline.Dedup
+import graft.spark.{Commit, ShadowSpark}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Failure-tolerance of the dedup closure: `Dedup.connectedComponents` uses
   * RELIABLE checkpoints, so a task that dies mid-run recomputes from the
-  * checkpoint files and the job converges to identical labels. Needs task
-  * retries, which local mode only grants via `local[n, maxFailures]` — so
-  * this suite runs on its own SparkContext (suites execute sequentially in
-  * the forked test JVM; the context is stopped again in afterAll). */
+  * checkpoint files and the job converges to identical labels; and of the
+  * committed writer, whose rows and lineage count a retried task once.
+  * Needs task retries, which local mode only grants via
+  * `local[n, maxFailures]` — so this suite runs on its own SparkContext
+  * (suites execute sequentially in the forked test JVM; the context is
+  * stopped again in afterAll). */
 class CcFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
@@ -60,6 +66,40 @@ class CcFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       5L -> 5L, 6L -> 5L, 4L -> 4L, 7L -> 7L, 8L -> 8L))
   }
 
+  test("writeResumable: a retried task counts once in the rows and the commit") {
+    import spark.implicits._
+    val program = RuleCompiler.compileJson(Seq(Corpus.headRules, Corpus.corpusRules))
+    assert(program.compileErrors.isEmpty)
+    val docs = Corpus.generate(spark, 200, 4)
+    def write(d: Dataset[Doc]): (Seq[DocOut], Commit) = {
+      val path = TempDirs.create("graft_retry").resolve("out").toString
+      assert(ShadowSpark.writeResumable(d, program, path) == Seq(0))
+      (spark.read.parquet(path).as[DocOut].collect().sortBy(_.doc_id).toSeq,
+        ShadowSpark.commit(path).get)
+    }
+    val (cleanRows, clean) = write(docs)
+
+    // attempt 0 of partition 0 writes its first row, then dies
+    CcFaultSpec.deaths.set(0)
+    val poisoned = docs.mapPartitions { it =>
+      val tc = TaskContext.get()
+      if (tc.partitionId() != 0 || tc.attemptNumber() != 0) it
+      else it.zipWithIndex.map { case (d, i) =>
+        if (i == 1) {
+          CcFaultSpec.deaths.incrementAndGet()
+          throw new RuntimeException("injected task death (CcFaultSpec)")
+        }
+        d
+      }
+    }
+    val (rows, c) = write(poisoned)
+    assert(CcFaultSpec.deaths.get == 1)
+    assert(clean.n_docs == 200)
+    assert(rows == cleanRows)
+    assert((c.n_docs, c.doc_lo, c.doc_hi, c.checksum, c.n_errors) ==
+      (clean.n_docs, clean.doc_lo, clean.doc_hi, clean.checksum, clean.n_errors))
+  }
+
   test("connectedComponents fails loudly instead of returning partial labels") {
     import spark.implicits._
     // a 6-hop chain cannot close in 1 iteration of min-label propagation
@@ -70,4 +110,9 @@ class CcFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e.getMessage.contains("did not converge"))
   }
+}
+
+object CcFaultSpec {
+  /** Injected task deaths; tasks run in this JVM in local mode. */
+  val deaths = new java.util.concurrent.atomic.AtomicInteger
 }

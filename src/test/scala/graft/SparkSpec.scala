@@ -3,11 +3,16 @@ package graft
 import graft.core.{Doc, DocOut, Span}
 import graft.corpus.Corpus
 import graft.engine.{RuleCompiler, ShadowEngine}
+import graft.html.HtmlParser.MediaMarker
 import graft.pipeline.{Dedup, Multimodal, TextStats}
 import graft.rules.RuleParser
 import graft.spark.{Commit, ShadowSpark}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable.ArrayBuffer
@@ -85,8 +90,7 @@ class SparkSpec extends AnyFunSuite {
   test("spans out of offset order decode in offset order, as the per-row engine does") {
     val p = RuleCompiler.compile(Seq(RuleParser.parseStr(
       """{"s":"p","data":{"path":"d","values":{"c":{"source":"Contents"}}}}""", new ArrayBuffer[String])))
-    // 2-, 3- and 4-byte UTF-8 text around a media span, stored shuffled;
-    // the in-order doc first, so the task's layout self-check runs too
+    // 2-, 3- and 4-byte UTF-8 text around a media span, stored shuffled
     val inOrder = Doc("a", Seq(Span("html", "<p>\u00e9</p>", "", 0)))
     val shuffled = Doc("b", Seq(
       Span("html", "\ud83d\ude00 \u00e9t\u00e9</p>", "", 3),
@@ -99,6 +103,50 @@ class SparkSpec extends AnyFunSuite {
     assert(out == reference(docs, p))
     assert(out(1).data_json == "{\"d\":{\"c\":\"\u4e16\u754c \u00fc \ud83d\ude00 \u00e9t\u00e9\"}}",
       out(1).data_json)
+
+    // the decoder itself, on both array forms it is handed: the UnsafeArrayData
+    // a scan gives the operator, and GenericArrayData of GenericInternalRows.
+    // One value holds every null the null policy names, tied and shuffled
+    // offsets, and 2-, 3- and 4-byte UTF-8 before a media span.
+    def u(s: String) = if (s == null) null else UTF8String.fromString(s)
+    def span(kind: String, text: String, ref: String, offset: Integer) =
+      new GenericInternalRow(Array[Any](u(kind), u(text), u(ref), offset))
+    val spans = new GenericArrayData(Array[Any](
+      span("html", "\u00e9\u4e16\ud83d\ude00 ", "", 3),
+      null, // null element: dropped
+      span("media", null, null, 4), // null text and ref: ""
+      span(null, "<x>", "", 0), // null kind: dropped
+      span("html", null, "", 1), // null html text: dropped
+      span("html", "<p>", "", null), // null offset: 0
+      span("media", "payload", "media://m", 2),
+      span("html", "</p>", "", 5),
+      span("html", "|", "", 3))) // ties offset 3: stays after it
+    val schema = new StructType().add("doc_id", StringType).add("spans", ArrayType(
+      new StructType().add("kind", StringType).add("text", StringType)
+        .add("media_ref", StringType).add("offset", IntegerType)))
+    val generic = new GenericInternalRow(Array[Any](u("d"), spans))
+    val unsafe = UnsafeProjection.create(schema)(generic)
+    assert(unsafe.getArray(1).isInstanceOf[UnsafeArrayData])
+    val dec = new ShadowSpark.SpanStreamDecoder
+    for (row <- Seq(unsafe, generic)) {
+      assert(dec.decode(row) == "<p>\u00e9\u4e16\ud83d\ude00 |</p>", row.getClass)
+      assert(dec.markers == Seq(MediaMarker(3, "media://m", "payload"), MediaMarker(9, "", "")),
+        row.getClass)
+    }
+  }
+
+  test("process(Doc) joins null spans and fields as the operator's decoder does") {
+    val docs = Seq(
+      Doc("n1", Seq(null, Span("html", "<p>a</p>", "", 0))),
+      Doc("n2", Seq(Span(null, "<p>dropped</p>", "", 0), Span("html", "<p>b</p>", "", 1))),
+      Doc("n3", Seq(Span("html", null, "", 0), Span("html", "<p>c</p>", "", 1))),
+      Doc("n4", Seq(Span("html", "<p>d", "", 0), Span("media", null, "media://n4", 1),
+        Span("media", "payload", null, 2), Span("html", "</p>", "", 3))))
+    val out = ShadowSpark.op(spark.createDataset(docs).toDF(), program)
+      .as[DocOut].collect().sortBy(_.doc_id).toSeq
+    assert(out == reference(docs))
+    assert(out(3).spans.filter(_.kind == "media").map(s => (s.text, s.media_ref)) ==
+      Seq(("", "media://n4"), ("payload", "")))
   }
 
   test("s2 chunking splits on code points: astral text survives 7-char spans") {

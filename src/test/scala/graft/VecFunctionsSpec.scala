@@ -59,6 +59,9 @@ class VecFunctionsSpec extends AnyFunSuite {
     val sp = Seq(Float.PositiveInfinity).toDF("x")
       .select(expr("cast(round(x * 1000) as bigint)"))
     assertThrows[Exception](sp.collect())
+    assert(VecOps.quantize1000(Float.NaN) == 0L)
+    assert(VecOps.quantize1000(Float.PositiveInfinity) == Long.MaxValue)
+    assert(VecOps.quantize1000(Float.NegativeInfinity) == Long.MinValue)
   }
 
   test("quantize_vec / qdot_lit / quantize_dot_lit / qdot_pair match the HOF SQL") {
