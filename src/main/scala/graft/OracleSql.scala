@@ -213,10 +213,10 @@ ORDER BY qdot DESC, a.vec_id LIMIT $k"""
     s"WITH $ctes\n$pairSelect ORDER BY id1, id2"
   }
 
-  /** dd6_dedup_components: recursive-CTE replay of the min-label
-    * connected-components closure over the dd2 anchor pairs —
-    * component(x) = min doc_id reachable from x in the undirected
-    * candidate graph (Dedup.connectedComponents converges to the same). */
+  /** dd6_dedup_components: recursive-CTE reachability closure over the
+    * dd2 anchor pairs — component(x) = min doc_id reachable from x in the
+    * undirected candidate graph, the label Dedup.connectedComponents's
+    * large-star/small-star rounds close on. */
   def dd6ConnectedComponents: String = {
     val (ctes, perDoc) = ccParts
     s"WITH RECURSIVE $ctes\n$perDoc\nORDER BY s.doc_id"

@@ -481,7 +481,7 @@ object SparkEntry {
         .orderBy("id1", "id2")),
 
     // dd6: the dedup CLOSURE — connected components over the dd2 anchor
-    // pairs via iterative min-label propagation (one keep-decision per
+    // pairs via large-star/small-star rounds (one keep-decision per
     // duplicate cluster, chains across buckets resolved)
     "dd6_dedup_components" -> ((s, dir) => {
       val surv = Dedup.exactSurvivors(documents(s, dir))

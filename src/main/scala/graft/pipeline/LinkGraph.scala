@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   * Plan shape per iteration: one join of the edge table against the
   * 2-longs-per-node rank table on src (the edge table's outdegree join
   * is loop-invariant and computed once), a hash aggregation on dst, and
-  * a left join back to the node list for the teleport term — the same
-  * per-iteration cost profile as connectedComponents (Pipeline.scala),
-  * which also documents the checkpoint discipline a deployment applies
-  * for deep iteration counts (every ~5 iterations; at the fixed small
-  * iteration counts used here lineage stays shallow).
+  * a left join back to the node list for the teleport term. A reliable
+  * checkpoint every 5 iterations bounds the plan depth, and one after the
+  * last makes the returned table concrete, so the cached edge table is
+  * released before the call returns (checkpoint dir rules as in
+  * `Dedup.ensureCheckpointDir`).
   */
 object LinkGraph {
 
@@ -55,6 +55,7 @@ object LinkGraph {
     val edgesWithDeg = edges.join(
       edges.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dedup.ensureCheckpointDir(nodes.sparkSession)
     var ranks = nodes.select(col("node"), lit(r0).as("rank"))
     var i = 0
     while (i < iters) {
@@ -65,16 +66,16 @@ object LinkGraph {
         .select(col("node"),
           (lit(base) + expr("(85 * coalesce(in_mass, 0L)) div 100")).as("rank"))
       i += 1
-      // deep-iteration lineage guard, same discipline as
-      // Dedup.connectedComponents: a reliable checkpoint every 5 power
-      // steps keeps the plan depth bounded at iters up to the allowed 64
-      // (never fires at the shallow iteration counts the bench queries
-      // use; ranks are 2 longs/node, so the write is metadata-scale)
-      if (i % 5 == 0 && i < iters) {
-        Dedup.ensureCheckpointDir(ranks.sparkSession)
-        ranks = ranks.checkpoint(true)
-      }
+      // reliable checkpoints (the shared dir, as in
+      // Dedup.connectedComponents): every 5 power steps keeps the plan
+      // depth bounded at iters up to the allowed 64, and the last one makes
+      // the result concrete, so the edge table's cache can be dropped
+      // before returning (ranks are 2 longs/node: a metadata-scale write)
+      if (i % 5 == 0 || i == iters) ranks = ranks.checkpoint(true)
     }
+    // a long-lived session's CacheManager would otherwise hold one cached
+    // edge table per call until the session stops
+    edgesWithDeg.unpersist()
     ranks
   }
 }

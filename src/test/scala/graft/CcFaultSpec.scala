@@ -43,9 +43,9 @@ class CcFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     // poison: attempt 0 of partition 0 throws wherever this stage runs —
-    // the label-table checkpoint materialization (= the loop's data source)
-    // loses a task, Spark retries the task (attempt 1 passes), and the
-    // iterations proceed from the on-disk checkpoint
+    // the first round's checkpoint job (= the loop's data source) loses a
+    // task, Spark retries the task (attempt 1 passes), and the rounds
+    // proceed from the on-disk checkpoint
     val poisonedNodes = nodes.as[Long].mapPartitions { it =>
       val tc = TaskContext.get()
       if (tc != null && tc.partitionId() == 0 && tc.attemptNumber() == 0)
@@ -102,7 +102,7 @@ class CcFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("connectedComponents fails loudly instead of returning partial labels") {
     import spark.implicits._
-    // a 6-hop chain cannot close in 1 iteration of min-label propagation
+    // a 6-node chain is no star forest after one round (a lone large-star)
     val chain = (1L to 6L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("id1", "id2")
     val nodes = (1L to 6L).toDF("doc_id")
     val e = intercept[IllegalStateException] {

@@ -29,21 +29,14 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(r == Seq((0L, 366503875924L), (1L, 210739728655L), (2L, 522268023191L)))
   }
 
-  test("pagerank: deep iteration (checkpointed every 5) matches the scalar replay") {
-    import spark.implicits._
-    // iters=12 crosses the in-loop reliable checkpoints at i=5 and i=10;
-    // the expected ranks come from a pure-Scala replay of the truncating
-    // integer recurrence, independent of the DataFrame loop
-    val n = 40
-    val edgeSeq = (0 until n).flatMap { u =>
-      Seq((u.toLong, ((u * 7 + 1) % n).toLong), (u.toLong, ((u * 13 + 3) % n).toLong))
-    }
-    val edges = edgeSeq.toDF("src", "dst")
-    val nodes = (0 until n).map(_.toLong).toDF("node")
-    val iters = 12
-    val got = LinkGraph.pagerankFixedPoint(edges, nodes, iters)
-      .as[(Long, Long)].collect().toMap
+  /** 40 nodes, two outlinks each. */
+  private val ringEdges: Seq[(Long, Long)] = (0 until 40).flatMap { u =>
+    Seq((u.toLong, ((u * 7 + 1) % 40).toLong), (u.toLong, ((u * 13 + 3) % 40).toLong))
+  }
 
+  /** Pure-Scala replay of the truncating integer recurrence, independent
+    * of the DataFrame loop. */
+  private def scalarReplay(edgeSeq: Seq[(Long, Long)], n: Int, iters: Int): Map[Long, Long] = {
     val outdeg = edgeSeq.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val r0 = LinkGraph.RankScale / n
     val base = r0 * 15 / 100
@@ -53,15 +46,34 @@ class LinkGraphSpec extends AnyFunSuite {
       edgeSeq.foreach { case (s, d) => mass(d) += ranks(s) / outdeg(s) }
       ranks = ranks.keys.map(u => u -> (base + 85L * mass(u) / 100L)).toMap
     }
-    assert(got == ranks)
+    ranks
+  }
+
+  test("pagerank: deep iteration (checkpointed every 5) matches the scalar replay") {
+    import spark.implicits._
+    // iters=12 crosses the in-loop reliable checkpoints at i=5 and i=10
+    val got = LinkGraph.pagerankFixedPoint(ringEdges.toDF("src", "dst"),
+      (0 until 40).map(_.toLong).toDF("node"), iters = 12).as[(Long, Long)].collect().toMap
+    assert(got == scalarReplay(ringEdges, 40, 12))
+  }
+
+  test("pagerank: a call leaves no persisted RDD behind and matches the scalar replay") {
+    import spark.implicits._
+    // a graph no other case uses: a table some earlier call left cached
+    // would be reused here and hide a leak
+    val edgeSeq = (0 until 30).flatMap(u => Seq((u.toLong, ((u * 11 + 5) % 30).toLong)))
+    val nodes = (0 until 30).map(_.toLong).toDF("node")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val got = LinkGraph.pagerankFixedPoint(edgeSeq.toDF("src", "dst"), nodes, iters = 3)
+      .as[(Long, Long)].collect().toMap
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert(got == scalarReplay(edgeSeq, 30, 3))
   }
 
   test("pagerank: mass is conserved up to truncation dust and ranking is sane") {
     import spark.implicits._
     val n = 40
-    val edges = (0 until n).flatMap { u =>
-      Seq((u.toLong, ((u * 7 + 1) % n).toLong), (u.toLong, ((u * 13 + 3) % n).toLong))
-    }.toDF("src", "dst")
+    val edges = ringEdges.toDF("src", "dst")
     val nodes = (0 until n).map(_.toLong).toDF("node")
     val r = LinkGraph.pagerankFixedPoint(edges, nodes, iters = 5)
       .as[(Long, Long)].collect().toMap

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan shape pins for the scale-critical queries: these fail if
   * a refactor silently turns a broadcast join into a shuffle join, lets a
@@ -157,8 +162,30 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** Executed plans of the `checkpoint` actions that building query `name`
+    * runs: an iterative operator's loop plan runs in those jobs, and the
+    * query it returns only scans the last checkpoint. */
+  private def checkpointPlans(name: String): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "checkpoint") plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries(name)(spark, dir)
+      // the listener is called from the listener bus, after the action
+      val deadline = System.nanoTime() + 10000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally spark.listenerManager.unregister(l)
+    assert(!plans.isEmpty, s"$name ran no checkpoint")
+    plans.asScala.toSeq
+  }
+
   test("pr1: the PageRank iteration joins are keyed — never cartesian/nested-loop") {
-    val p = plan("pr1_pagerank")
+    // the power steps run in the checkpoint job that makes the result concrete
+    val p = checkpointPlans("pr1_pagerank").mkString("\n")
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     // per-iteration mass aggregation must combine map-side

@@ -361,8 +361,8 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("dd6: connected components resolve chained candidate pairs to the min anchor") {
-    // 1-2-3-9 is a CHAIN (anchor pairs across different buckets) — min-label
-    // propagation must walk it over several iterations, not just one hop
+    // 1-2-3-9 is a CHAIN (anchor pairs across different buckets) — the
+    // closure must reach 9 from 1, not just one hop
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id1", "id2")
     val nodes = (1L to 9L).toDF("doc_id")
     val comp = Dedup.connectedComponents(pairs, nodes)
@@ -372,9 +372,9 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("dd6: empty candidate set leaves every node its own component") {
-    // the subgraph propagation path: with no edges the label table is
-    // empty after iteration 1 (converged immediately) and every node must
-    // come back from the final isolated-node attach join with its own id
+    // with no edges the first round's edge table is empty, its star test
+    // counts nothing and the loop stops there; every node must come back
+    // from the final attach join with its own id
     val pairs = Seq.empty[(Long, Long)].toDF("id1", "id2")
     val nodes = (1L to 5L).toDF("doc_id")
     val comp = Dedup.connectedComponents(pairs, nodes)
