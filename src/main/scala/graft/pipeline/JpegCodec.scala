@@ -2,21 +2,20 @@ package graft.pipeline
 
 import java.io.ByteArrayOutputStream
 
-/** Pure-JVM baseline JPEG codec (ITU T.81): a real Huffman entropy
+/** Pure-JVM Huffman JPEG codec (ITU T.81): a real Huffman entropy
   * decoder — canonical code tables (Annex C), byte destuffing (F.1.2.3),
-  * restart markers, DC prediction, AC run/size coding with ZRL/EOB —
-  * feeding dequantization and a full 2D IDCT (A.3.3) with level shift,
-  * for sequential-DCT grayscale and YCbCr images at sampling factors 1
-  * and 2 per axis: 4:4:4, 4:2:2, 4:4:0 and 4:2:0 (the general
-  * interleaved MCU loop of A.2.3, subsampled chroma planes upsampled
-  * with libjpeg-compatible fancy triangle filters — what real crawl
-  * JPEGs overwhelmingly are). PROGRESSIVE (SOF2) Huffman images decode
-  * too: multi-scan coefficient accumulation with spectral selection and
-  * successive approximation (T.81 G.2) — DC first/refinement scans
-  * (interleaved or not), AC first scans with EOB runs, and the AC
-  * refinement correction-bit pass (G.1.2.3) — then one dequant+IDCT
-  * over the accumulated coefficients. Arithmetic-coded, lossless,
-  * hierarchical, 12-bit and 3x/4x-sampled images return None.
+  * restart markers, DC prediction, AC run/size coding with ZRL/EOB and
+  * EOB runs, successive-approximation refinement (G.1.2.3) — feeding
+  * dequantization and a full 2D IDCT (A.3.3) with level shift, for
+  * grayscale and YCbCr images at sampling factors 1 and 2 per axis:
+  * 4:4:4, 4:2:2, 4:4:0 and 4:2:0 (the general interleaved MCU loop of
+  * A.2.3, subsampled chroma planes upsampled with libjpeg-compatible
+  * fancy triangle filters — what real crawl JPEGs overwhelmingly are).
+  * Sequential (SOF0/SOF1) and progressive (SOF2) frames share one path:
+  * every scan accumulates coefficients (T.81 G.2), a sequential scan
+  * being the whole 0..63 band at full precision, then one dequant+IDCT
+  * runs over them. Arithmetic-coded, lossless, hierarchical, 12-bit and
+  * 3x/4x-sampled images return None.
   *
   * The matching builders emit DC-ONLY JPEGs (every 8x8 block a flat
   * value — the one case where ANY conformant IDCT is bit-exact, so an
@@ -118,6 +117,17 @@ object JpegCodec {
       false
     }
 
+    /** Offset of the marker after the entropy segment: the 0xFF of the
+      * first marker other than stuffed 0xFF00 and RSTn, or -1 if none. */
+    def nextMarker(): Int = {
+      if (hitMarker >= 0) return pos - 2
+      var p = pos
+      while (p + 1 < b.length &&
+        !((b(p) & 0xff) == 0xff && (b(p + 1) & 0xff) != 0x00 &&
+          ((b(p + 1) & 0xff) < 0xd0 || (b(p + 1) & 0xff) > 0xd7))) p += 1
+      if (p + 1 >= b.length) -1 else p
+    }
+
     def decodeHuff(t: HuffTable): Int = {
       var code = bit()
       if (code < 0) return -1
@@ -187,8 +197,7 @@ object JpegCodec {
 
   // -------------------------------------------------------------- decode
 
-  private final case class Comp(id: Int, h: Int, v: Int, tq: Int,
-                                var dcTab: Int = 0, var acTab: Int = 0)
+  private final case class Comp(id: Int, h: Int, v: Int, tq: Int)
 
   /** Parse one DQT segment (possibly several tables) into `quant`. */
   private def parseDqt(b: Array[Byte], seg: Int, segEnd: Int,
@@ -230,7 +239,17 @@ object JpegCodec {
 
   /** Decode a sequential (SOF0/SOF1) or progressive (SOF2) Huffman JPEG
     * to per-component pixel planes (w*h each, component order as in the
-    * SOF). Grayscale yields 1 plane; color is converted by the caller. */
+    * SOF). Grayscale yields 1 plane; color is converted by the caller.
+    *
+    * One marker loop from SOI to EOI serves both kinds of frame: tables
+    * and DRI may be (re)defined before any scan, and every scan adds to
+    * the frame's DCT coefficient planes (T.81 G.2). A sequential scan
+    * (Ss..Se = 0..63, Ah = Al = 0) decodes each block's DC and then its
+    * AC band 1..63 — a progressive DC first scan and an AC first scan
+    * with Al = 0 in one pass. `finish()` runs dequant + IDCT once over
+    * the coefficients. Once a scan has completed, truncation or damage
+    * later in the stream ends in `finish()` with the completed scans
+    * (crawl JPEGs are routinely cut short); before that it is None. */
   private[graft] def decodePlanes(b: Array[Byte]): Option[(Int, Int, Array[Array[Int]])] = {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     val quant = new Array[Array[Int]](4)
@@ -238,23 +257,28 @@ object JpegCodec {
     val acTabs = new Array[HuffTable](4)
     var comps: Array[Comp] = null
     var w = 0; var h = 0
-    var dri = 0
     var progressive = false
+    var dri = 0
+    var frame: Frame = null // coefficient planes, allocated at the first SOS
+    var sawScan = false
+    def stop(): Option[(Int, Int, Array[Array[Int]])] =
+      if (sawScan) frame.finish(quant) else None
     var i = 2
     while (i + 3 < b.length) {
-      if ((b(i) & 0xff) != 0xff) return None
+      if ((b(i) & 0xff) != 0xff) return stop()
       val m = b(i + 1) & 0xff
-      if (m == 0xd9) return None // EOI before SOS
+      if (m == 0xd9) return stop() // EOI
       val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (len < 2 || i + 2 + len > b.length) return None
+      if (len < 2 || i + 2 + len > b.length) return stop()
       val seg = i + 4
       val segEnd = i + 2 + len
       m match {
         case 0xdb => // DQT: one or more tables
-          if (!parseDqt(b, seg, segEnd, quant)) return None
+          if (!parseDqt(b, seg, segEnd, quant)) return stop()
         case 0xc4 => // DHT: one or more tables
-          if (!parseDht(b, seg, segEnd, dcTabs, acTabs)) return None
+          if (!parseDht(b, seg, segEnd, dcTabs, acTabs)) return stop()
         case 0xc0 | 0xc1 | 0xc2 => // baseline / extended sequential / progressive, Huffman
+          if (comps != null) return stop() // a second frame is out of scope
           progressive = m == 0xc2
           if (seg + 6 > segEnd) return None
           if ((b(seg) & 0xff) != 8) return None // 8-bit precision only
@@ -272,165 +296,269 @@ object JpegCodec {
           // — the shapes real crawl JPEGs use; 3x/4x factors stay out
           if (comps.exists(c => c.h < 1 || c.h > 2 || c.v < 1 || c.v > 2)) return None
         case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-          return None // arithmetic / lossless / hierarchical: out of scope
+          return stop() // arithmetic / lossless / hierarchical: out of scope
         case 0xdd => // DRI
-          if (len != 4) return None
+          if (len != 4) return stop()
           dri = ((b(seg) & 0xff) << 8) | (b(seg + 1) & 0xff)
         case 0xda => // SOS: entropy data follows
           if (comps == null) return None
-          if (progressive)
-            // progressive: the multi-scan loop takes over from this SOS
-            // marker (scans may redefine DHT/DRI between one another)
-            return decodeProgressive(b, i, comps, quant, dcTabs, acTabs, w, h, dri)
           val ns = b(seg) & 0xff
-          if (ns != comps.length || seg + 1 + 2 * ns + 3 > segEnd) return None
+          if (ns < 1 || ns > comps.length || seg + 1 + 2 * ns + 3 > segEnd) return stop()
+          val scanComps = new Array[Int](ns) // indices into comps
+          val scanDc = new Array[HuffTable](ns)
+          val scanAc = new Array[HuffTable](ns)
           var si = 0
           while (si < ns) {
             val cs = b(seg + 1 + 2 * si) & 0xff
             val tabs = b(seg + 2 + 2 * si) & 0xff
-            val comp = comps.find(_.id == cs).getOrElse(return None)
-            comp.dcTab = (tabs & 0xf0) >> 4
-            comp.acTab = tabs & 0x0f
+            val ci = comps.indexWhere(_.id == cs)
+            if (ci < 0 || (tabs & 0xf0) > 0x30 || (tabs & 0x0f) > 3) return stop()
+            scanComps(si) = ci
+            scanDc(si) = dcTabs((tabs & 0xf0) >> 4)
+            scanAc(si) = acTabs(tabs & 0x0f)
             si += 1
           }
-          return decodeScan(b, segEnd, comps, quant, dcTabs, acTabs, w, h, dri)
+          val ss = b(seg + 1 + 2 * ns) & 0xff
+          val se = b(seg + 2 + 2 * ns) & 0xff
+          val ahal = b(seg + 3 + 2 * ns) & 0xff
+          val ah = (ahal & 0xf0) >> 4
+          val al = ahal & 0x0f
+          // G.1.1.1.1: progressive DC scans are the 0..0 band (any Ns), AC
+          // scans a band inside 1..63 and strictly single-component; a
+          // sequential scan is the whole 0..63 band with no approximation
+          val valid =
+            if (progressive) se <= 63 && ss <= se && al <= 13 && (if (ss == 0) se == 0 else ns == 1)
+            else ss == 0 && se == 63 && ahal == 0
+          if (!valid) return stop()
+          if (frame == null) frame = new Frame(comps, w, h)
+          val r = new BitReader(b, segEnd)
+          if (!frame.scan(r, scanComps, scanDc, scanAc, ss, se, ah, al, dri))
+            return stop() // truncated/corrupt mid-scan: keep prior scans
+          sawScan = true
+          i = r.nextMarker()
+          if (i < 0) return stop()
         case _ => () // APPn/COM/etc: skip
       }
-      i = segEnd
+      if (m != 0xda) i = segEnd
     }
-    None
+    stop()
   }
 
-  private def decodeScan(b: Array[Byte], start: Int, comps: Array[Comp],
-                         quant: Array[Array[Int]], dcTabs: Array[HuffTable],
-                         acTabs: Array[HuffTable], w: Int, h: Int,
-                         dri: Int): Option[(Int, Int, Array[Array[Int]])] = {
-    // general interleaved MCU loop (T.81 A.2.3): an MCU is 8*hmax x
-    // 8*vmax image pixels, each component contributing h_c x v_c blocks
-    // into its own (possibly subsampled) plane of ceil(w*h_c/hmax) x
-    // ceil(h*v_c/vmax) samples (A.1.1); subsampled planes are upsampled
-    // to full resolution after the scan
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    val cws = comps.map(c => (w * c.h + hmax - 1) / hmax)
-    val chs = comps.map(c => (h * c.v + vmax - 1) / vmax)
-    val planes = comps.indices.map(i => new Array[Int](cws(i) * chs(i))).toArray
-    val preds = new Array[Int](comps.length)
-    val coef = new Array[Int](64)
-    val px = new Array[Int](64)
-    val r = new BitReader(b, start)
-    var mcu = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (dri > 0 && mcu > 0 && mcu % dri == 0) {
-          if (!r.restart()) return None
-          java.util.Arrays.fill(preds, 0)
+  /** A frame's block geometry and its per-component DCT coefficients.
+    * Non-interleaved (single-component) scans cover the component's own
+    * block grid; interleaved scans cover the MCU-padded grid (A.2.2 /
+    * A.2.3) — coefficients live in the padded layout so both agree. An
+    * MCU is 8*hmax x 8*vmax image pixels, each component contributing
+    * h_c x v_c blocks to its own (possibly subsampled) plane of
+    * ceil(w*h_c/hmax) x ceil(h*v_c/vmax) samples (A.1.1); subsampled
+    * planes are upsampled to full resolution at the end. */
+  private final class Frame(comps: Array[Comp], w: Int, h: Int) {
+    private val hmax = comps.map(_.h).max
+    private val vmax = comps.map(_.v).max
+    private val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
+    private val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
+    private val cws = comps.map(c => (w * c.h + hmax - 1) / hmax)
+    private val chs = comps.map(c => (h * c.v + vmax - 1) / vmax)
+    private val wBlk = cws.map(cw => (cw + 7) / 8)
+    private val hBlk = chs.map(ch => (ch + 7) / 8)
+    private val wPad = comps.map(c => mcusX * c.h)
+    private val coefs = comps.map(c => new Array[Int](mcusX * c.h * mcusY * c.v * 64))
+
+    /** Decode one scan's entropy segment from `r` into the coefficients,
+      * with one Huffman table pair per scan component (`scanDc`,
+      * `scanAc`, null where undefined). False on corrupt or truncated
+      * data; coefficients decoded before the fault stay. */
+    def scan(r: BitReader, scanComps: Array[Int], scanDc: Array[HuffTable],
+             scanAc: Array[HuffTable], ss: Int, se: Int, ah: Int, al: Int,
+             dri: Int): Boolean = {
+      if (ss == 0 && ah == 0 && scanDc.contains(null)) return false
+      if (se > 0 && scanAc.contains(null)) return false
+      val preds = new Array[Int](scanComps.length)
+      val lo = math.max(ss, 1) // the AC band is lo..se
+      var eobrun = 0
+      val p1 = 1 << al
+      val m1 = -1 << al
+
+      // -- per-block decoders ------------------------------------------------
+      def dcBlock(si: Int, co: Array[Int], base: Int): Boolean = {
+        if (ah == 0) {
+          val t = r.decodeHuff(scanDc(si))
+          if (t < 0 || t > 15) return false
+          val diffBits = if (t == 0) 0 else r.receive(t)
+          if (diffBits < 0) return false
+          preds(si) += extend(diffBits, t)
+          co(base) = preds(si) << al
+        } else {
+          val bt = r.bit()
+          if (bt < 0) return false
+          if (bt == 1) co(base) |= p1
         }
-        var ci = 0
-        while (ci < comps.length) {
-          val comp = comps(ci)
-          val dcT = dcTabs(comp.dcTab)
-          val acT = acTabs(comp.acTab)
-          val q = quant(comp.tq)
-          if (dcT == null || acT == null || q == null) return None
-          var bv = 0
-          while (bv < comp.v) {
-            var bh2 = 0
-            while (bh2 < comp.h) {
-              java.util.Arrays.fill(coef, 0)
-              val t = r.decodeHuff(dcT)
-              if (t < 0 || t > 15) return None
-              val diffBits = if (t == 0) 0 else r.receive(t)
-              if (diffBits < 0) return None
-              preds(ci) += extend(diffBits, t)
-              coef(0) = preds(ci) * q(0)
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = r.decodeHuff(acT)
-                if (rs < 0) return None
-                val run = (rs & 0xf0) >> 4
-                val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true
-                } else {
-                  k += run
-                  if (k > 63) return None
-                  val vbits = r.receive(size)
-                  if (vbits < 0) return None
-                  coef(Zig(k)) = extend(vbits, size) * q(Zig(k))
-                  k += 1
-                }
-              }
-              idctBlock(coef, px)
-              // copy the block into the component plane, cropping at its edge
-              val x0 = (mx * comp.h + bh2) * 8
-              val y0 = (my * comp.v + bv) * 8
-              val cw = cws(ci); val chh = chs(ci)
-              var yy = 0
-              while (yy < 8 && y0 + yy < chh) {
-                var xx = 0
-                while (xx < 8 && x0 + xx < cw) {
-                  planes(ci)((y0 + yy) * cw + (x0 + xx)) = px(yy * 8 + xx)
-                  xx += 1
-                }
-                yy += 1
-              }
-              bh2 += 1
-            }
-            bv += 1
-          }
-          ci += 1
-        }
-        mcu += 1
-        mx += 1
+        true
       }
-      my += 1
+
+      def acFirstBlock(co: Array[Int], base: Int, acT: HuffTable): Boolean = {
+        if (eobrun > 0) { eobrun -= 1; return true }
+        var k = lo
+        while (k <= se) {
+          val rs = r.decodeHuff(acT)
+          if (rs < 0) return false
+          val run = (rs & 0xf0) >> 4
+          val size = rs & 0x0f
+          if (size == 0) {
+            if (run == 15) k += 16 // ZRL
+            else {
+              eobrun = (1 << run) - 1 // this block is the run's first member
+              if (run > 0) {
+                val x = r.receive(run)
+                if (x < 0) return false
+                eobrun += x
+              }
+              return true
+            }
+          } else {
+            k += run
+            if (k > se) return false
+            val vb = r.receive(size)
+            if (vb < 0) return false
+            co(base + Zig(k)) = extend(vb, size) << al
+            k += 1
+          }
+        }
+        true
+      }
+
+      /** AC successive-approximation refinement (T.81 G.1.2.3): every
+        * already-nonzero coefficient in the band consumes one correction
+        * bit as the position pointer passes it; run lengths and EOB runs
+        * count only zero-history positions. */
+      def acRefineBlock(co: Array[Int], base: Int, acT: HuffTable): Boolean = {
+        var k = lo
+        if (eobrun == 0) {
+          var brk = false
+          while (k <= se && !brk) {
+            val rs = r.decodeHuff(acT)
+            if (rs < 0) return false
+            var run = (rs & 0xf0) >> 4
+            val size = rs & 0x0f
+            var pending = 0
+            if (size == 0) {
+              if (run != 15) { // EOB run (includes this block)
+                eobrun = 1 << run
+                if (run > 0) {
+                  val x = r.receive(run)
+                  if (x < 0) return false
+                  eobrun += x
+                }
+                brk = true
+              } // run == 15: ZRL — skip 16 zero-history positions
+            } else {
+              if (size != 1) return false // G.1.2.3: refinement sends size 1 only
+              val bt = r.bit()
+              if (bt < 0) return false
+              pending = if (bt == 1) p1 else m1
+            }
+            if (!brk) {
+              var placed = false
+              while (k <= se && !placed) {
+                val idx = base + Zig(k)
+                if (co(idx) != 0) { // correction bit for a known-nonzero coef
+                  val bt = r.bit()
+                  if (bt < 0) return false
+                  if (bt == 1 && (co(idx) & p1) == 0)
+                    co(idx) += (if (co(idx) >= 0) p1 else m1)
+                } else if (run == 0) {
+                  if (pending != 0) co(idx) = pending
+                  placed = true // ZRL's 16th zero, or the new coefficient's slot
+                } else run -= 1
+                k += 1
+              }
+              if (!placed && pending != 0) return false // band ended mid-placement
+            }
+          }
+        }
+        if (eobrun > 0) { // correct the remaining nonzero coefs, then count down
+          while (k <= se) {
+            val idx = base + Zig(k)
+            if (co(idx) != 0) {
+              val bt = r.bit()
+              if (bt < 0) return false
+              if (bt == 1 && (co(idx) & p1) == 0)
+                co(idx) += (if (co(idx) >= 0) p1 else m1)
+            }
+            k += 1
+          }
+          eobrun -= 1
+        }
+        true
+      }
+
+      def block(si: Int, base: Int): Boolean = {
+        val co = coefs(scanComps(si))
+        if (ss == 0) dcBlock(si, co, base) && (se == 0 || acFirstBlock(co, base, scanAc(si)))
+        else if (ah == 0) acFirstBlock(co, base, scanAc(si))
+        else acRefineBlock(co, base, scanAc(si))
+      }
+
+      def restartIfDue(mcu: Int): Boolean = {
+        if (dri > 0 && mcu > 0 && mcu % dri == 0) {
+          if (!r.restart()) return false
+          java.util.Arrays.fill(preds, 0)
+          eobrun = 0
+        }
+        true
+      }
+
+      // -- MCU loops ---------------------------------------------------------
+      var ok = true
+      var mcu = 0
+      if (scanComps.length > 1) {
+        // interleaved scan over the MCU-padded grid
+        var my = 0
+        while (my < mcusY && ok) {
+          var mx = 0
+          while (mx < mcusX && ok) {
+            ok = restartIfDue(mcu)
+            var si = 0
+            while (si < scanComps.length && ok) {
+              val ci = scanComps(si)
+              val c = comps(ci)
+              var bv = 0
+              while (bv < c.v && ok) {
+                var bh2 = 0
+                while (bh2 < c.h && ok) {
+                  ok = block(si, ((my * c.v + bv) * wPad(ci) + (mx * c.h + bh2)) * 64)
+                  bh2 += 1
+                }
+                bv += 1
+              }
+              si += 1
+            }
+            mcu += 1
+            mx += 1
+          }
+          my += 1
+        }
+      } else {
+        // single-component scan over the component's own grid
+        val ci = scanComps(0)
+        var by = 0
+        while (by < hBlk(ci) && ok) {
+          var bx = 0
+          while (bx < wBlk(ci) && ok) {
+            ok = restartIfDue(mcu) && block(0, (by * wPad(ci) + bx) * 64)
+            mcu += 1
+            bx += 1
+          }
+          by += 1
+        }
+      }
+      ok
     }
-    val full = comps.indices.map { i =>
-      if (cws(i) == w && chs(i) == h) planes(i)
-      else upsample(planes(i), cws(i), chs(i), w, h)
-    }.toArray
-    Some((w, h, full))
-  }
 
-  /** Progressive-DCT decode (T.81 G.2): accumulate DCT coefficients for
-    * every component across all scans — DC first and refinement scans
-    * (interleaved MCU order or single-component), AC first scans with
-    * EOB-run coding, AC refinement with per-coefficient correction bits
-    * (G.1.2.3) — then run dequant + IDCT once over the finished
-    * coefficient planes. `sosPos` is the byte offset of the FIRST SOS
-    * marker; tables/DRI may be redefined between scans so the marker
-    * loop continues here. Truncated streams finalize with whatever
-    * scans completed (crawl JPEGs are routinely cut short). */
-  private def decodeProgressive(b: Array[Byte], sosPos: Int, comps: Array[Comp],
-                                quant: Array[Array[Int]], dcTabs: Array[HuffTable],
-                                acTabs: Array[HuffTable], w: Int, h: Int,
-                                dri0: Int): Option[(Int, Int, Array[Array[Int]])] = {
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    val cws = comps.map(c => (w * c.h + hmax - 1) / hmax)
-    val chs = comps.map(c => (h * c.v + vmax - 1) / vmax)
-    // non-interleaved (single-component) scans cover the component's own
-    // block grid; interleaved DC scans cover the MCU-padded grid (A.2.2 /
-    // A.2.3) — coefficients live in the padded layout so both agree
-    val wBlk = comps.indices.map(i => (cws(i) + 7) / 8).toArray
-    val hBlk = comps.indices.map(i => (chs(i) + 7) / 8).toArray
-    val wPad = comps.map(c => mcusX * c.h)
-    val hPad = comps.map(c => mcusY * c.v)
-    val coefs = comps.indices.map(i => new Array[Int](wPad(i) * hPad(i) * 64)).toArray
-    var dri = dri0
-    var sawScan = false
-
-    def finish(): Option[(Int, Int, Array[Array[Int]])] = {
-      if (!sawScan) return None
+    /** Dequantize and inverse-transform every block, crop each component
+      * plane to its size and upsample subsampled planes to w x h. None
+      * when a component's quantization table was never defined. */
+    def finish(quant: Array[Array[Int]]): Option[(Int, Int, Array[Array[Int]])] = {
       val deq = new Array[Int](64)
       val px = new Array[Int](64)
       val planes = comps.indices.map { ci =>
@@ -465,272 +593,6 @@ object JpegCodec {
       }.toArray
       Some((w, h, planes))
     }
-
-    var i = sosPos
-    while (i + 3 < b.length) {
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) return finish() // EOI
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (len < 2 || i + 2 + len > b.length) return finish()
-      val seg = i + 4
-      val segEnd = i + 2 + len
-      m match {
-        case 0xdb => if (!parseDqt(b, seg, segEnd, quant)) return None
-        case 0xc4 => if (!parseDht(b, seg, segEnd, dcTabs, acTabs)) return None
-        case 0xdd =>
-          if (len != 4) return None
-          dri = ((b(seg) & 0xff) << 8) | (b(seg + 1) & 0xff)
-        case 0xc0 | 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-            0xcd | 0xce | 0xcf =>
-          return None // a second frame is out of scope
-        case 0xda =>
-          val ns = b(seg) & 0xff
-          if (ns < 1 || ns > comps.length || seg + 1 + 2 * ns + 3 > segEnd) return None
-          val scanComps = new Array[Int](ns) // indices into comps
-          val scanDc = new Array[Int](ns)
-          val scanAc = new Array[Int](ns)
-          var si = 0
-          while (si < ns) {
-            val cs = b(seg + 1 + 2 * si) & 0xff
-            val tabs = b(seg + 2 + 2 * si) & 0xff
-            val ci = comps.indexWhere(_.id == cs)
-            if (ci < 0) return None
-            scanComps(si) = ci
-            scanDc(si) = (tabs & 0xf0) >> 4
-            scanAc(si) = tabs & 0x0f
-            si += 1
-          }
-          val ss = b(seg + 1 + 2 * ns) & 0xff
-          val se = b(seg + 2 + 2 * ns) & 0xff
-          val ahal = b(seg + 3 + 2 * ns) & 0xff
-          val ah = (ahal & 0xf0) >> 4
-          val al = ahal & 0x0f
-          // G.1.1.1.1: DC scans are the 0..0 band (any Ns); AC scans are a
-          // band inside 1..63 and strictly single-component
-          if (ss > 63 || se > 63 || se < ss || al > 13) return None
-          if (ss == 0 && se != 0) return None
-          if (ss > 0 && ns != 1) return None
-          val next = decodeProgScan(b, segEnd, comps, coefs, dcTabs, acTabs,
-            scanComps, scanDc, scanAc, ss, se, ah, al, dri,
-            mcusX, mcusY, wBlk, hBlk, wPad)
-          if (next < 0) return finish() // truncated/corrupt mid-scan: keep prior scans
-          sawScan = true
-          i = next
-        case _ => () // APPn/COM
-      }
-      if (m != 0xda) i = segEnd
-    }
-    finish()
-  }
-
-  /** Decode one progressive scan's entropy segment, updating `coefs` in
-    * place. Returns the offset of the next marker (0xFF of the marker
-    * following the entropy data), or -1 on corrupt/truncated data. */
-  private def decodeProgScan(b: Array[Byte], start: Int, comps: Array[Comp],
-                             coefs: Array[Array[Int]], dcTabs: Array[HuffTable],
-                             acTabs: Array[HuffTable], scanComps: Array[Int],
-                             scanDc: Array[Int], scanAc: Array[Int],
-                             ss: Int, se: Int, ah: Int, al: Int, dri: Int,
-                             mcusX: Int, mcusY: Int, wBlk: Array[Int],
-                             hBlk: Array[Int], wPad: Array[Int]): Int = {
-    val r = new BitReader(b, start)
-    val preds = new Array[Int](scanComps.length)
-    var eobrun = 0
-    val p1 = 1 << al
-    val m1 = -1 << al
-
-    // -- per-block decoders ------------------------------------------------
-    def dcBlock(si: Int, base: Int): Boolean = {
-      val co = coefs(scanComps(si))
-      if (ah == 0) {
-        val dcT = dcTabs(scanDc(si))
-        if (dcT == null) return false
-        val t = r.decodeHuff(dcT)
-        if (t < 0 || t > 15) return false
-        val diffBits = if (t == 0) 0 else r.receive(t)
-        if (diffBits < 0) return false
-        preds(si) += extend(diffBits, t)
-        co(base) = preds(si) << al
-      } else {
-        val bt = r.bit()
-        if (bt < 0) return false
-        if (bt == 1) co(base) |= p1
-      }
-      true
-    }
-
-    def acFirstBlock(co: Array[Int], base: Int, acT: HuffTable): Boolean = {
-      if (eobrun > 0) { eobrun -= 1; return true }
-      var k = ss
-      while (k <= se) {
-        val rs = r.decodeHuff(acT)
-        if (rs < 0) return false
-        val run = (rs & 0xf0) >> 4
-        val size = rs & 0x0f
-        if (size == 0) {
-          if (run == 15) k += 16 // ZRL
-          else {
-            eobrun = (1 << run) - 1 // this block is the run's first member
-            if (run > 0) {
-              val x = r.receive(run)
-              if (x < 0) return false
-              eobrun += x
-            }
-            return true
-          }
-        } else {
-          k += run
-          if (k > se) return false
-          val vb = r.receive(size)
-          if (vb < 0) return false
-          co(base + Zig(k)) = extend(vb, size) << al
-          k += 1
-        }
-      }
-      true
-    }
-
-    /** AC successive-approximation refinement (T.81 G.1.2.3): every
-      * already-nonzero coefficient in the band consumes one correction
-      * bit as the position pointer passes it; run lengths and EOB runs
-      * count only zero-history positions. */
-    def acRefineBlock(co: Array[Int], base: Int, acT: HuffTable): Boolean = {
-      var k = ss
-      if (eobrun == 0) {
-        var brk = false
-        while (k <= se && !brk) {
-          val rs = r.decodeHuff(acT)
-          if (rs < 0) return false
-          var run = (rs & 0xf0) >> 4
-          val size = rs & 0x0f
-          var pending = 0
-          if (size == 0) {
-            if (run != 15) { // EOB run (includes this block)
-              eobrun = 1 << run
-              if (run > 0) {
-                val x = r.receive(run)
-                if (x < 0) return false
-                eobrun += x
-              }
-              brk = true
-            } // run == 15: ZRL — skip 16 zero-history positions
-          } else {
-            if (size != 1) return false // G.1.2.3: refinement sends size 1 only
-            val bt = r.bit()
-            if (bt < 0) return false
-            pending = if (bt == 1) p1 else m1
-          }
-          if (!brk) {
-            var placed = false
-            while (k <= se && !placed) {
-              val idx = base + Zig(k)
-              if (co(idx) != 0) { // correction bit for a known-nonzero coef
-                val bt = r.bit()
-                if (bt < 0) return false
-                if (bt == 1 && (co(idx) & p1) == 0)
-                  co(idx) += (if (co(idx) >= 0) p1 else m1)
-              } else if (run == 0) {
-                if (pending != 0) co(idx) = pending
-                placed = true // ZRL's 16th zero, or the new coefficient's slot
-              } else run -= 1
-              k += 1
-            }
-            if (!placed && pending != 0) return false // band ended mid-placement
-          }
-        }
-      }
-      if (eobrun > 0) { // correct the remaining nonzero coefs, then count down
-        while (k <= se) {
-          val idx = base + Zig(k)
-          if (co(idx) != 0) {
-            val bt = r.bit()
-            if (bt < 0) return false
-            if (bt == 1 && (co(idx) & p1) == 0)
-              co(idx) += (if (co(idx) >= 0) p1 else m1)
-          }
-          k += 1
-        }
-        eobrun -= 1
-      }
-      true
-    }
-
-    def restartIfDue(mcu: Int): Boolean = {
-      if (dri > 0 && mcu > 0 && mcu % dri == 0) {
-        if (!r.restart()) return false
-        java.util.Arrays.fill(preds, 0)
-        eobrun = 0
-      }
-      true
-    }
-
-    // -- MCU loops ---------------------------------------------------------
-    var ok = true
-    if (ss == 0 && scanComps.length > 1) {
-      // interleaved DC scan over the MCU-padded grid
-      var mcu = 0
-      var my = 0
-      while (my < mcusY && ok) {
-        var mx = 0
-        while (mx < mcusX && ok) {
-          ok = restartIfDue(mcu)
-          var si = 0
-          while (si < scanComps.length && ok) {
-            val c = comps(scanComps(si))
-            var bv = 0
-            while (bv < c.v && ok) {
-              var bh2 = 0
-              while (bh2 < c.h && ok) {
-                val base = ((my * c.v + bv) * wPad(scanComps(si)) + (mx * c.h + bh2)) * 64
-                ok = dcBlock(si, base)
-                bh2 += 1
-              }
-              bv += 1
-            }
-            si += 1
-          }
-          mcu += 1
-          mx += 1
-        }
-        my += 1
-      }
-    } else {
-      // single-component scan (DC or AC) over the component's own grid
-      val ci = scanComps(0)
-      val co = coefs(ci)
-      val acT = if (ss > 0) acTabs(scanAc(0)) else null
-      if (ss > 0 && acT == null) return -1
-      var mcu = 0
-      var by = 0
-      while (by < hBlk(ci) && ok) {
-        var bx = 0
-        while (bx < wBlk(ci) && ok) {
-          ok = restartIfDue(mcu)
-          if (ok) {
-            val base = (by * wPad(ci) + bx) * 64
-            ok =
-              if (ss == 0) dcBlock(0, base)
-              else if (ah == 0) acFirstBlock(co, base, acT)
-              else acRefineBlock(co, base, acT)
-          }
-          mcu += 1
-          bx += 1
-        }
-        by += 1
-      }
-    }
-    if (!ok) return -1
-    // position at the next marker: if the reader already consumed one it
-    // sits at pos-2; otherwise scan past the remaining entropy bytes for
-    // the first 0xFF + real marker (stuffed 0xFF00 and RSTn are data)
-    if (r.hitMarker >= 0) return r.pos - 2
-    var p = r.pos
-    while (p + 1 < b.length &&
-      !((b(p) & 0xff) == 0xff && (b(p + 1) & 0xff) != 0x00 &&
-        ((b(p + 1) & 0xff) < 0xd0 || (b(p + 1) & 0xff) > 0xd7))) p += 1
-    if (p + 1 >= b.length) return -1
-    p
   }
 
   /** Upsample a subsampled component plane (cw x ch) to the full image

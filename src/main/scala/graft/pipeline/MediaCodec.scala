@@ -912,8 +912,8 @@ object MediaCodec {
   }
 
   /** Deep decode to per-channel integer stats over any format with a real
-    * pure-JVM pixel path (PNG zlib+unfilter, GIF LZW+palette, baseline
-    * JPEG huffman+IDCT). Each decoder sniffs its own magic; mm1-style
+    * pure-JVM pixel path (PNG zlib+unfilter, GIF LZW+palette, Huffman
+    * JPEG coefficients+IDCT). Each decoder sniffs its own magic; mm1-style
     * metadata-only containers fall through to None. */
   def decodeImagePixels(b: Array[Byte]): Option[ImagePixels] =
     decodePngPixels(b).orElse(decodeGifPixels(b))
@@ -944,158 +944,10 @@ object MediaCodec {
   // ------------------------------------------------ GIF deep (pixel) decode
   //
   // GIF's image data is LZW-compressed palette indices (GIF89a spec
-  // Appendix F): variable-width codes starting at minCodeSize+1 bits,
-  // LSB-first bit packing, CLEAR/EOI control codes, table capped at 4096
-  // entries. ~100 lines of pure JVM code — no library needed — so GIF
-  // joins PNG in the REAL deep-decode column. Conformance of both
-  // directions is cross-validated in MediaSpec against the JDK's own
-  // javax.imageio GIF codec (an independent implementation, used only in
-  // tests).
-
-  /** GIF-variant LZW compress of `data` (byte symbols 0..2^minCodeSize-1).
-    * Emits CLEAR first, EOI last; resets the table when it fills. */
-  private[graft] def lzwCompress(data: Array[Byte], minCodeSize: Int): Array[Byte] = {
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    var bitBuf = 0L
-    var bitCnt = 0
-    var width = minCodeSize + 1
-    def emit(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt
-      bitCnt += width
-      while (bitCnt >= 8) { out.write((bitBuf & 0xff).toInt); bitBuf >>>= 8; bitCnt -= 8 }
-    }
-    // table: (prefix code << 8 | appended byte) -> code. Boxed Integer on
-    // purpose: a null-unboxing HashMap[Int,Int] would silently read 0.
-    var table = new java.util.HashMap[Integer, Integer]()
-    var next = eoi + 1
-    emit(clear)
-    if (data.nonEmpty) {
-      var w = data(0) & ((1 << minCodeSize) - 1)
-      var i = 1
-      while (i < data.length) {
-        val k = data(i) & ((1 << minCodeSize) - 1)
-        val key: Integer = (w << 8) | k
-        val hit = table.get(key)
-        if (hit != null) {
-          w = hit.intValue()
-        } else {
-          emit(w)
-          // width bump one entry LATER than the decoder's trigger: the
-          // decoder re-creates entry #i one code position later in the
-          // stream than the encoder added it, so the lagged threshold
-          // makes both sides first use the wider width on the same code
-          table.put(key, Integer.valueOf(next))
-          next += 1
-          if (next == (1 << width) + 1 && width < 12) width += 1
-          if (next > 4095) {
-            emit(clear)
-            table = new java.util.HashMap[Integer, Integer]()
-            next = eoi + 1
-            width = minCodeSize + 1
-          }
-          w = k
-        }
-        i += 1
-      }
-      emit(w)
-      // End-of-stream width mirror (same boundary as lzwEncodePdf): the
-      // decoder registers an entry for this final code, which can bump its
-      // width before it reads the EOI — write the EOI at that width.
-      if (i > 1 && next + 1 == (1 << width) && width < 12) width += 1
-    }
-    emit(eoi)
-    if (bitCnt > 0) out.write((bitBuf & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** GIF-variant LZW decompress; `expected` bounds the output (w*h for an
-    * image). None on malformed streams (bad code, missing EOI tolerated
-    * only at exact expected length, table overflow). */
-  private[graft] def lzwDecompress(z: Array[Byte], minCodeSize: Int,
-                                   expected: Int): Option[Array[Byte]] = {
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val out = new ByteArrayOutputStream(expected)
-    var bitPos = 0
-    var width = minCodeSize + 1
-    def read(): Int = {
-      if (bitPos + width > z.length * 8) return -1
-      var v = 0
-      var i = 0
-      while (i < width) {
-        val bit = (z((bitPos + i) >> 3) >> ((bitPos + i) & 7)) & 1
-        v |= bit << i
-        i += 1
-      }
-      bitPos += width
-      v
-    }
-    // table as (prefix, byte) per code; root codes implicit
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    var next = eoi + 1
-    var prev = -1
-    var justBumped = false // width grew on the immediately preceding code
-    def expand(code: Int): Array[Byte] = {
-      var c = code
-      var n = 1
-      while (c >= clear) { n += 1; c = prefix(c) }
-      val res = new Array[Byte](n)
-      c = code
-      var i = n - 1
-      while (c >= clear) { res(i) = suffix(c); c = prefix(c); i -= 1 }
-      res(0) = c.toByte
-      res
-    }
-    var done = false
-    while (!done) {
-      val code = read()
-      if (code < 0) return None
-      if (code == clear) {
-        next = eoi + 1; width = minCodeSize + 1; prev = -1; justBumped = false
-      } else if (code == eoi) {
-        done = true
-      } else if (prev < 0) {
-        if (code >= clear) return None // first code must be a root
-        out.write(code)
-        prev = code
-      } else {
-        val entry: Array[Byte] =
-          if (code < next && (code < clear || code > eoi)) expand(code)
-          else if (code == next && next < 4096) { // K[w]K: the entry being built
-            val p = expand(prev)
-            val e = java.util.Arrays.copyOf(p, p.length + 1)
-            e(p.length) = p(0)
-            e
-          } else {
-            // Invalid code in the stream's FINAL slot right after a width
-            // bump: a real encoder can write the EOI at the pre-bump width
-            // when the decoder-side registration of the last data code
-            // bumps the width (see the end-of-stream mirror in
-            // lzwCompress). Output is already complete at that point; the
-            // caller's expected-length check arbitrates. Mid-stream
-            // invalid codes stay hard errors.
-            if (justBumped && bitPos + width > z.length * 8)
-              return Some(out.toByteArray)
-            return None
-          }
-        out.write(entry, 0, entry.length)
-        justBumped = false
-        if (next < 4096) {
-          prefix(next) = prev
-          suffix(next) = entry(0)
-          next += 1
-          if (next == (1 << width) && width < 12) { width += 1; justBumped = true }
-        }
-        prev = code
-      }
-      if (out.size() > expected) return None
-    }
-    if (out.size() != expected) return None
-    Some(out.toByteArray)
-  }
+  // Appendix F), coded by the one LZW coder (`Lzw`, also PDF's
+  // LZWDecode) with LSB-first codes from minCodeSize+1 bits and no early
+  // change — no library needed — so GIF joins PNG in the REAL
+  // deep-decode column.
 
   /** Interlaced GIF row schedule (GIF89a spec Appendix E): the order
     * display rows appear in the data stream — pass 1 every 8th row from
@@ -1150,7 +1002,7 @@ object MediaCodec {
       while (c < w) { indices(k * w + c) = (index(r, c) & 0xff).toByte; c += 1 }
       k += 1
     }
-    val z = lzwCompress(indices, 8)
+    val z = Lzw.encode(indices, Lzw.gif(8))
     var i = 0
     while (i < z.length) {
       val k2 = math.min(255, z.length - i)
@@ -1218,7 +1070,8 @@ object MediaCodec {
             i += 1 + k
           }
           if (i >= b.length) return None
-          return lzwDecompress(z.toByteArray, minCode, w * h).flatMap { data =>
+          return Lzw.decode(z.toByteArray, Lzw.gif(minCode), w * h)
+            .filter(_.length == w * h).flatMap { data =>
             val nColors = pal.length / 3
             var p = 0
             while (p < data.length) {
@@ -1278,7 +1131,7 @@ object MediaCodec {
   // form `[(a) -250 (b)] TJ`. Stream data may pass through a FILTER
   // CHAIN (§7.4): FlateDecode (zlib — the JVM inflater), LZWDecode
   // (TIFF-style MSB-first variable-width codes with EarlyChange, §7.4.4
-  // — hand-rolled below), ASCIIHexDecode, ASCII85Decode and
+  // — the one LZW coder, `Lzw`), ASCIIHexDecode, ASCII85Decode and
   // RunLengthDecode — all implemented, singly or as a `/Filter [...]`
   // cascade, so REAL text extraction needs no external library. Image
   // codecs inside PDFs (DCTDecode/JPXDecode/CCITT/JBIG2) carry no text
@@ -1436,8 +1289,7 @@ object MediaCodec {
       }
       o.write(128) // EOD
       o.toByteArray
-    case "LZWDecode" =>
-      lzwEncodePdf(d)
+    case "LZWDecode" => Lzw.encode(d, Lzw.pdf(earlyChange = true))
     case other => sys.error(s"pdfFilterEncode: unsupported filter $other")
   }
 
@@ -1703,7 +1555,7 @@ object MediaCodec {
       acc.flatMap { d =>
         f match {
           case "FlateDecode" => Zlib.inflate(d, nowrap = false, cap)
-          case "LZWDecode" => lzwDecodePdf(d, cap, earlyChange)
+          case "LZWDecode" => Lzw.decode(d, Lzw.pdf(earlyChange), cap)
           case "ASCIIHexDecode" => asciiHexDecode(d)
           case "ASCII85Decode" => ascii85Decode(d, cap)
           case "RunLengthDecode" => runLengthDecode(d, cap)
@@ -1810,163 +1662,6 @@ object MediaCodec {
       if (out.size() > cap) return None
     }
     None // ran out without EOD: corrupt per §7.4.5
-  }
-
-  /** LZWDecode (§7.4.4 — TIFF-style LZW): MSB-first packed variable-width
-    * codes starting at 9 bits, Clear=256, EOD=257, table grows to 4096,
-    * code width bumps one code EARLY when EarlyChange=1 (the default).
-    * Distinct from the GIF LZW above: opposite bit packing order, fixed
-    * 8-bit roots, and the early-change quirk. */
-  private[graft] def lzwDecodePdf(z: Array[Byte], cap: Int,
-                                  earlyChange: Boolean): Option[Array[Byte]] = {
-    val Clear = 256
-    val Eod = 257
-    val out = new ByteArrayOutputStream(z.length * 3 + 64)
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val scratch = new Array[Byte](4096)
-    var tableSize = 258
-    var width = 9
-    var prev = -1
-    var justBumped = false // width grew on the immediately preceding code
-    var bitBuf = 0
-    var bitCnt = 0
-    var pos = 0
-    def nextCode(): Int = {
-      while (bitCnt < width) {
-        if (pos >= z.length) return -1
-        bitBuf = (bitBuf << 8) | (z(pos) & 0xff)
-        bitCnt += 8
-        pos += 1
-      }
-      bitCnt -= width
-      (bitBuf >> bitCnt) & ((1 << width) - 1)
-    }
-    /** Expand `code` into scratch (reversed walk), return (start, first byte). */
-    def expand(code: Int): Int = {
-      var c = code
-      var top = scratch.length
-      while (c >= 258) { top -= 1; scratch(top) = suffix(c); c = prefix(c) }
-      top -= 1
-      scratch(top) = c.toByte
-      top
-    }
-    while (true) {
-      val code = nextCode()
-      if (code < 0) return Some(out.toByteArray) // EOF without EOD: tolerate
-      if (code == Eod) return Some(out.toByteArray)
-      if (code == Clear) { tableSize = 258; width = 9; prev = -1; justBumped = false }
-      else {
-        if (code > tableSize || code == Eod || (prev < 0 && code >= 256)) {
-          // Real-world encoders write the trailing EOD at the PRE-bump
-          // width when the final data code's table registration crossed
-          // the width threshold (the encoder never registers that entry,
-          // so it doesn't see the bump) — the misread then lands in the
-          // stream's final code slot, right after a width bump. Tolerate
-          // exactly that; anywhere else an invalid code means corruption.
-          if (justBumped && pos >= z.length && bitCnt < width)
-            return Some(out.toByteArray)
-          return None // forward reference / root expected after clear
-        }
-        var start = 0
-        if (code == tableSize) { // the K[w]K case: prev's string + its first byte
-          if (prev < 0) return None
-          start = expand(prev)
-          out.write(scratch, start, scratch.length - start)
-          out.write(scratch(start) & 0xff)
-        } else {
-          start = expand(code)
-          out.write(scratch, start, scratch.length - start)
-        }
-        if (out.size() > cap) return None
-        if (prev >= 0 && tableSize < 4096) {
-          prefix(tableSize) = prev
-          suffix(tableSize) = scratch(start) // first byte of this emission
-          tableSize += 1
-        }
-        prev = code
-        // EarlyChange=1 (default): the width bumps one code early — when
-        // the next free slot is 2^w - 1, not 2^w (§7.4.4.2 note). The
-        // decoder's table lags the encoder's by exactly one entry (the
-        // encoder has already registered the string this code begins),
-        // so the decoder bumps at tableSize 2^w - 2 (510/1022/2046),
-        // one before the encoder's own 2^w - 1 — the classic TIFF-LZW
-        // decoder schedule.
-        val effective = tableSize + (if (earlyChange) 2 else 1)
-        justBumped = effective >= (1 << width) && width < 12
-        if (justBumped) width += 1
-      }
-    }
-    None // unreachable
-  }
-
-  /** The matching LZW encoder, used by the PDF builders so the decode
-    * path can be oracled on real compressed bytes. Simple hash-map
-    * string table, emits Clear once up front and EOD at the end, resets
-    * at table fill like real encoders. `earlyChange` must match what the
-    * stream dict will declare (the builder default is the spec default,
-    * 1). */
-  private[graft] def lzwEncodePdf(d: Array[Byte],
-                                  earlyChange: Boolean = true): Array[Byte] = {
-    val out = new ByteArrayOutputStream(d.length + 64)
-    var bitBuf = 0L
-    var bitCnt = 0
-    var width = 9
-    def put(code: Int): Unit = {
-      bitBuf = (bitBuf << width) | code
-      bitCnt += width
-      while (bitCnt >= 8) {
-        bitCnt -= 8
-        out.write(((bitBuf >> bitCnt) & 0xff).toInt)
-      }
-    }
-    // string table: map (prefixCode << 8 | byte) -> code
-    var table = new java.util.HashMap[Integer, Integer]()
-    var nextCode = 258
-    put(256) // Clear up front (recommended by §7.4.4.2)
-    var cur = -1
-    var i = 0
-    while (i < d.length) {
-      val b = d(i) & 0xff
-      if (cur < 0) cur = b
-      else {
-        val key = (cur << 8) | b
-        val hit = table.get(key)
-        if (hit != null) cur = hit.intValue()
-        else {
-          put(cur)
-          if (nextCode < 4096) {
-            table.put(key, nextCode)
-            nextCode += 1
-          }
-          // EarlyChange: width bumps when the next free slot is 2^w - 1,
-          // mirroring the decoder exactly
-          val eff = nextCode + (if (earlyChange) 1 else 0)
-          if (eff >= (1 << width) && width < 12) width += 1
-          if (nextCode == 4096) { // table full: emit Clear, start over
-            put(256)
-            table = new java.util.HashMap[Integer, Integer]()
-            nextCode = 258
-            width = 9
-          }
-          cur = b
-        }
-      }
-      i += 1
-    }
-    if (cur >= 0) put(cur)
-    // End-of-stream width mirror: the decoder registers a table entry for
-    // the final data code above (the encoder never does — there is no
-    // following byte), so when that registration crosses the width
-    // threshold the decoder reads the NEXT code one bit wider. Bump here
-    // so the EOD below is written at the width the decoder will read it.
-    // (Decoder's end-of-stream tableSize equals nextCode: its mid-stream
-    // one-entry lag is cancelled by this extra final registration.)
-    if (cur >= 0 && nextCode + (if (earlyChange) 2 else 1) >= (1 << width) && width < 12)
-      width += 1
-    put(257) // EOD
-    if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-    out.toByteArray
   }
 
   /** Content-stream show-op tokenizer: collects literal strings and

@@ -12,12 +12,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   * logical screen descriptor, JPEG SOFn marker walk, PDF page-tree
   * /Count, WAV/MP4 chunk walks). DEEP decode is ALSO real for PNG (zlib
   * inflate + five-filter scanline reversal), GIF (from-scratch LZW +
-  * palette mapping, incl. interlace and local color tables), baseline
-  * JPEG (canonical Huffman entropy decode + dequant + IDCT, 4:4:4 and
-  * 2x-subsampled chroma, baseline SOF0 AND progressive SOF2 with
-  * spectral selection + successive approximation), and PDF text
-  * (/Length-bounded stream walk + the full ISO 32000-1 §7.4 filter
-  * cascade — Flate, LZW, RunLength, ASCIIHex, ASCII85, chained — +
+  * palette mapping, incl. interlace and local color tables), Huffman
+  * JPEG (one multi-scan coefficient decode for sequential SOF0/SOF1
+  * and progressive SOF2 frames + dequant + IDCT, 4:4:4 and
+  * 2x-subsampled chroma), and PDF text (/Length-bounded stream walk +
+  * the full ISO 32000-1 §7.4 filter cascade — Flate, LZW (the same
+  * coder as GIF's), RunLength, ASCIIHex, ASCII85, chained — +
   * show-op tokenizer, /DecodeParms PNG-row-filter and TIFF predictors
   * reversed) — all pure JVM, cross-validated against the JDK's
   * independent javax.imageio codecs in MediaSpec. PDF-embedded
@@ -41,14 +41,13 @@ object Multimodal {
       height: Int,
       feature: Array[Float])
 
-  /** Feature extractor. For PNG, GIF and baseline JPEG the 8-dim vector
+  /** Feature extractor. For PNG, GIF and Huffman JPEG the 8-dim vector
     * is REAL pixel arithmetic — PNG: full zlib inflate + scanline
     * unfilter; GIF: LZW decompress + palette mapping; JPEG: Huffman
     * entropy decode + dequant + IDCT (MediaCodec.decodeImagePixels), no
     * stub: dims 0-2 per-channel mean, 3-5 per-channel (max-min) spread,
     * both /255, dim 6 log2(pixel count)/32, dim 7 aspect ratio w/(w+h).
-    * Progressive (SOF2) JPEGs decode through the same path. PDFs get a
-    * REAL text-derived feature (pdfFeature over the extracted
+    * PDFs get a REAL text-derived feature (pdfFeature over the extracted
     * content-stream text, any §7.4 filter cascade, predictor
     * DecodeParms reversed). Only genuinely undecodable content
     * (unknown formats, arithmetic/12-bit/lossless JPEG, PDFs whose
@@ -263,8 +262,9 @@ object Multimodal {
     * walk the /Subtype /Image XObject streams, reverse any transport
     * filters, and hand the DCTDecode payload (an embedded JPEG — how
     * PDFs overwhelmingly carry photographs) to the in-house JPEG
-    * decoder (baseline, 4:2:0 and progressive), reduced task-locally to
-    * per-channel integer stats, one row per (image, channel).
+    * decoder (sequential or progressive, 1x/2x sampling), reduced
+    * task-locally to per-channel integer stats, one row per (image,
+    * channel).
     * Scan-local like pixelStats; the 64 MB decode cap bounds task
     * memory. PDFs with no decodable embedded image yield no row. */
   def pdfImageStats(media: DataFrame): DataFrame = {

@@ -78,44 +78,22 @@ object Dedup {
       .drop("__keep")
   }
 
-  /** MinHash + LSH near-dup candidate pairs.
-    * Row-local signature (k hashes over w-token shingles) computed inside
-    * the scan projection — NO shuffle; then band keys exploded (b = k/r per
-    * doc) and a self-join on the band bucket. Scale: the shuffle volume is
-    * b longs per doc (not the text), and the join is on high-entropy band
-    * keys so AQE skew-split handles hot buckets. */
-  def minhashCandidates(docs: DataFrame, k: Int = 64, w: Int = 3, r: Int = 4): DataFrame = {
-    val sigs = docs.select(col("doc_id"),
-      lsh_bands(minhash_sig(col("text"), k, w), r).as("bands"))
-    // posexplode_outer: the non-outer generator adds a `size(bands)>0`
-    // pre-filter that gets pushed into the scan and recomputes the minhash
-    // expression 3x per row; bands are never empty, so outer + a cheap
-    // post-filter on the generated column keeps ONE minhash eval per row
-    val exploded = sigs.select(col("doc_id"),
-      posexplode_outer(col("bands")).as(Seq("band_idx", "band_key")))
-      .where(col("band_key").isNotNull)
-    val a = exploded.as("a")
-    val b = exploded.as("b")
-    a.join(b,
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .distinct()
-  }
-
   /** MinHash+LSH candidates, ANCHOR-PAIR emission (the 100 TB shape):
     * instead of all `k^2·b/2` pairs of a hot bucket, each (band, key)
     * bucket emits `(min_doc_id, doc_id)` — O(k) rows per bucket, and the
     * pairs still connect every bucket member into one component for the
     * downstream union-find/verify step. One window-min per bucket (shuffle
-    * on the band key, O(k log k) sort, spillable) replaces the self-join.
+    * on the band key, O(k log k) sort, spillable) replaces a self-join.
     * Compose with `exactSurvivors` so byte-identical clusters collapse
     * BEFORE sketching (a cluster of a million identical docs shares all b
     * band keys; no bucketing scheme survives that without the pre-pass). */
   def minhashCandidateAnchors(docs: DataFrame, k: Int = 64, w: Int = 3, r: Int = 4): DataFrame = {
     val sigs = docs.select(col("doc_id"),
       lsh_bands(minhash_sig(col("text"), k, w), r).as("bands"))
+    // posexplode_outer: the non-outer generator adds a `size(bands)>0`
+    // pre-filter that gets pushed into the scan and recomputes the minhash
+    // expression 3x per row; bands are never empty, so outer + a cheap
+    // post-filter on the generated column keeps ONE minhash eval per row
     val exploded = sigs.select(col("doc_id"),
       posexplode_outer(col("bands")).as(Seq("band_idx", "band_key")))
       .where(col("band_key").isNotNull)
@@ -126,30 +104,14 @@ object Dedup {
       .distinct()
   }
 
-  /** SimHash near-dup candidates: 64-bit row-local sketch; candidates share
-    * one of four 16-bit chunks (tolerates hamming distance < 4 spread).
-    * Same shuffle shape as minhash, 4 keys per doc. */
-  def simhashCandidates(docs: DataFrame): DataFrame = {
-    val sh = docs.select(col("doc_id"), simhash64(col("text")).as("sh"))
-    val chunks = sh.select(col("doc_id"), col("sh"),
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("ci"), shiftright(col("sh"), i * 16).bitwiseAND(lit(0xffffL)).as("ck"))): _*)).as("c"))
-      .select(col("doc_id"), col("sh"), col("c.ci"), col("c.ck"))
-    val a = chunks.as("a"); val b = chunks.as("b")
-    a.join(b, col("a.ci") === col("b.ci") && col("a.ck") === col("b.ck") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        expr("bit_count(a.sh ^ b.sh)").as("hamming"))
-      .distinct()
-  }
-
-  /** SimHash candidates, ANCHOR-PAIR emission (same rationale as
-    * `minhashCandidateAnchors`): each (chunk_idx, chunk_key) bucket emits
-    * `(min_doc_id, doc_id, hamming_to_anchor)` via one window-min — O(k)
-    * rows per bucket even when the 4x65,536-key space saturates at corpus
-    * scale (10^9+ docs put ~15k docs in every bucket; the old self-join
-    * produced ~10^8 rows per bucket there). The anchor's sketch rides in a
-    * struct-min so hamming needs no join-back. */
+  /** SimHash near-dup candidates, ANCHOR-PAIR emission: a 64-bit
+    * row-local sketch, and docs that share one of its four 16-bit chunks
+    * are candidates. As in `minhashCandidateAnchors`, each (chunk_idx,
+    * chunk_key) bucket emits `(min_doc_id, doc_id, hamming_to_anchor)` via
+    * one window-min — O(k) rows per bucket even when the 4x65,536-key
+    * space saturates at corpus scale (10^9+ docs put ~15k docs in every
+    * bucket; a self-join would produce ~10^8 rows per bucket there). The
+    * anchor's sketch rides in a struct-min so hamming needs no join-back. */
   def simhashCandidateAnchors(docs: DataFrame): DataFrame = {
     val sh = docs.select(col("doc_id"), simhash64(col("text")).as("sh"))
     val chunks = sh.select(col("doc_id"), col("sh"),
@@ -280,7 +242,7 @@ object Dedup {
     * SQL-expressible (DuckDB-oracled) set-similarity: explode distinct
     * shingles, join on doc_id+1, count intersection/union.
     * Scale: shingle explode shuffles token-level data — this exact variant
-    * is the verification path; the scale path is minhashCandidates. */
+    * is the verification path; the scale path is minhashCandidateAnchors. */
   def ngramJaccardConsecutive(docs: DataFrame, w: Int = 3): DataFrame = {
     // array-level join instead of shingle explode: each doc keeps ONE row
     // carrying its distinct-shingle ARRAY, consecutive ids join directly,

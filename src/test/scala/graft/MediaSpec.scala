@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.MediaCodec
+import graft.pipeline.{Lzw, MediaCodec}
 import graft.pipeline.MediaCodec.MediaInfo
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -334,9 +334,10 @@ class MediaSpec extends AnyFunSuite {
     // that caught it.
     for (n <- 200 to 320) {
       val d = Array.tabulate(n)(i => ((i * 131 + (i >> 3) * 17 + i * i % 251) & 0xff).toByte)
-      val dec = MediaCodec.lzwDecodePdf(MediaCodec.lzwEncodePdf(d), 1 << 20, earlyChange = true)
+      val pdf = Lzw.pdf(earlyChange = true)
+      val dec = Lzw.decode(Lzw.encode(d, pdf), pdf, 1 << 20)
       assert(dec.exists(java.util.Arrays.equals(_, d)), s"pdf lzw n=$n")
-      val back = MediaCodec.lzwDecompress(MediaCodec.lzwCompress(d, 8), 8, n)
+      val back = Lzw.decode(Lzw.encode(d, Lzw.gif(8)), Lzw.gif(8), n)
       assert(back.exists(java.util.Arrays.equals(_, d)), s"gif lzw n=$n")
     }
     // the wild instance, end-to-end through the PDF builder + extractor
@@ -360,19 +361,41 @@ class MediaSpec extends AnyFunSuite {
       Array.tabulate(30000)(i => ((i * i + i / 7) % 256).toByte), // forces 12-bit + reset
       Array.tabulate(257)(i => (i % 2).toByte))
     for ((data, fi) <- fixtures.zipWithIndex) {
-      val z = MediaCodec.lzwCompress(data, 8)
-      val back = MediaCodec.lzwDecompress(z, 8, data.length)
+      val z = Lzw.encode(data, Lzw.gif(8))
+      val back = Lzw.decode(z, Lzw.gif(8), data.length)
       assert(back.isDefined, s"fixture $fi failed to decompress")
       assert(java.util.Arrays.equals(back.get, data), s"fixture $fi round-trip mismatch")
     }
     // small alphabet too (min code size 2, the 4-color case)
     val small = Array.tabulate(1000)(i => (i % 4).toByte)
-    val z2 = MediaCodec.lzwCompress(small, 2)
-    assert(MediaCodec.lzwDecompress(z2, 2, small.length).exists(
+    val z2 = Lzw.encode(small, Lzw.gif(2))
+    assert(Lzw.decode(z2, Lzw.gif(2), small.length).exists(
       java.util.Arrays.equals(_, small)))
-    // truncated stream -> None
-    val z3 = MediaCodec.lzwCompress(Array.tabulate(1000)(i => (i % 250).toByte), 8)
-    assert(MediaCodec.lzwDecompress(z3.take(z3.length / 2), 8, 1000).isEmpty)
+    // truncated stream -> None under the GIF caller's exact w*h check
+    val z3 = Lzw.encode(Array.tabulate(1000)(i => (i % 250).toByte), Lzw.gif(8))
+    assert(Lzw.decode(z3.take(z3.length / 2), Lzw.gif(8), 1000).filter(_.length == 1000).isEmpty)
+  }
+
+  test("GIF LZW: the end code goes out at the width the decoder reads it") {
+    // The decoder registers a table entry for the final data code before
+    // it reads the end code, so when that entry reaches 2^width the end
+    // code is one bit wider. An encoder that misses this, on a stream
+    // that ends on a byte boundary, leaves the decoder a bit short. This
+    // seeded 4218-byte input ends that way, after a table reset.
+    val rnd = new scala.util.Random(681)
+    val n = 4000 + rnd.nextInt(6000)
+    val d = Array.fill(n)(rnd.nextInt(256).toByte)
+    assert(n == 114 * 37)
+    assert(Lzw.decode(Lzw.encode(d, Lzw.gif(8)), Lzw.gif(8), n)
+      .exists(java.util.Arrays.equals(_, d)))
+    // the same indices through the GIF container, read by us and by ImageIO
+    val w = 114; val h = 37
+    val gif = MediaCodec.buildGifPixels(w, h, testPalette, (r, c) => d(r * w + c))
+    assert(MediaCodec.decodeGifIndexed(gif).exists(t => java.util.Arrays.equals(t._3, d)))
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(gif))
+    assert(img != null && img.getWidth == w && img.getHeight == h)
+    for (r <- 0 until h; c <- 0 until w)
+      assert(img.getRaster.getSample(c, r, 0) == (d(r * w + c) & 0xff), s"pixel ($r,$c)")
   }
 
   test("GIF pixel decode round-trips; stats match the palette mapping") {
@@ -815,6 +838,81 @@ class MediaSpec extends AnyFunSuite {
     assert(within1 > (w * h) * 8 / 10)
   }
 
+  // ---- one scan loop for sequential and progressive frames ----
+
+  private def jpegPlanes(b: Array[Byte]): Option[Seq[Seq[Int]]] =
+    graft.pipeline.JpegCodec.decodePlanes(b).map(_._3.map(_.toSeq).toSeq)
+
+  /** Byte offsets of the SOS markers (0xFFDA) in `b`. */
+  private def sosAt(b: Array[Byte]): Seq[Int] =
+    (0 until b.length - 1).filter(i => (b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) == 0xda)
+
+  private def imageioGrayJpeg(w: Int, h: Int): Array[Byte] = {
+    val bi = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    for (r <- 0 until h; c <- 0 until w)
+      bi.getRaster.setSample(c, r, 0, (r * r + c * 3 + (r * c) / 5) % 256)
+    val baos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(bi, "jpg", baos), "no JPEG writer in this JDK")
+    baos.toByteArray
+  }
+
+  test("JPEG sequential: bytes after the scan and no EOI decode like the intact file") {
+    import graft.pipeline.JpegCodec
+    def dc(br: Int, bc: Int): Int = ((br * 5 + bc * 11 + 3) % 256) - 128
+    for (jpg <- Seq(JpegCodec.buildJpegDcOnly(21, 13, dc),
+      JpegCodec.buildJpegDcOnly420(21, 13, dc), imageioGrayJpeg(48, 32))) {
+      assert((jpg(jpg.length - 2) & 0xff) == 0xff && (jpg.last & 0xff) == 0xd9)
+      val want = jpegPlanes(jpg)
+      assert(want.isDefined)
+      val noEoi = jpg.dropRight(2)
+      assert(jpegPlanes(noEoi) == want, "no EOI")
+      assert(jpegPlanes(noEoi ++ Array[Byte](0, 0x11, 0x22, 0x7f)) == want, "trailing bytes")
+      // damage after the completed scan: a DHT of table class 4, and a
+      // segment length past the end, where EOI belongs
+      assert(jpegPlanes(noEoi ++ Array(0xff, 0xc4, 0, 5, 0x40, 0, 0).map(_.toByte)) == want, "bad DHT")
+      assert(jpegPlanes(noEoi ++ Array(0xff, 0xe1, 0x7f, 0).map(_.toByte)) == want, "bad length")
+    }
+  }
+
+  test("JPEG progressive: marker damage after completed scans keeps them, as truncation does") {
+    import graft.pipeline.JpegCodec
+    def dcY(br: Int, bc: Int): Int = ((br * 7 + bc * 13 + 50) % 256) - 128
+    val jpg = JpegCodec.buildJpegDcOnly420Progressive(24, 16, dcY)
+    val third = sosAt(jpg)(2) // the first AC scan, after both DC scans
+    val truncated = jpegPlanes(jpg.take(third))
+    assert(truncated.isDefined)
+    def damaged(at: Int, v: Int): Array[Byte] = { val d = jpg.clone(); d(at) = v.toByte; d }
+    assert(jpegPlanes(damaged(third + 5, 9)) == truncated, "unknown component id")
+    assert(jpegPlanes(damaged(third + 6, 0x05)) == truncated, "AC table selector 5")
+    assert(jpegPlanes(damaged(third + 2, 0x7f)) == truncated, "SOS length past the end")
+    // before any completed scan the same damage is None, never a throw
+    val first = sosAt(jpg).head
+    assert(jpegPlanes(damaged(first + 6, 0x50)).isEmpty, "DC table selector 5")
+    assert(jpegPlanes(damaged(first + 5, 9)).isEmpty, "unknown component id")
+  }
+
+  test("JPEG sequential: an SOS that is not the whole 0..63 band at full precision is None") {
+    import graft.pipeline.JpegCodec
+    def dc(br: Int, bc: Int): Int = ((br * 5 + bc * 11 + 3) % 256) - 128
+    for (jpg <- Seq(JpegCodec.buildJpegDcOnly(21, 13, dc), imageioGrayJpeg(48, 32))) {
+      val sos = sosAt(jpg).head
+      val ns = jpg(sos + 4) & 0xff
+      val ssAt = sos + 5 + 2 * ns // Ss, Se, Ah/Al follow the component list
+      assert(jpegPlanes(jpg).isDefined)
+      for ((off, v, what) <- Seq((0, 1, "Ss 1"), (1, 62, "Se 62"), (1, 0, "Se 0"),
+        (2, 0x01, "Al 1"), (2, 0x10, "Ah 1"))) {
+        val bad = jpg.clone()
+        bad(ssAt + off) = v.toByte
+        assert(jpegPlanes(bad).isEmpty, what)
+      }
+      // a selector past the four table slots: None, not an index exception
+      val badTable = jpg.clone()
+      badTable(sos + 6) = 0x44
+      assert(jpegPlanes(badTable).isEmpty, "table selector 4")
+    }
+  }
+
   // ---- deep PDF text extraction (content-stream tokenize + Flate) ----
 
   test("PDF text: hand-built content stream with escapes, Tj, TJ and ' ops") {
@@ -924,27 +1022,27 @@ class MediaSpec extends AnyFunSuite {
     // with many distinct pairs grow the table past 511 and 1023 entries
     for (n <- Seq(3, 64, 2000, 9000)) {
       val d = Array.tabulate(n)(i => ((i * 131 + (i >> 3) * 17 + i * i % 251) & 0xff).toByte)
-      val enc = MediaCodec.lzwEncodePdf(d)
-      val dec = MediaCodec.lzwDecodePdf(enc, 1 << 20, earlyChange = true)
+      val enc = Lzw.encode(d, Lzw.pdf(earlyChange = true))
+      val dec = Lzw.decode(enc, Lzw.pdf(earlyChange = true), 1 << 20)
       assert(dec.isDefined, s"n=$n")
       assert(java.util.Arrays.equals(dec.get, d), s"n=$n")
       // repetitive input drives the K[w]K case (code == next table slot)
       val rep = Array.fill(n)('a'.toByte)
-      val encR = MediaCodec.lzwEncodePdf(rep)
-      val decR = MediaCodec.lzwDecodePdf(encR, 1 << 20, earlyChange = true)
+      val encR = Lzw.encode(rep, Lzw.pdf(earlyChange = true))
+      val decR = Lzw.decode(encR, Lzw.pdf(earlyChange = true), 1 << 20)
       assert(decR.isDefined && java.util.Arrays.equals(decR.get, rep), s"rep n=$n")
     }
     // EarlyChange mismatch MATTERS: an EC=1 stream long enough to cross
     // the first width bump must NOT decode identically under EC=0
     val big = Array.tabulate(4000)(i => ((i * 7 + i / 5) & 0xff).toByte)
-    val ec1 = MediaCodec.lzwEncodePdf(big, earlyChange = true)
-    val underEc0 = MediaCodec.lzwDecodePdf(ec1, 1 << 20, earlyChange = false)
+    val ec1 = Lzw.encode(big, Lzw.pdf(earlyChange = true))
+    val underEc0 = Lzw.decode(ec1, Lzw.pdf(earlyChange = false), 1 << 20)
     assert(!underEc0.exists(java.util.Arrays.equals(_, big)),
       "EC0 decode of an EC1 stream should not round-trip — test is vacuous")
     // and the dict's /EarlyChange 0 is honored end-to-end: hand-build a
     // PDF whose stream is EC=0-encoded
     val raw = "BT (early change zero) Tj ET".getBytes(US_ASCII)
-    val z = MediaCodec.lzwEncodePdf(raw, earlyChange = false)
+    val z = Lzw.encode(raw, Lzw.pdf(earlyChange = false))
     val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Count 1 /Kids [] >> endobj\n" +
       s"4 0 obj << /Length ${z.length} /Filter /LZWDecode " +
       "/DecodeParms << /EarlyChange 0 >> >> stream\n").getBytes(US_ASCII) ++
@@ -952,17 +1050,122 @@ class MediaSpec extends AnyFunSuite {
     assert(MediaCodec.extractPdfText(pdf).contains("early change zero"))
     // corrupt guard: a non-root first code is rejected (9-bit 100000010
     // = code 258 with an empty table)
-    assert(MediaCodec.lzwDecodePdf(Array[Byte](0x81.toByte, 0x00),
-      1 << 20, earlyChange = true).isEmpty)
+    assert(Lzw.decode(Array[Byte](0x81.toByte, 0x00),
+      Lzw.pdf(earlyChange = true), 1 << 20).isEmpty)
     // a declared PNG predictor whose geometry does not divide the data
     // (28 decoded bytes, stride 5) skips the stream instead of emitting
     // garbage — the declared predictor is a lie for this stream
-    val zp = MediaCodec.lzwEncodePdf(raw)
+    val zp = Lzw.encode(raw, Lzw.pdf(earlyChange = true))
     val pdfPred = ("%PDF-1.4\n" +
       s"4 0 obj << /Length ${zp.length} /Filter /LZWDecode " +
       "/DecodeParms << /Predictor 12 /Columns 4 >> >> stream\n").getBytes(US_ASCII) ++
       zp ++ "\nendstream endobj\n%%EOF\n".getBytes(US_ASCII)
     assert(MediaCodec.extractPdfText(pdfPred).isEmpty)
+  }
+
+  // ---- LZW cross-read against the JDK's TIFF LZW coder ----
+
+  /** A gray TIFF written by the JDK's ImageIO TIFF writer with LZW
+    * compression (TIFF 6.0 LZW: MSB-first codes, the EarlyChange 1
+    * schedule), as one tile when `tiled` (tile sides must be multiples
+    * of 16), else in the writer's strips. */
+  private def jdkLzwTiff(w: Int, h: Int, sample: (Int, Int) => Int,
+                         tiled: Boolean): Array[Byte] = {
+    val bi = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    for (r <- 0 until h; c <- 0 until w) bi.getRaster.setSample(c, r, 0, sample(r, c) & 0xff)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
+    val wp = writer.getDefaultWriteParam
+    wp.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    wp.setCompressionType("LZW")
+    if (tiled) {
+      wp.setTilingMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+      wp.setTiling(w, h, 0, 0)
+    }
+    val baos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
+    writer.setOutput(ios)
+    writer.write(null, new javax.imageio.IIOImage(bi, null, null), wp)
+    ios.close(); writer.dispose()
+    baos.toByteArray
+  }
+
+  /** The first IFD's entry for `tag`: (entry offset, field type, values). */
+  private def tiffEntry(t: Array[Byte], tag: Int): (Int, Int, Seq[Int]) = {
+    val le = t(0) == 'I'
+    def u(at: Int, n: Int): Int = {
+      var v = 0
+      for (k <- 0 until n) v = (v << 8) | (t(at + (if (le) n - 1 - k else k)) & 0xff)
+      v
+    }
+    val ifd = u(4, 4)
+    val e = (0 until u(ifd, 2)).map(k => ifd + 2 + 12 * k).find(u(_, 2) == tag)
+      .getOrElse(fail(s"TIFF tag $tag missing"))
+    val typ = u(e + 2, 2)
+    val n = u(e + 4, 4)
+    val size = if (typ == 3) 2 else 4 // SHORT or LONG
+    val at = if (n * size <= 4) e + 8 else u(e + 8, 4)
+    (e, typ, (0 until n).map(k => u(at + k * size, size)))
+  }
+
+  /** The compressed bytes of each strip (tag 273/279) or tile (324/325). */
+  private def tiffSegments(t: Array[Byte]): Seq[Array[Byte]] = {
+    val tiled = scala.util.Try(tiffEntry(t, 324)).isSuccess
+    val offs = tiffEntry(t, if (tiled) 324 else 273)._3
+    val lens = tiffEntry(t, if (tiled) 325 else 279)._3
+    offs.zip(lens).map { case (o, n) => java.util.Arrays.copyOfRange(t, o, o + n) }
+  }
+
+  test("LZW conformance: the JDK's TIFF LZW coder and ours read each other (EarlyChange 1)") {
+    // An independent TIFF 6.0 coder (MSB-first, EarlyChange 1) is the
+    // reference for PDF's LZWDecode schedule: a decoder that widens one
+    // code early returns None from the first 9->10 bump on (16x16), and
+    // a reader of an early-widening encoder misreads from there.
+    // 16x16 is 256 distinct bytes (every code a root: 256 codes cross
+    // 9->10); 64x64 and 256x256 draw from 32 symbols, ~900 codes crossing
+    // 10->11 and ~9800 codes crossing 11->12 and two table resets.
+    def mix(i: Int): Int = ((i * 0x9e3779b1) >>> 27) * 7
+    val cases = Seq(
+      (16, (r: Int, c: Int) => (r * 16 + c) * 167 + 13),
+      (64, (r: Int, c: Int) => mix(r * 64 + c)),
+      (256, (r: Int, c: Int) => mix(r * 256 + c) + r / 64))
+    for ((side, sample) <- cases) {
+      val raw = Array.tabulate(side * side)(i => sample(i / side, i % side).toByte)
+      val tif = jdkLzwTiff(side, side, sample, tiled = true)
+      val Seq(tile) = tiffSegments(tif)
+      if (side == 256) assert(tile.length * 8 / 12 > 4096, "no table reset exercised")
+      // the JDK's encoder -> our decoder
+      val dec = Lzw.decode(tile, Lzw.pdf(earlyChange = true), raw.length)
+      assert(dec.exists(java.util.Arrays.equals(_, raw)), s"${side}x$side: our decode of the JDK's tile")
+      // our encoder -> the JDK's reader: splice our bytes in as the tile
+      val ours = Lzw.encode(raw, Lzw.pdf(earlyChange = true))
+      val spliced = tif ++ ours
+      for ((tag, v) <- Seq(324 -> tif.length, 325 -> ours.length)) {
+        val (e, typ, _) = tiffEntry(spliced, tag)
+        val le = spliced(0) == 'I'
+        val size = if (typ == 3) 2 else 4
+        for (k <- 0 until size)
+          spliced(e + 8 + k) = (v >>> (8 * (if (le) k else size - 1 - k))).toByte
+      }
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(spliced))
+      assert(img != null && img.getWidth == side && img.getHeight == side)
+      for (r <- 0 until side; c <- 0 until side)
+        assert(img.getRaster.getSample(c, r, 0) == (raw(r * side + c) & 0xff),
+          s"${side}x$side: the JDK's read of our tile at ($r,$c)")
+    }
+  }
+
+  test("PDF LZW: a JDK-compressed content stream past the first width bump extracts") {
+    val words = Seq("hash", "join", "column", "stream", "merge", "window", "vector", "table")
+    val text = (0 until 160).map(i => words((i * 7 + i / 3) % 8) + i).mkString(" ")
+    val content = s"BT ($text) Tj ET".getBytes(US_ASCII)
+    // one strip of a 1-row gray TIFF is the JDK coder's LZW of `content`
+    val Seq(z) = tiffSegments(jdkLzwTiff(content.length, 1, (_, c) => content(c), tiled = false))
+    assert(z.length * 8 / 12 > 253, "stream too short to cross 9->10")
+    val pdf = ("%PDF-1.4\n2 0 obj << /Type /Pages /Count 1 /Kids [] >> endobj\n" +
+      s"4 0 obj << /Length ${z.length} /Filter /LZWDecode >> stream\n").getBytes(US_ASCII) ++
+      z ++ "\nendstream endobj\n%%EOF\n".getBytes(US_ASCII)
+    assert(MediaCodec.extractPdfText(pdf).contains(text))
   }
 
   test("PDF predictors: PNG row filters and TIFF differencing reverse exactly") {

@@ -283,18 +283,22 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("dd2: minhash LSH finds planted near-dups") {
-    val pairs = Dedup.minhashCandidates(plantedDocs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // every near-dup pair (i, 100+i) must be a candidate
+    val docs = plantedDocs
+    val anchors = Dedup.minhashCandidateAnchors(docs)
+    val label = Dedup.connectedComponents(anchors, docs.select("doc_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every near-dup pair (i, 100+i) must land in one component
     (0 until 10).foreach { i =>
-      assert(pairs.contains((i.toLong, 100L + i)), s"missing near-dup pair $i")
+      assert(label(i.toLong) == label(100L + i), s"near-dup pair $i split: $label")
     }
     // exact dup too
-    assert(pairs.contains((0L, 200L)))
+    assert(label(0L) == label(200L))
+    // and the 40 unrelated base docs stay apart, so the above is not vacuous
+    assert(label.values.toSet.size == 40)
   }
 
   test("dd3: simhash hamming distance small for near-dups") {
-    val pairs = Dedup.simhashCandidates(plantedDocs)
+    val pairs = Dedup.simhashCandidateAnchors(plantedDocs)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2).toLong)).toMap
     val nd = pairs.filter { case ((a, b), _) => b == a + 100 }
     assert(nd.nonEmpty, "no near-dup pairs found by simhash")
