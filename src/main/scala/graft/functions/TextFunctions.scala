@@ -1,16 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-local text hashing/sketching helpers used by the dedup / similarity
-  * pipeline. All static and allocation-light so the Catalyst expressions
-  * below can call them from generated code (keeping whole-stage codegen
-  * intact instead of falling back to ScalaUDF).
+  * pipeline. All static and allocation-light; `TextFunctions` calls the
+  * Catalyst-typed entry points through `Kernels` (whole-stage codegen
+  * stays intact instead of falling back to ScalaUDF).
   *
   * Deterministic by construction (splitmix64-derived coefficients; no
   * Random, no time).
@@ -74,7 +72,8 @@ object Hashing {
     * source chars — char-for-char the same sequence as hashing the
     * materialized tokens joined by ' ', so signatures are bit-identical to
     * the previous substring-based path. */
-  def minhash(s: UTF8String, k: Int, w: Int): Array[Long] = minhash(s.toString, k, w)
+  def minhash(s: UTF8String, k: Int, w: Int): ArrayData =
+    new GenericArrayData(minhash(s.toString, k, w))
   def minhash(s: String, k: Int, w: Int): Array[Long] = {
     val seeds = permSeeds(k)
     val n = s.length
@@ -132,6 +131,8 @@ object Hashing {
 
   /** LSH band keys from a minhash signature: bands of `r` rows hashed to one
     * long each; docs sharing any band key are near-dup candidates. */
+  def lshBands(sig: ArrayData, r: Int): ArrayData =
+    new GenericArrayData(lshBands(sig.toLongArray(), r))
   def lshBands(sig: Array[Long], r: Int): Array[Long] = {
     val b = sig.length / r
     val out = new Array[Long](b)
@@ -169,6 +170,8 @@ object Hashing {
 
   /** Sign-LSH bucket for an embedding: sign bits of dot products with
     * `planes` deterministic hyperplanes. */
+  def cosLshBucket(vec: ArrayData, planes: Int, seed: Long): Long =
+    cosLshBucket(vec.toFloatArray(), planes, seed)
   def cosLshBucket(vec: Array[Float], planes: Int, seed: Long): Long = {
     var bucket = 0L
     var p = 0
@@ -224,78 +227,15 @@ object Hashing {
   }
 }
 
-/** 64-bit polynomial document fingerprint as a native Catalyst expression;
-  * doGenCode emits a static call so whole-stage codegen stays intact. */
-case class Fingerprint64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Hashing.fingerprint(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.fingerprint($c)")
-  override protected def withNewChildInternal(c: Expression): Fingerprint64 = copy(c)
-}
-
-case class MinHashSig(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    new GenericArrayData(Hashing.minhash(v.asInstanceOf[UTF8String], k, w))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.functions.Hashing.minhash($c, $k, $w))")
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any = Hashing.simhash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.simhash($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(c)
-}
-
-case class LangIdExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = Hashing.langId(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.langId($c)")
-  override protected def withNewChildInternal(c: Expression): LangIdExpr = copy(c)
-}
-
-/** Band keys for minhash-LSH from a signature array. */
-case class LshBandsExpr(child: Expression, r: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
-    new GenericArrayData(Hashing.lshBands(arr, r))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.functions.Hashing.lshBands($c.toLongArray(), $r))")
-  override protected def withNewChildInternal(c: Expression): LshBandsExpr = copy(child = c)
-}
-
-/** Sign-LSH bucket id for a float embedding. */
-case class CosLshBucketExpr(child: Expression, planes: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toFloatArray()
-    Hashing.cosLshBucket(arr, planes, seed)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Hashing.cosLshBucket($c.toFloatArray(), $planes, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): CosLshBucketExpr = copy(child = c)
-}
-
 object TextFunctions {
-  import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-  private def col(e: Expression): Column = ExpressionUtils.column(e)
-  def fingerprint64(c: Column): Column = col(Fingerprint64(expr(c)))
-  def minhash_sig(c: Column, k: Int = 64, w: Int = 3): Column = col(MinHashSig(expr(c), k, w))
-  def simhash64(c: Column): Column = col(SimHash64(expr(c)))
-  def lang_id(c: Column): Column = col(LangIdExpr(expr(c)))
-  def lsh_bands(c: Column, r: Int = 4): Column = col(LshBandsExpr(expr(c), r))
+  private def call(fn: String, dt: DataType)(args: Any*) =
+    Kernels.call(Hashing, fn, dt, returnNullable = false)(args: _*)
+  private val longs = ArrayType(LongType, containsNull = false)
+  def fingerprint64(c: Column): Column = call("fingerprint", LongType)(c)
+  def minhash_sig(c: Column, k: Int = 64, w: Int = 3): Column = call("minhash", longs)(c, k, w)
+  def simhash64(c: Column): Column = call("simhash", LongType)(c)
+  def lang_id(c: Column): Column = call("langId", StringType)(c)
+  def lsh_bands(c: Column, r: Int = 4): Column = call("lshBands", longs)(c, r)
   def cos_lsh_bucket(c: Column, planes: Int = 12, seed: Long = 42L): Column =
-    col(CosLshBucketExpr(expr(c), planes, seed))
-  private def expr(c: Column): Expression = ExpressionUtils.expression(c)
+    call("cosLshBucket", LongType)(c, planes, seed)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -12,7 +10,8 @@ import org.apache.spark.sql.types._
   * Spark's HOFs (`transform`, `zip_with`, `aggregate`) are CodegenFallback:
   * the lambda tree is interpreted per ELEMENT, boxing every value — for a
   * 64-dim embedding dot product that is ~200 boxed evaluations per row.
-  * Each expression below is ONE static JVM call per row.
+  * Each kernel below is ONE static JVM call per row (`VecFunctions`
+  * calls it through `Kernels`).
   *
   * Exactness contract (bit-for-bit vs the SQL it replaces; pinned by
   * VecFunctionsSpec against the live SQL expressions and by the DuckDB
@@ -160,128 +159,19 @@ object VecOps {
   }
 }
 
-case class QuantizeVecExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType,
-    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
-  override def nullSafeEval(v: Any): Any =
-    VecOps.quantizeVec(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.quantizeVec($c)")
-  override protected def withNewChildInternal(c: Expression): QuantizeVecExpr = copy(c)
-}
-
-case class QDotLitExpr(child: Expression, q: Array[Long]) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    VecOps.qdotLit(v.asInstanceOf[ArrayData], q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("qvec", q, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Long $r = graft.functions.VecOps.qdotLit($c, $qRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-         |""".stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): QDotLitExpr = copy(child = c)
-}
-
-case class QuantizeDotLitExpr(child: Expression, q: Array[Long]) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    VecOps.quantizeDotLit(v.asInstanceOf[ArrayData], q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("qvec", q, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Long $r = graft.functions.VecOps.quantizeDotLit($c, $qRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-         |""".stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): QuantizeDotLitExpr = copy(child = c)
-}
-
-case class DotDoubleLitExpr(child: Expression, q: Array[Float]) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    VecOps.dotDoubleLit(v.asInstanceOf[ArrayData], q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("qvec", q, "float[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Double $r = graft.functions.VecOps.dotDoubleLit($c, $qRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-         |""".stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): DotDoubleLitExpr = copy(child = c)
-}
-
-case class Norm2DoubleExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    VecOps.norm2Double(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Double $r = graft.functions.VecOps.norm2Double($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-         |""".stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Norm2DoubleExpr = copy(c)
-}
-
-case class QDotPairExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.qdotPair(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Long $r = graft.functions.VecOps.qdotPair($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-         |""".stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QDotPairExpr =
-    copy(left = l, right = r)
-}
-
-case class IvfCellExpr(child: Expression, cents: Array[Array[Long]]) extends UnaryExpression {
-  private val cn2: Array[Long] = cents.map(c => c.map(v => v * v).sum)
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    VecOps.ivfCell(v.asInstanceOf[ArrayData], cents, cn2)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("cents", cents, "long[][]")
-    val nRef = ctx.addReferenceObj("cn2", cn2, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""java.lang.Integer $r = graft.functions.VecOps.ivfCell($c, $cRef, $nRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.intValue(); }
-         |""".stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): IvfCellExpr = copy(child = c)
-}
-
 object VecFunctions {
-  import org.apache.spark.sql.graftbridge.{ColumnBridge => B}
-  def quantize_vec(c: Column): Column = B.column(QuantizeVecExpr(B.expression(c)))
-  def qdot_lit(c: Column, q: Array[Long]): Column = B.column(QDotLitExpr(B.expression(c), q))
+  // every kernel but quantizeVec returns a boxed null on a length mismatch
+  // or a null element
+  private def call(fn: String, dt: DataType)(args: Any*) =
+    Kernels.call(VecOps, fn, dt, returnNullable = true)(args: _*)
+  def quantize_vec(c: Column): Column =
+    Kernels.call(VecOps, "quantizeVec", ArrayType(LongType), returnNullable = false)(c)
+  def qdot_lit(c: Column, q: Array[Long]): Column = call("qdotLit", LongType)(c, q)
   def quantize_dot_lit(c: Column, q: Array[Long]): Column =
-    B.column(QuantizeDotLitExpr(B.expression(c), q))
-  def dot_double_lit(c: Column, q: Array[Float]): Column =
-    B.column(DotDoubleLitExpr(B.expression(c), q))
-  def norm2_double(c: Column): Column = B.column(Norm2DoubleExpr(B.expression(c)))
-  def qdot_pair(a: Column, b: Column): Column =
-    B.column(QDotPairExpr(B.expression(a), B.expression(b)))
+    call("quantizeDotLit", LongType)(c, q)
+  def dot_double_lit(c: Column, q: Array[Float]): Column = call("dotDoubleLit", DoubleType)(c, q)
+  def norm2_double(c: Column): Column = call("norm2Double", DoubleType)(c)
+  def qdot_pair(a: Column, b: Column): Column = call("qdotPair", LongType)(a, b)
   def ivf_cell(c: Column, cents: Array[Array[Long]]): Column =
-    B.column(IvfCellExpr(B.expression(c), cents))
+    call("ivfCell", IntegerType)(c, cents, cents.map(_.map(v => v * v).sum))
 }

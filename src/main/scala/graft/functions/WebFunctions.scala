@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * before any grouping (domain caps, per-site mixtures, frontier
   * dedup all key on the canonical URL / registered domain).
   *
-  * Static, allocation-light row-local logic (like Hashing) exposed as
-  * native Catalyst expressions whose doGenCode emits a static call, so
+  * Static, allocation-light row-local logic (like Hashing) that
+  * `WebFunctions` calls through `Kernels` (Spark's StaticInvoke), so
   * whole-stage codegen stays intact — no ScalaUDF in the hot scan
   * projection. Public layouts only: RFC 3986 (URI syntax + §5.2.4
   * dot-segment removal), RFC 9309 (robots exclusion protocol).
@@ -406,81 +404,17 @@ object HtmlText {
   }
 }
 
-/** HTML character references resolved, as a native expression. */
-case class HtmlUnescapeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = HtmlText.unescape(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlText.unescape($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlUnescapeExpr = copy(c)
-}
-
-/** Canonical URL as a native expression ("" = unparseable sentinel). */
-case class UrlCanonicalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = Urls.canonicalize(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Urls.canonicalize($c)")
-  override protected def withNewChildInternal(c: Expression): UrlCanonicalizeExpr = copy(c)
-}
-
-/** eTLD+1 of a URL's host as a native expression. */
-case class UrlRegisteredDomainExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = Urls.urlRegisteredDomain(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Urls.urlRegisteredDomain($c)")
-  override protected def withNewChildInternal(c: Expression): UrlRegisteredDomainExpr = copy(c)
-}
-
-/** Outlink resolution (base, ref) -> absolute canonical URL. */
-case class UrlResolveExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(b: Any, r: Any): Any =
-    Urls.resolve(b.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r) => s"graft.functions.Urls.resolve($b, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): UrlResolveExpr =
-    copy(l, r)
-}
-
-/** robots.txt allow/deny decision (robots, agent, path). */
-case class RobotsAllowedExpr(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(r: Any, a: Any, p: Any): Any =
-    Robots.allowed(r.asInstanceOf[UTF8String], a.asInstanceOf[UTF8String],
-      p.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, a, p) => s"graft.functions.Robots.allowed($r, $a, $p)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): RobotsAllowedExpr = copy(f, s, t)
-}
-
-/** The rule pattern that decided (longest match; "" = no rule). */
-case class RobotsRuleExpr(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(r: Any, a: Any, p: Any): Any =
-    Robots.matchedRule(r.asInstanceOf[UTF8String], a.asInstanceOf[UTF8String],
-      p.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, a, p) => s"graft.functions.Robots.matchedRule($r, $a, $p)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): RobotsRuleExpr = copy(f, s, t)
-}
-
 object WebFunctions {
-  import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-  private def col(e: Expression): Column = ExpressionUtils.column(e)
-  private def expr(c: Column): Expression = ExpressionUtils.expression(c)
-  def html_unescape(c: Column): Column = col(HtmlUnescapeExpr(expr(c)))
-  def canonical_url(c: Column): Column = col(UrlCanonicalizeExpr(expr(c)))
+  // every kernel here maps non-null input to non-null output ("" = no answer)
+  private def call(kernels: AnyRef, fn: String, dt: DataType)(args: Column*) =
+    Kernels.call(kernels, fn, dt, returnNullable = false)(args: _*)
+  def html_unescape(c: Column): Column = call(HtmlText, "unescape", StringType)(c)
+  def canonical_url(c: Column): Column = call(Urls, "canonicalize", StringType)(c)
   def resolve_url(base: Column, ref: Column): Column =
-    col(UrlResolveExpr(expr(base), expr(ref)))
-  def registered_domain(c: Column): Column = col(UrlRegisteredDomainExpr(expr(c)))
+    call(Urls, "resolve", StringType)(base, ref)
+  def registered_domain(c: Column): Column = call(Urls, "urlRegisteredDomain", StringType)(c)
   def robots_allowed(robots: Column, agent: Column, path: Column): Column =
-    col(RobotsAllowedExpr(expr(robots), expr(agent), expr(path)))
+    call(Robots, "allowed", BooleanType)(robots, agent, path)
   def robots_rule(robots: Column, agent: Column, path: Column): Column =
-    col(RobotsRuleExpr(expr(robots), expr(agent), expr(path)))
+    call(Robots, "matchedRule", StringType)(robots, agent, path)
 }

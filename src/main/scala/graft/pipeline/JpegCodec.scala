@@ -286,7 +286,7 @@ object JpegCodec {
           w = ((b(seg + 3) & 0xff) << 8) | (b(seg + 4) & 0xff)
           val nc = b(seg + 5) & 0xff
           if (w <= 0 || h <= 0 || (nc != 1 && nc != 3)) return None
-          if (w.toLong * h > (64L << 20) / 3) return None // decoded-size cap
+          if (w.toLong * h > MediaCodec.MaxDecodedBytes / 3) return None // decoded-size cap
           if (seg + 6 + 3 * nc > segEnd) return None
           comps = Array.tabulate(nc) { ci =>
             val o = seg + 6 + 3 * ci

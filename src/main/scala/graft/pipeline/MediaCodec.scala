@@ -29,6 +29,11 @@ import java.util.zip.CRC32
   */
 object MediaCodec {
 
+  /** Decoded-size cap in bytes per image, PDF stream or archive: a forged
+    * header or a compression bomb must not take the task's memory. The
+    * PNG, GIF, JPEG, PDF and WARC decoders check against it. */
+  final val MaxDecodedBytes: Int = 64 << 20
+
   /** Header-level metadata: width/height for raster images (0 for PDF),
     * nPages for PDF (0 for images); sampleRate/channels/durationMs for
     * audio (WAV) and durationMs for video (MP4), 0 elsewhere. */
@@ -840,7 +845,7 @@ object MediaCodec {
         // guard the allocation BEFORE trusting header dims: a forged
         // 2^31-pixel header must not OOM the task
         val rawLen = pngRawLen(passes, w, h)
-        if (rawLen > (64L << 20)) return None // 64 MB decoded cap per image
+        if (rawLen > MaxDecodedBytes) return None
         // concatenate IDAT chunk bodies (PNG allows splitting anywhere)
         val z = new ByteArrayOutputStream(b.length)
         var i = 8
@@ -1056,13 +1061,14 @@ object MediaCodec {
             i += n
           }
           if (pal == null || w <= 0 || h <= 0) return None
-          if (w.toLong * h > (64L << 20)) return None // same cap as PNG
+          if (w.toLong * h > MaxDecodedBytes) return None
           if (i >= b.length) return None
           val minCode = b(i) & 0xff
           if (minCode < 1 || minCode > 11) return None
           i += 1
-          // concatenate the sub-blocked code stream
-          val z = new ByteArrayOutputStream(w * h / 2 + 64)
+          // concatenate the sub-blocked code stream: it cannot outgrow
+          // the bytes left in the file, whatever the header claims
+          val z = new ByteArrayOutputStream(b.length - i)
           while (i < b.length && b(i) != 0) {
             val k = b(i) & 0xff
             if (i + 1 + k > b.length) return None
@@ -1419,7 +1425,7 @@ object MediaCodec {
           val columns = readDictInt(b, dictStart, dictEnd, "/Columns ", 1)
           val earlyChange =
             indexOfAsciiIn(b, "/EarlyChange 0", dictStart, dictEnd) < 0
-          applyPdfFilters(streamBytes, filters, 64 << 20, earlyChange)
+          applyPdfFilters(streamBytes, filters, earlyChange)
             .flatMap(unpredict(_, predictor, colors, bpc, columns))
         }
         content.foreach { c => sawStream = true; tokenizeContent(c, out) }
@@ -1450,7 +1456,7 @@ object MediaCodec {
       val validKeyword = cursor == 0 || b(cursor - 1) != 'd' // not "endstream"
       if (validKeyword && dictStart >= 0 && dictEnd > dictStart) {
         val len = readDictLength(b, dictStart, dictEnd)
-        if (len >= 0 && bodyAt + len <= b.length && len <= (64 << 20)) {
+        if (len >= 0 && bodyAt + len <= b.length && len <= MaxDecodedBytes) {
           f(dictStart, dictEnd, java.util.Arrays.copyOfRange(b, bodyAt, bodyAt + len))
           searchFrom = bodyAt + len
         } else searchFrom = cursor + 6
@@ -1477,7 +1483,7 @@ object MediaCodec {
           if (filters.lastOption.contains("DCTDecode")) {
             val earlyChange =
               indexOfAsciiIn(b, "/EarlyChange 0", dictStart, dictEnd) < 0
-            applyPdfFilters(streamBytes, filters.dropRight(1), 64 << 20, earlyChange)
+            applyPdfFilters(streamBytes, filters.dropRight(1), earlyChange)
               .foreach(images += _)
           }
         }
@@ -1549,16 +1555,16 @@ object MediaCodec {
   /** Apply a /Filter decode cascade in array order (§7.4.1). Filters that
     * carry no text (DCT/JPX/CCITT/JBIG2 image codecs) or that we do not
     * implement skip the stream by returning None. */
-  private def applyPdfFilters(data: Array[Byte], filters: Seq[String], cap: Int,
+  private def applyPdfFilters(data: Array[Byte], filters: Seq[String],
                               earlyChange: Boolean): Option[Array[Byte]] =
     filters.foldLeft(Option(data)) { (acc, f) =>
       acc.flatMap { d =>
         f match {
-          case "FlateDecode" => Zlib.inflate(d, nowrap = false, cap)
-          case "LZWDecode" => Lzw.decode(d, Lzw.pdf(earlyChange), cap)
+          case "FlateDecode" => Zlib.inflate(d, nowrap = false, MaxDecodedBytes)
+          case "LZWDecode" => Lzw.decode(d, Lzw.pdf(earlyChange), MaxDecodedBytes)
           case "ASCIIHexDecode" => asciiHexDecode(d)
-          case "ASCII85Decode" => ascii85Decode(d, cap)
-          case "RunLengthDecode" => runLengthDecode(d, cap)
+          case "ASCII85Decode" => ascii85Decode(d, MaxDecodedBytes)
+          case "RunLengthDecode" => runLengthDecode(d, MaxDecodedBytes)
           case _ => None // image codecs / crypt / unknown: no text here
         }
       }

@@ -24,11 +24,6 @@ import java.util.zip.CRC32
   */
 object WarcCodec {
 
-  /** Decompressed-size cap per file (all members together) — bounds task
-    * memory against forged/hostile archives, same policy as MediaCodec's
-    * image cap. */
-  final val MaxDecompressedBytes: Long = 64L << 20
-
   // ------------------------------------------------------------------
   // gzip member codec (RFC 1952)
   // ------------------------------------------------------------------
@@ -71,7 +66,7 @@ object WarcCodec {
     * it. Handles the optional FEXTRA/FNAME/FCOMMENT/FHCRC header
     * fields other writers emit. */
   def gunzipMembers(bytes: Array[Byte],
-                    maxTotal: Long = MaxDecompressedBytes): Option[Vector[Array[Byte]]] = {
+                    maxTotal: Long = MediaCodec.MaxDecodedBytes): Option[Vector[Array[Byte]]] = {
     var pos = 0
     var total = 0L
     val members = Vector.newBuilder[Array[Byte]]
@@ -371,7 +366,7 @@ object WarcCodec {
     * deflate), with the raw-deflate fallback some of them actually emit
     * (a long-standing interop quirk). Bounded like the gzip walk. */
   def inflateDeflate(bytes: Array[Byte],
-                     maxTotal: Long = MaxDecompressedBytes): Option[Array[Byte]] =
+                     maxTotal: Long = MediaCodec.MaxDecodedBytes): Option[Array[Byte]] =
     Zlib.inflate(bytes, nowrap = false, maxTotal)
       .orElse(Zlib.inflate(bytes, nowrap = true, maxTotal))
 

@@ -66,24 +66,9 @@ object Sessionize {
 
     def fn(userId: Long, it: Iterator[Event], state: GroupState[(Long, SessState)])
         : Iterator[Session] = {
-      val out = scala.collection.mutable.ArrayBuffer[Session]()
-      var (idx, cur) = state.getOption.getOrElse((0L, null: SessState))
-      it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        val t = e.ts.getTime
-        val cents = math.round(e.value * 100)
-        if (cur == null) {
-          idx += 1
-          cur = SessState(t, t, 1, cents)
-        } else if (t - cur.lastMs > gapMs) {
-          out += Session(userId, idx, new Timestamp(cur.startMs), new Timestamp(cur.lastMs),
-            cur.n, cur.cents)
-          idx += 1
-          cur = SessState(t, t, 1, cents)
-        } else {
-          cur = SessState(cur.startMs, math.max(cur.lastMs, t), cur.n + 1, cur.cents + cents)
-        }
-      }
-      if (cur != null) state.update((idx, cur))
+      val (idx, open) = state.getOption.getOrElse((0L, null: SessState))
+      val (out, curIdx, cur) = SessionGap.numbered(userId, idx, open, it, gapMs)
+      if (cur != null) state.update((curIdx, cur))
       out.iterator
     }
 
@@ -119,29 +104,13 @@ object Sessionize {
         // counter tombstone: no open session (n=0), idx preserved; no new
         // timeout is armed, so the entry sits inert until the user returns
         state.update((idx, SessState(0L, 0L, 0L, 0L)))
-        Iterator.single(Session(userId, idx, new Timestamp(cur.startMs),
-          new Timestamp(cur.lastMs), cur.n, cur.cents))
+        Iterator.single(SessionGap.session(userId, idx, cur))
       } else {
-        val out = scala.collection.mutable.ArrayBuffer[Session]()
-        var (idx, cur0) = state.getOption.getOrElse((0L, null: SessState))
-        var cur = if (cur0 != null && cur0.n == 0) null else cur0 // tombstone -> closed
-        it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-          val t = e.ts.getTime
-          val cents = math.round(e.value * 100)
-          if (cur == null) {
-            idx += 1
-            cur = SessState(t, t, 1, cents)
-          } else if (t - cur.lastMs > gapMs) {
-            out += Session(userId, idx, new Timestamp(cur.startMs), new Timestamp(cur.lastMs),
-              cur.n, cur.cents)
-            idx += 1
-            cur = SessState(t, t, 1, cents)
-          } else {
-            cur = SessState(cur.startMs, math.max(cur.lastMs, t), cur.n + 1, cur.cents + cents)
-          }
-        }
+        val (idx, cur0) = state.getOption.getOrElse((0L, null: SessState))
+        val open = if (cur0 != null && cur0.n == 0) null else cur0 // tombstone -> closed
+        val (out, curIdx, cur) = SessionGap.numbered(userId, idx, open, it, gapMs)
         if (cur != null) {
-          state.update((idx, cur))
+          state.update((curIdx, cur))
           state.setTimeoutTimestamp(cur.lastMs + gapMs)
         }
         out.iterator
@@ -185,25 +154,12 @@ object Sessionize {
         state.remove() // the whole point: nothing lingers after the flush
         Iterator.single(close(cur))
       } else {
-        val out = scala.collection.mutable.ArrayBuffer[BoundedSession]()
-        var cur = state.getOption.orNull
-        it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-          val t = e.ts.getTime
-          val cents = math.round(e.value * 100)
-          if (cur == null) {
-            cur = SessState(t, t, 1, cents)
-          } else if (t - cur.lastMs > gapMs) {
-            out += close(cur)
-            cur = SessState(t, t, 1, cents)
-          } else {
-            cur = SessState(cur.startMs, math.max(cur.lastMs, t), cur.n + 1, cur.cents + cents)
-          }
-        }
+        val (closed, cur) = SessionGap.step(state.getOption.orNull, it, gapMs)
         if (cur != null) {
           state.update(cur)
           state.setTimeoutTimestamp(cur.lastMs + gapMs)
         }
-        out.iterator
+        closed.iterator.map(close)
       }
     }
 
@@ -231,4 +187,47 @@ object Sessionize {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("value_cents"))
       .select(col("w.start").as("h"), col("event_type"), col("n"), col("value_cents"))
+}
+
+/** The per-event session logic the streaming variants of `Sessionize`
+  * share. A top-level object, so the state functions that call it capture
+  * nothing: Spark serializes them into every task. */
+private[streaming] object SessionGap {
+  import Sessionize.{Event, SessState, Session}
+
+  /** The gap state machine: one group's events in `ts` order, each opening a session (none open), extending
+    * the open one, or — past the gap — closing it and opening the next.
+    * Returns the closed sessions in order and the one left open (null when
+    * `open` was null and there were no events). */
+  def step(open: SessState, events: Iterator[Event], gapMs: Long)
+      : (Seq[SessState], SessState) = {
+    val closed = Seq.newBuilder[SessState]
+    var cur = open
+    events.toSeq.sortBy(_.ts.getTime).foreach { e =>
+      val t = e.ts.getTime
+      val cents = math.round(e.value * 100)
+      if (cur != null && t - cur.lastMs <= gapMs)
+        cur = SessState(cur.startMs, math.max(cur.lastMs, t), cur.n + 1, cur.cents + cents)
+      else {
+        if (cur != null) closed += cur
+        cur = SessState(t, t, 1, cents)
+      }
+    }
+    (closed.result(), cur)
+  }
+
+  def session(userId: Long, idx: Long, s: SessState): Session =
+    Session(userId, idx, new Timestamp(s.startMs), new Timestamp(s.lastMs), s.n, s.cents)
+
+  /** `step` with counter identity: `idx` numbers `open`, or the user's last
+    * session when none is open, and each session opened after it takes the
+    * next number. Returns the closed sessions, the open one's number and
+    * the open one. */
+  def numbered(userId: Long, idx: Long, open: SessState, events: Iterator[Event],
+               gapMs: Long): (Seq[Session], Long, SessState) = {
+    val (closed, cur) = step(open, events, gapMs)
+    val first = if (open == null) idx + 1 else idx
+    val out = closed.zipWithIndex.map { case (s, k) => session(userId, first + k, s) }
+    (out, first + closed.length, cur)
+  }
 }

@@ -416,6 +416,23 @@ class MediaSpec extends AnyFunSuite {
     assert(MediaCodec.decodeGifPixels(gif.take(gif.length - 30)).isEmpty)
   }
 
+  test("GIF: forged 8192x8192 dims on a 4x4 file allocate by the file, not the header") {
+    val gif = MediaCodec.buildGifPixels(4, 4, testPalette, (r, c) => r * 4 + c)
+    def le16(at: Int, v: Int): Unit = { gif(at) = (v & 0xff).toByte; gif(at + 1) = (v >>> 8).toByte }
+    // logical screen (bytes 6..9) and the image descriptor after the GCT
+    val desc = 13 + 768
+    assert(gif(desc) == 0x2c)
+    Seq(6, 8, desc + 5, desc + 7).foreach(le16(_, 8192))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    MediaCodec.decodeGifPixels(gif) // warm: class loading is not the decode's
+    val before = mx.getCurrentThreadAllocatedBytes
+    val out = MediaCodec.decodeGifPixels(gif)
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(out.isEmpty)
+    assert(allocated < (1L << 20), s"${gif.length}-byte GIF allocated ${allocated / 1024} KiB")
+  }
+
   test("GIF LZW conformance: the JDK's ImageIO decodes our encoder's output") {
     // javax.imageio is an INDEPENDENT GIF implementation — if our
     // variable-width code schedule were self-consistent but wrong, this

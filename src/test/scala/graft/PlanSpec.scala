@@ -146,20 +146,31 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
-  test("url1/rb1/tx8: the fetch scalars are native expressions in the projection") {
-    // native Catalyst expressions (doGenCode static calls), not ScalaUDF —
-    // a UDF node would break the codegen span; the expression name in the
-    // Project proves the native path (the typed synth input keeps the
-    // pre-AQE plan string from printing the WholeStageCodegen wrapper)
-    val exprName = Map(
-      "url1_canonicalize" -> "urlcanonicalizeexpr",
-      "rb1_robots" -> "robotsallowedexpr",
-      "tx8_html_unescape" -> "htmlunescapeexpr")
-    for ((q, e) <- exprName) {
+  /** Each query's plan calls its kernel through Spark's StaticInvoke (a
+    * static call inside the codegen span) and holds no ScalaUDF, which
+    * would break the span; the kernel's name in the Project or Filter
+    * proves the native path (the typed synth input keeps the pre-AQE plan
+    * string from printing the WholeStageCodegen wrapper). */
+  private def assertStaticCalls(kernel: Map[String, String]): Unit =
+    for ((q, k) <- kernel) {
       val p = plan(q).toLowerCase
+      val e = s"static_invoke(graft.functions.${k.toLowerCase}("
       assert(!p.contains("scalaudf"), s"$q fell out of codegen: ${p.take(800)}")
       assert(p.contains(e), s"$q does not project the native expression: ${p.take(800)}")
     }
+
+  test("url1/rb1/tx8: the fetch scalars are native expressions in the projection") {
+    assertStaticCalls(Map(
+      "url1_canonicalize" -> "Urls.canonicalize",
+      "rb1_robots" -> "Robots.allowed",
+      "tx8_html_unescape" -> "HtmlText.unescape"))
+  }
+
+  test("tx4/dd2/ann4: the hashing and vector kernels are native expressions in the plan") {
+    assertStaticCalls(Map(
+      "tx4_fingerprint" -> "Hashing.fingerprint",
+      "dd2_minhash_lsh" -> "Hashing.minhash",
+      "ann4_ivf_topk" -> "VecOps.ivfCell"))
   }
 
   /** Executed plans of the `checkpoint` actions that building query `name`

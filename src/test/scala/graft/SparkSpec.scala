@@ -448,6 +448,34 @@ class SparkSpec extends AnyFunSuite {
     assert(r.getSeq[String](2) == op.errors && errs.isEmpty)
   }
 
+  test("graft_* SQL functions equal their Column functions, null row included") {
+    import graft.functions.{TextFunctions => T, WebFunctions => W}
+    graft.spark.SqlFunctions.register(spark)
+    val robots = "User-agent: *\nDisallow: /private\nAllow: /private/ok"
+    val df = Seq[(Int, String, String, String, String, String)](
+      (0, "the cat sat on &amp; the mat", "HTTP://WWW.Shop.CO.UK:80/a/../b?x=1#f", robots, "bot", "/private/x"),
+      (1, "der hund ist nicht mit der katze", "not a url", robots, "bot", "/private/ok"),
+      (2, null, null, null, null, null),
+      (3, "caf&eacute; &#233; &unknown;", "https://a.b.example.com:8443/x", robots, "bot", "/"))
+      .toDF("id", "s", "u", "robots", "agent", "path")
+    df.createOrReplaceTempView("graft_sql_rows")
+    val cases = Seq[(String, org.apache.spark.sql.Column)](
+      "graft_fingerprint64(s)" -> T.fingerprint64($"s"),
+      "graft_lang_id(s)" -> T.lang_id($"s"),
+      "graft_simhash64(s)" -> T.simhash64($"s"),
+      "graft_html_unescape(s)" -> W.html_unescape($"s"),
+      "graft_canonical_url(u)" -> W.canonical_url($"u"),
+      "graft_registered_domain(u)" -> W.registered_domain($"u"),
+      "graft_robots_allowed(robots, agent, path)" -> W.robots_allowed($"robots", $"agent", $"path"))
+    for ((call, c) <- cases) {
+      val bySql = spark.sql(s"SELECT $call FROM graft_sql_rows ORDER BY id")
+        .collect().map(_.get(0)).toSeq
+      val byColumn = df.orderBy("id").select(c).collect().map(_.get(0)).toSeq
+      assert(bySql == byColumn, call)
+      assert(bySql.map(_ == null) == Seq(false, false, true, false), s"$call: $bySql")
+    }
+  }
+
   test("tx1: language-ID heuristic on real-language samples") {
     import graft.functions.Hashing
     assert(Hashing.langId("the cat sat on the mat and it was happy") == "en")
